@@ -22,34 +22,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_MAINT_PROFILE: per-job wall times to stderr, for tuning the
-    // micro-job-dense maintenance gates (q177/q178) without guessing
-    if (sys.env.contains("GRAFT_MAINT_PROFILE"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          private val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            t0.put(j.jobId, System.nanoTime())
-            desc.put(j.jobId, Option(
-              j.properties.getProperty("spark.job.description"))
-              .filter(_.nonEmpty)
-              .orElse(j.stageInfos.lastOption.map(_.name))
-              .getOrElse("?"))
-          }
-          override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val dt = (System.nanoTime() - t0.getOrDefault(j.jobId, System.nanoTime())) / 1e6
-            Console.err.println(f"[jobprof] job=${j.jobId} ${dt}%.0f ms :: ${desc.getOrDefault(j.jobId, "?")}")
-          }
-          override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = e.stageInfo
-            val wall = (for (s <- si.submissionTime; c <- si.completionTime)
-              yield c - s).getOrElse(-1L)
-            if (wall >= 100) // only stages worth reading
-              Console.err.println(s"[stageprof] stage=${si.stageId} ${wall} ms tasks=${si.numTasks} :: ${si.name.take(60)}")
-          }
-        })
-
     def exec(name: String, dir: String): Unit =
       try SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
@@ -123,21 +95,6 @@ object Bench {
     // sf100 record), where a second pass doubles an hour-long run for
     // little extra signal; the default stays min-of-two
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    // GRAFT_STORAGE_PROBE: after each query's timed passes, dump the
-    // block-manager storage footprint (outside the timed region) — the
-    // round-17 anti-scaling investigation tool. Purely additive stderr.
-    val storageProbe = sys.env.contains("GRAFT_STORAGE_PROBE")
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    // /proc/stat cpu line: user nice system idle iowait irq softirq steal
-    def cpuTicks(): (Long, Long) = try {
-      val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
-        .split("\\s+").drop(1).map(_.toLong)
-      (l.take(8).sum, l(7)) // (total, steal)
-    } catch { case _: Throwable => (0L, 0L) }
     // INTERLEAVED passes (round 17): full sweep 1 over every query, then
     // full sweep 2 — NOT both passes back-to-back per query. Measured
     // motivation (OPTIMIZATION_r17.md "Inherited state"): this sandbox
@@ -151,20 +108,9 @@ object Bench {
     // Methodology is otherwise unchanged: same queries, same sf, same
     // noop sink, same warmup, same min-of-`passes` statistic.
     val samples = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    (1 to passes).foreach { pass =>
+    (1 to passes).foreach { _ =>
       names.foreach { name =>
-        val (gc0, (tot0, st0)) = (gcMs(), cpuTicks())
-        val t = timeOnce(name)
-        samples(name) = samples.getOrElse(name, Vector.empty) :+ t
-        if (storageProbe) {
-          val rdds = spark.sparkContext.getPersistentRDDs
-          val info = spark.sparkContext.getRDDStorageInfo
-          val mem = info.map(_.memSize).sum / 1e6
-          val (gc1, (tot1, st1)) = (gcMs(), cpuTicks())
-          val heap = java.lang.management.ManagementFactory.getMemoryMXBean
-            .getHeapMemoryUsage
-          Console.err.println(f"[storage] $name pass=$pass epoch=${System.currentTimeMillis / 1000} t=$t%.2f persistentRDDs=${rdds.size} mem=${mem}%.0fMB gcMs=${gc1 - gc0} stealTk=${st1 - st0} cpuTk=${tot1 - tot0} heapUsed=${heap.getUsed / 1e9}%.1fGB")
-        }
+        samples(name) = samples.getOrElse(name, Vector.empty) :+ timeOnce(name)
       }
     }
     val results = names.map { name =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps
+import graft.streaming.Artifacts
 
 /** Round-10 additions.
   *
@@ -151,29 +152,13 @@ object Round10Queries extends QueryPack {
     * contract after an append: probes see old ∪ new exactly as if the
     * index had been built from the union (same model ⇒ same rows).
     * Caller owns id-uniqueness across drops, as with any ingest loop.
-    *
-    * Re-add under a PREVIOUSLY-TOMBSTONED id (delete → re-ingest before
-    * the next purge): an unordered sidecar would hide the new row from
-    * [[readAnnIndex]] and the next purge would physically drop it. The
-    * append therefore makes pending deletes physical FIRST when the
-    * drop's ids intersect the sidecar ([[purgeAnnIndex]] retires the
-    * old rows and clears the tombstones), so the appended row lands
-    * with no tombstone outranking it. The intersection probe is a
-    * broadcast semi join of the |deletes|-sized sidecar against the
-    * drop; the disjoint (common) path stays O(|drop|). */
+    * A re-add under a still-tombstoned id purges first
+    * ([[graft.streaming.Artifacts.beforeAppend]]). */
   private[graft] def appendToAnnIndex(newRows: DataFrame, idxPath: String,
       cents: IndexedSeq[(Long, IndexedSeq[Double])],
       cb: IndexedSeq[IndexedSeq[Double]]): Unit = {
-    import org.apache.hadoop.fs.Path
     val s = newRows.sparkSession
-    val tomb = new Path(tombstonePath(idxPath))
-    val fs = tomb.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(tomb)) {
-      val overlap = s.read.parquet(tomb.toString).select(col("vec_id"))
-        .join(broadcast(newRows.select(col("vec_id").cast("long").as("vec_id"))),
-          Seq("vec_id"), "left_semi")
-      if (!overlap.isEmpty) purgeAnnIndex(s, idxPath)
-    }
+    Artifacts.beforeAppend(s, Artifacts.annidx(idxPath), newRows)(purgeAnnIndex(s, idxPath))
     annIndexRows(newRows, cents, cb).write.mode("append").parquet(idxPath)
   }
 
@@ -195,28 +180,16 @@ object Round10Queries extends QueryPack {
     *
     * Scale shape: the plan runs on the manifest listing (thousands of
     * rows at 100 TB, driver-sized like every compaction planner); each
-    * bin rewrite is a bounded distributed job over ~target bytes.
-    *
-    * CRASH SAFETY (round-16 verdict ask #8): the swap is a staged
-    * roll-forward commit. Bins are written to a sibling `_compact_tmp`
-    * dir (invisible to readers), then a `_plan` file — the commit
-    * point — records exactly which source files the swap retires;
-    * only then do the renames and deletes run. A crash BEFORE the
-    * plan leaves the index untouched (the next call aborts the orphan
-    * staging dir); a crash AFTER the plan is completed forward by
-    * [[repairCompact]] on the next entry — remaining staged bins
-    * rename in, remaining planned sources are deleted — so the
-    * artifact always converges to exactly-once row multiset (the
-    * crash-race spec kills at every boundary and pins probe
-    * equality). `failpoint` is the spec's kill switch; production
-    * callers leave the default no-op. */
+    * bin rewrite is a bounded distributed job over ~target bytes. The
+    * bins land through the crash-safe [[graft.streaming.Artifacts.swap]];
+    * `failpoint` is the crash-race spec's kill switch. */
   private[graft] def compactAnnIndex(s: SparkSession, idxPath: String,
       targetBytes: Long, failpoint: String => Unit = _ => ()): Int = {
     import org.apache.hadoop.fs.Path
+    val at = Artifacts.annidx(idxPath)
+    Artifacts.repair(s, at) // converge any crashed predecessor first
     val root = new Path(idxPath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    repairCompact(s, idxPath) // converge any crashed predecessor first
-    val small = fs.listStatus(root)
+    val small = root.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(root)
       .filter { f =>
         val n = f.getPath.getName
         f.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
@@ -227,143 +200,64 @@ object Round10Queries extends QueryPack {
     // q136 binning over the real manifest: prefix-sum DIV target
     var cum = 0L
     val binned = small.map { f => val b = (cum / targetBytes).toInt; cum += f.getLen; b -> f }
-    val tmp = new Path(idxPath + "_compact_tmp")
-    fs.delete(tmp, true)
     val bins = binned.groupBy(_._1).toSeq.sortBy(_._1)
     bins.foreach { case (bin, files) =>
       s.read.parquet(files.map(_._2.getPath.toString): _*)
         .coalesce(1)
-        .write.parquet(s"$tmp/bin=$bin")
+        .write.parquet(s"${at.staging}/compact-$bin")
     }
-    failpoint("staged")
-    // COMMIT POINT: the plan lists the sources this swap retires; its
-    // single-file create is the atomic boundary between "abort" (no
-    // plan: originals untouched, staging discarded) and "roll forward"
-    locally {
-      val out = fs.create(new Path(tmp, "_plan"), true)
-      try out.write(small.map(_.getPath.getName).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    failpoint("planned")
-    // swap: land the compacted files under fresh names, retire originals
-    bins.foreach { case (bin, _) =>
-      val part = fs.listStatus(new Path(s"$tmp/bin=$bin"))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      fs.rename(part, new Path(root, s"compact-$bin-${part.getName}"))
-      failpoint(s"renamed-$bin")
-    }
-    small.foreach { f =>
-      fs.delete(f.getPath, false)
-      failpoint(s"deleted-${f.getPath.getName}")
-    }
-    fs.delete(tmp, true)
+    Artifacts.swap(s, at, bins.map { case (bin, _) => s"compact-$bin" -> idxPath },
+      small.map(_.getPath.toString).toSeq, failpoint)
     bins.length
   }
 
-  /** Roll a crashed [[compactAnnIndex]] swap forward (or abort an
-    * uncommitted one): no `_plan` in the staging dir means the commit
-    * point was never reached — the originals are intact, so the orphan
-    * staging is simply discarded; a present `_plan` means the swap MUST
-    * complete — every staged bin still in the tmp dir renames in under
-    * the same deterministic name, every planned source still present is
-    * deleted, and the staging dir goes last. Idempotent: safe to call
-    * any number of times, at any crash point, including none. */
-  private[graft] def repairCompact(s: SparkSession, idxPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(idxPath)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new Path(idxPath + "_compact_tmp")
-    if (!fs.exists(tmp)) return
-    val plan = new Path(tmp, "_plan")
-    if (!fs.exists(plan)) { fs.delete(tmp, true); return } // pre-commit: abort
-    // roll forward: remaining staged bins in, planned sources out
-    fs.listStatus(tmp).filter(d => d.isDirectory && d.getPath.getName.startsWith("bin="))
-      .foreach { d =>
-        val bin = d.getPath.getName.stripPrefix("bin=")
-        fs.listStatus(d.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach(p => fs.rename(p, new Path(root, s"compact-$bin-${p.getName}")))
-      }
-    val in = fs.open(plan)
-    val planned = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-        .foreach(n => buf.write(chunk, 0, n))
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").filter(_.nonEmpty)
-    } finally in.close()
-    planned.foreach(n => fs.delete(new Path(root, n), false))
-    fs.delete(tmp, true)
-  }
-
-  /** Tombstone sidecar for [[annIndex]]-layout directories — the delete
-    * half of the index lifecycle (build → append → COMPACT/DELETE). A
-    * delete appends the retired ids to an id-narrow parquet sidecar in
-    * O(|delete|); nothing in the index itself is touched until a purge.
-    * On a cluster the sidecar is the delete-vector/tombstone table every
-    * lakehouse format keeps beside its data files. */
-  private def tombstonePath(idxPath: String): String = idxPath + ".tombstones"
-
-  /** Logical delete: O(|delete|) parquet append of the retired ids.
-    * Idempotent (re-deleting an id adds a redundant tombstone row that
-    * the anti-join and the purge both absorb). */
+  /** Logical delete: O(|delete|) append of the retired ids to the
+    * `<idx>.tombstones` sidecar ([[graft.streaming.Artifacts]]); nothing
+    * in the index is touched until [[purgeAnnIndex]]. */
   private[graft] def deleteFromAnnIndex(delIds: DataFrame, idxPath: String): Unit =
-    delIds.select(col("vec_id").cast("long"))
-      .write.mode("append").parquet(tombstonePath(idxPath))
+    Artifacts.appendTombstones(delIds.sparkSession, Artifacts.annidx(idxPath), delIds)
 
   /** The serve-time read of a delete-aware index: index rows minus the
-    * tombstone set. The sidecar is |deletes|-sized, so the anti-join
-    * broadcasts; every probe built on this reader sees EXACTLY the rows
-    * a from-scratch rebuild without the deleted vectors would hold
+    * tombstone set. Every probe built on this reader sees EXACTLY the
+    * rows a from-scratch rebuild without the deleted vectors would hold
     * (same model ⇒ same surviving rows — pinned in StreamingSpec). */
   private[graft] def readAnnIndex(s: SparkSession, idxPath: String): DataFrame = {
     val idx = s.read.parquet(idxPath)
-    val fs = new org.apache.hadoop.fs.Path(tombstonePath(idxPath))
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(tombstonePath(idxPath)))) idx
-    else idx.join(broadcast(s.read.parquet(tombstonePath(idxPath))
-      .select(col("vec_id")).distinct()), Seq("vec_id"), "left_anti")
+    Artifacts.tombstones(s, Artifacts.annidx(idxPath))
+      .fold(idx)(dels => idx.join(dels, Seq("vec_id"), "left_anti"))
   }
 
   /** Physical delete: rewrite ONLY the part files that still hold a
     * tombstoned row (found by a vec_id-pruned scan + broadcast semi
-    * join — the manifest-sized planning of [[compactAnnIndex]]), swap
-    * the survivors-only rewrites in, and clear the sidecar. Rewrite
-    * cost is proportional to the AFFECTED files, never the index;
-    * untouched files keep their bytes. Returns the number of files
-    * rewritten (0 = no tombstones, nothing to do — idempotent). */
-  private[graft] def purgeAnnIndex(s: SparkSession, idxPath: String): Int = {
+    * join — the manifest-sized planning of [[compactAnnIndex]]), then
+    * swap the survivors-only rewrite in and retire those files and the
+    * sidecar in one crash-safe [[graft.streaming.Artifacts.swap]].
+    * Rewrite cost is proportional to the AFFECTED files, never the
+    * index; untouched files keep their bytes. Returns the number of
+    * files rewritten (0 = no tombstones, nothing to do — idempotent). */
+  private[graft] def purgeAnnIndex(s: SparkSession, idxPath: String,
+      failpoint: String => Unit = _ => ()): Int = {
     import org.apache.hadoop.fs.Path
-    val tomb = new Path(tombstonePath(idxPath))
-    val fs = tomb.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tomb)) return 0
-    val dels = s.read.parquet(tomb.toString).select(col("vec_id")).distinct()
-    // vec_id-only scan: parquet pruning keeps this an 8-byte-per-row pass
-    val affected = s.read.parquet(idxPath)
-      .select(col("vec_id"), input_file_name().as("f"))
-      .join(broadcast(dels), Seq("vec_id"))
-      .select(col("f")).distinct()
-      .collect().map(_.getString(0)).sorted // manifest-sized, driver-planned
-    if (affected.nonEmpty) {
-      val tmp = new Path(idxPath + "_purge_tmp")
-      fs.delete(tmp, true)
-      s.read.parquet(affected: _*)
-        .join(broadcast(dels), Seq("vec_id"), "left_anti")
-        .coalesce(1)
-        .write.parquet(tmp.toString)
-      val part = fs.listStatus(tmp)
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      fs.rename(part, new Path(idxPath, s"purge-${part.getName}"))
-      // full-URI Path: getPath would strip scheme/authority and resolve
-      // the delete against the wrong filesystem root on object-store
-      // paths with an authority — correct-by-luck only on a local FS
-      affected.foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
-      fs.delete(tmp, true)
+    val at = Artifacts.annidx(idxPath)
+    Artifacts.repair(s, at)
+    Artifacts.tombstones(s, at).fold(0) { dels =>
+      // vec_id-only scan: parquet pruning keeps this an 8-byte-per-row
+      // pass; input_file_name is a URI string, hence the URI parse
+      val affected = s.read.parquet(idxPath)
+        .select(col("vec_id"), input_file_name().as("f"))
+        .join(dels, Seq("vec_id"))
+        .select(col("f")).distinct()
+        .collect().map(r => new Path(new java.net.URI(r.getString(0))).toString)
+        .sorted.toSeq // manifest-sized, driver-planned
+      if (affected.nonEmpty)
+        s.read.parquet(affected: _*)
+          .join(dels, Seq("vec_id"), "left_anti")
+          .coalesce(1)
+          .write.parquet(s"${at.staging}/purge")
+      Artifacts.swap(s, at, if (affected.isEmpty) Nil else Seq("purge" -> idxPath),
+        affected :+ at.sidecar, failpoint)
+      affected.length
     }
-    fs.delete(tomb, true)
-    affected.length
   }
 
   /** floor(cos·10⁴) through the native codegen expression. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps
+import graft.streaming.Artifacts
 
 /** Round-11/12 operators: corpus-wide kNN-graph construction — the
   * large-scale primitive behind semantic-dedup clustering that the
@@ -546,13 +547,10 @@ object Round11Queries extends QueryPack {
       .select(col("src"), col("nb"), col("sim"))
     val thr = s.read.parquet(s"$standing/thr").head().getLong(0)
     val c0 = s.read.parquet(s"$standing/c0")
-    Round14Queries.tlog("q177 standing read")
     val gNew = appendToKnnGraph(gOld, bOld, drop, KgK, KgUnd)
       .select(col("src"), col("nb"), col("sim")).localCheckpoint(false)
-    Round14Queries.tlog("q177 graph append done")
     val c1 = appendToClusters(c0, gNew, drop.select(col("vec_id")), thr)
       .localCheckpoint(false)
-    Round14Queries.tlog("q177 cluster fold done")
     // all three invariants ride ONE union job (per-action Catalyst
     // planning is the gate's dominant cost — measured, round 16): each
     // branch reduces to a single `bad` counter whose zero means the
@@ -589,7 +587,6 @@ object Round11Queries extends QueryPack {
       .select(lit("refine").as("inv"), col("bad"))
     val bads = covBad.unionByName(monBad).unionByName(refBad).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Round14Queries.tlog("q177 assertions done")
     val coverage = bads.get("coverage").contains(0L)
     val monotone = bads.get("monotone").contains(0L)
     val refined = bads.get("refine").contains(0L)
@@ -615,9 +612,10 @@ object Round11Queries extends QueryPack {
     * 24-byte edges, the bucket table n·tables (t, bk, id) rows; vectors
     * stay in the BASE table and are fetched by id at scoring time, so
     * the artifact never duplicates the corpus payload. The index
-    * lifecycle is [[knnGraphBuild]] (build) + [[appendToKnnGraph]]
-    * (ingest) + [[Round10Queries.compactAnnIndex]]'s binning rule
-    * (compaction) — q171 is the serve side of that same artifact. */
+    * lifecycle is [[knnGraphBuild]] (build) + [[appendToKnnGraphIndex]]
+    * (ingest) + [[deleteFromKnnGraphIndex]] + [[compactKnnGraphIndex]]
+    * (the shared [[graft.streaming.Artifacts]] protocol) — q171 is the
+    * serve side of that same artifact. */
   private[graft] def knnGraphIndex(s: SparkSession, d: String): String =
     // recipe version in the marker (round-15 ADVICE): descent params or
     // bucket caps changing rebuilds the serving graph automatically
@@ -785,22 +783,13 @@ object Round11Queries extends QueryPack {
     * edges (extra edges only widen expansion), and
     * [[compactKnnGraphIndex]] periodically restores the exact bounded
     * shape. Per-drop work: one probe of the persisted bucket lists +
-    * O(|drop|·cap) scored pairs — the nearDupProbe economics. */
+    * O(|drop|·cap) scored pairs — the nearDupProbe economics. A re-add
+    * under a still-tombstoned id compacts first
+    * ([[graft.streaming.Artifacts.beforeAppend]]). */
   def appendToKnnGraphIndex(s: SparkSession, idxPath: String,
                             b: DataFrame, drop: DataFrame): Unit = {
-    // Re-add under a previously-tombstoned id: the sidecar would hide
-    // the re-added node from every serve path and the next compaction
-    // would physically drop its fresh edges (the annidx3 appendToAnnIndex
-    // hazard, same fix): make the pending deletes physical FIRST via
-    // compaction when the drop's ids intersect the sidecar, so the
-    // append lands on an artifact with no tombstone outranking it.
-    val tomb = new org.apache.hadoop.fs.Path(s"$idxPath/tombstones")
-    val tfs = tomb.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (tfs.exists(tomb)) {
-      val overlap = s.read.parquet(tomb.toString).select(col("vec_id"))
-        .join(broadcast(drop.select(col("vec_id"))), Seq("vec_id"), "left_semi")
-      if (!overlap.isEmpty) compactKnnGraphIndex(s, idxPath)
-    }
+    Artifacts.beforeAppend(s, Artifacts.knngraph(idxPath), drop)(
+      compactKnnGraphIndex(s, idxPath))
     val memb = bucketMembership(drop)
     val dropLists = memb.select(col("t"), col("bk"), col("vec_id").as("nb"))
     // candidates = persisted lists ∪ this drop's own memberships (so
@@ -819,39 +808,21 @@ object Round11Queries extends QueryPack {
     dropLists.write.mode("append").parquet(s"$idxPath/buckets")
   }
 
-  /** Logical delete from the artifact: O(|delete|) tombstone append
-    * (the annidx3 sidecar pattern); [[readKnnGraphIndex]] hides the
-    * retired ids from every serve path and the next compaction makes
-    * it physical. */
+  /** Logical delete from the artifact: O(|delete|) append to the
+    * `<idx>/tombstones` sidecar ([[graft.streaming.Artifacts]]);
+    * [[readKnnGraphIndex]] hides the retired ids from every serve path
+    * and the next compaction makes it physical. */
   def deleteFromKnnGraphIndex(s: SparkSession, idxPath: String,
                               delIds: DataFrame): Unit =
-    delIds.select(col("vec_id").cast("long"))
-      .write.mode("append").parquet(s"$idxPath/tombstones")
+    Artifacts.appendTombstones(s, Artifacts.knngraph(idxPath), delIds)
 
   /** Delete-aware read of the artifact: (edges, bucket lists) minus the
-    * tombstone set — the sidecar is |deletes|-sized so both anti-joins
-    * broadcast; a plain artifact (no sidecar) reads as bare scans. */
+    * tombstone set (both anti-joins broadcast); a plain artifact reads
+    * as bare scans. */
   def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) = {
     val g = s.read.parquet(s"$idxPath/graph")
     val lists = s.read.parquet(s"$idxPath/buckets")
-    val tomb = new org.apache.hadoop.fs.Path(s"$idxPath/tombstones")
-    val fs = tomb.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // an EMPTY sidecar dir reads as "no deletes", same as a missing
-    // one: recursive dir deletion is not atomic, so a compaction that
-    // crashes (or is observed) between retiring the last tombstone
-    // file and removing the dir itself must not leave the artifact
-    // unreadable (schema inference over zero files throws). The
-    // exists→listStatus pair is itself a TOCTOU window (round-15
-    // ADVICE): a concurrent compaction can delete the dir between the
-    // two calls, so a vanished-dir listStatus also reads as "no
-    // sidecar" — race-free for ALL callers, not just retrying streams.
-    def hasFiles =
-      try fs.listStatus(tomb).exists(_.getPath.getName.endsWith(".parquet"))
-      catch { case _: java.io.FileNotFoundException => false }
-    if (!fs.exists(tomb) || !hasFiles) (g, lists)
-    else {
-      val del = broadcast(s.read.parquet(tomb.toString)
-        .select(col("vec_id")).distinct())
+    Artifacts.tombstones(s, Artifacts.knngraph(idxPath)).fold((g, lists)) { del =>
       (g.join(del.select(col("vec_id").as("src")), Seq("src"), "left_anti")
          .join(del.select(col("vec_id").as("nb")), Seq("nb"), "left_anti")
          .select(col("src"), col("nb"), col("sim")),
@@ -870,63 +841,42 @@ object Round11Queries extends QueryPack {
     * principle — the result is exactly the shape a fresh build
     * guarantees (whose recall floors are pinned); the lifecycle spec
     * pins that fixture probes keep their answers across the rewrite.
+    * The rewrite lands through [[graft.streaming.Artifacts.swap]], which
+    * retires the old parts and the sidecar after the new parts land.
     * Returns the number of graph part files the rewrite replaced
     * (0 = nothing to do — idempotent on a compact artifact). */
   def compactKnnGraphIndex(s: SparkSession, idxPath: String): Int = {
     import org.apache.hadoop.fs.Path
+    val at = Artifacts.knngraph(idxPath)
+    Artifacts.repair(s, at)
     val fs = new Path(idxPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    def parts(dir: String) = fs.listStatus(new Path(dir))
+    def parts(dir: String) = fs.listStatus(new Path(dir)).toSeq
       .map(_.getPath).filter(p => p.getName.endsWith(".parquet"))
-    def manifest(dir: String) = parts(dir).map(_.getName).sorted.mkString("\n")
+    val olds = parts(s"$idxPath/graph")
     // idempotence marker: the file set the LAST compaction left behind
     // (underscore-prefixed — parquet readers skip it); appends change
     // the set, deletes leave a sidecar — either reopens the work
     val marker = new Path(s"$idxPath/graph/_compact_manifest")
-    val hasTomb = fs.exists(new Path(s"$idxPath/tombstones"))
-    val current = manifest(s"$idxPath/graph")
-    if (!hasTomb && fs.exists(marker)) {
-      val in = fs.open(marker)
-      val last = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      in.close()
-      if (last == current) return 0
-    }
-    val before = parts(s"$idxPath/graph").length
+    def manifest(ps: Seq[Path]) = ps.map(_.getName).sorted.mkString("\n")
+    if (Artifacts.tombstones(s, at).isEmpty &&
+        Artifacts.readText(fs, marker).contains(manifest(olds))) return 0
+    val oldLists = parts(s"$idxPath/buckets")
     val (g, lists) = readKnnGraphIndex(s, idxPath)
     val wCap = org.apache.spark.sql.expressions.Window
       .partitionBy(col("t"), col("bk"))
       .orderBy(md5(col("nb").cast("string")), col("nb"))
-    val tmpG = s"$idxPath/graph_compact_tmp"
-    val tmpB = s"$idxPath/buckets_compact_tmp"
     topK(g.select(col("src"), col("nb"), col("sim")), KiK)
       .select(col("src"), col("nb"), col("sim"))
-      .repartition(8).write.parquet(tmpG)
+      .repartition(8).write.parquet(s"${at.staging}/compact-graph")
     lists.distinct()
       .withColumn("br", row_number().over(wCap)).filter(col("br") <= KgCap)
       .select(col("t"), col("bk"), col("nb"))
-      .repartition(4).write.parquet(tmpB)
-    // Swap in the compactAnnIndex/purgeAnnIndex order: land the
-    // compacted files INTO the live directory under fresh names, then
-    // retire the originals — never a point in time where the artifact
-    // directory is missing (a delete-then-rename swap would destroy the
-    // whole artifact on a crash between the calls, and fail a concurrent
-    // graphSearchStream micro-batch during the window). The transient
-    // old ∪ new state is a SUPERSET of the bounded shape — exactly what
-    // appends already produce and serving tolerates (extra edges only
-    // widen expansion; the sidecar still hides tombstoned ids until the
-    // originals are gone, and it is cleared only after).
-    for ((dir, tmp) <- Seq(s"$idxPath/graph" -> tmpG, s"$idxPath/buckets" -> tmpB)) {
-      val olds = parts(dir)
-      fs.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach(p => fs.rename(p, new Path(dir, s"compact-${p.getName}")))
-      olds.foreach(p => fs.delete(p, false))
-      fs.delete(new Path(tmp), true)
-    }
-    fs.delete(new Path(s"$idxPath/tombstones"), true)
-    val outM = fs.create(marker, true)
-    outM.write(manifest(s"$idxPath/graph").getBytes("UTF-8"))
-    outM.close()
-    before
+      .repartition(4).write.parquet(s"${at.staging}/compact-buckets")
+    Artifacts.swap(s, at,
+      Seq("compact-graph" -> s"$idxPath/graph", "compact-buckets" -> s"$idxPath/buckets"),
+      (olds ++ oldLists).map(_.toString) :+ at.sidecar)
+    Artifacts.writeText(fs, marker, manifest(parts(s"$idxPath/graph")))
+    olds.length
   }
 
   // q176: PQ-fused graph traversal (DiskANN) ----------------------------

@@ -15,14 +15,6 @@ import graft.streaming.Streaming
   */
 object Round14Queries extends QueryPack {
 
-  /** Phase timing for the two maintenance gates, printed to stderr when
-    * GRAFT_MAINT_PROFILE is set — the gates are the board's densest
-    * micro-job chains, and tuning them blind re-litigates the same
-    * guesses every round. Zero cost when unset. */
-  private[queries] def tlog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_MAINT_PROFILE"))
-      Console.err.println(f"[maintprof] ${System.nanoTime() / 1e9}%.3f $msg")
-
   // q178: the composed CDC ingest under the hash gate --------------------
 
   /** q178: EXECUTE the composed streaming ingest loop in-engine — two
@@ -127,23 +119,18 @@ object Round14Queries extends QueryPack {
             .select(col("vec_id"), col("label"), toD(col("embedding")).as("v")),
           col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("text"), col("label"), col("v"))
-      tlog("maint build start")
       val base = joined.filter(col("doc_id") < MaintSlice).localCheckpoint(true)
       base.repartition(1).write.parquet(s"$baseDir/base")
-      tlog("maint build: base slice written")
       Streaming.buildNearDupIndex(base.select(col("doc_id"), col("text")), 64)
         .sigs.repartition(1).write.parquet(s"$baseDir/sigs")
-      tlog("maint build: sigs written")
       val baseVecs = base.select(col("doc_id").as("vec_id"), col("v"))
       Round10Queries.annIndexRows(
           base.select(col("doc_id").as("vec_id"), col("label"), col("v")),
           LlmQueries.ivfCentroids(baseVecs), LlmQueries.pqCodebook(baseVecs))
         .repartition(1).write.parquet(s"$baseDir/annidx")
-      tlog("maint build: annidx written")
       Round11Queries.knnGraphBuild(baseVecs, 15, 30, rounds = 1)
         .select(col("src"), col("nb"), col("sim"))
         .repartition(1).write.parquet(s"$baseDir/g0")
-      tlog("maint build: g0 written")
       // the three fixture rows the CDC script quotes (two re-licensed
       // texts, three probe vectors) — collected per run as ONE tiny read
       joined.filter(col("doc_id").isin(5L, 7L, 450L))
@@ -155,12 +142,10 @@ object Round14Queries extends QueryPack {
         .knnGraphBuild(bOld, Round11Queries.KgK, Round11Queries.KgUnd, rounds = 1)
         .select(col("src"), col("nb"), col("sim")).localCheckpoint(false)
       gold.repartition(1).write.parquet(s"$baseDir/gold")
-      tlog("maint build: gold written")
       val thr = Round11Queries.clusterThreshold(gold)
       s.range(1).select(lit(thr).as("thr")).write.parquet(s"$baseDir/thr")
       Round11Queries.clusterMap(bOld.select(col("vec_id")), gold, thr)
         .repartition(1).write.parquet(s"$baseDir/c0")
-      tlog("maint build: c0 written")
     }
 
   def q178(s: SparkSession, d: String): DataFrame = {
@@ -222,7 +207,6 @@ object Round14Queries extends QueryPack {
   private def q178Gate(s: SparkSession, scratch: String,
                        idxPath: String): DataFrame = {
     import s.implicits._
-    tlog("q178 gate start")
     // private mutable copy of the annidx template (file-level copy, no
     // Spark job — the loop appends part files, writes tombstone
     // sidecars and physically rewrites it at purge/compact)
@@ -235,12 +219,10 @@ object Round14Queries extends QueryPack {
           java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
       }
     }
-    tlog("template copied")
     val base = s.read.parquet(s"$scratch/base")
     val baseVecs = base.select(col("doc_id").as("vec_id"), col("v"))
     val cents = LlmQueries.ivfCentroids(baseVecs)
     val cb = LlmQueries.pqCodebook(baseVecs)
-    tlog("model artifacts collected")
     val g0 = s.read.parquet(s"$scratch/g0").select(col("src"), col("nb"), col("sim"))
     val st = new Streaming.IngestState(
       Streaming.indexFromSigs(s.read.parquet(s"$scratch/sigs"), 64),
@@ -271,13 +253,9 @@ object Round14Queries extends QueryPack {
         verdicts(id) = v.select("doc_id", "kept").collect()
           .map(r => r.getLong(0) -> r.getInt(1)).toMap
       })
-    tlog("state initialized")
     mem.addData(d1: _*); q.processAllAvailable()
-    tlog("batch 1 done")
     mem.addData(d2: _*); q.processAllAvailable()
-    tlog("batch 2 done")
     q.stop()
-    tlog("stream stopped")
     val dupRejected = verdicts(0L).get(901L).contains(0) &&
       verdicts(0L).get(450L).contains(1)
     val readdAccepted = verdicts(1L).get(902L).contains(1)
@@ -300,7 +278,6 @@ object Round14Queries extends QueryPack {
     val deleteHidden = tagged.getOrElse("i", Set.empty) == surviving &&
       tagged.getOrElse("c", Set.empty) == surviving &&
       (tagged.getOrElse("g", Set.empty[Long]) & Set(5L, 450L)).isEmpty
-    tlog("tagged-union assertion done")
     // serving sees the CDC stream's outcome through BOTH retrievers: a
     // probe with the RETIRED doc's own vector answers its re-added
     // copy. Both retrievers' top-1 ride ONE union job — their subplans
@@ -322,13 +299,11 @@ object Round14Queries extends QueryPack {
     def top1Is902(r: Option[org.apache.spark.sql.Row]) =
       r.exists(x => x.getLong(1) == 902L && x.getLong(2) >= 9999L)
     val served = top1Is902(top1.get("a")) && top1Is902(top1.get("g"))
-    tlog("serving probes done")
     // the in-loop purge+compact after batch 2 made the deletes physical
     // (the raw read rode the tagged union above as tag "r")
     val purged = !new java.io.File(idxPath + ".tombstones").exists() &&
       tagged.getOrElse("r", Set.empty) == surviving &&
       Round10Queries.purgeAnnIndex(s, idxPath) == 0
-    tlog("purge assertion done")
     s.range(1).select(
       lit(if (dupRejected) 1 else 0).cast("int").as("dup_rejected"),
       lit(if (readdAccepted) 1 else 0).cast("int").as("readd_accepted"),

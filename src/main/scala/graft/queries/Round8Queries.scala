@@ -50,24 +50,10 @@ object Round8Queries extends QueryPack {
     val root = new org.apache.hadoop.fs.Path(base)
     val marker = new org.apache.hadoop.fs.Path(root, "_GRAFT_DONE")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val fresh =
-      try {
-        val in = fs.open(marker)
-        val got = try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          Iterator.continually(in.read(chunk)).takeWhile(_ >= 0)
-            .foreach(n => buf.write(chunk, 0, n))
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-        got == version
-      } catch { case _: java.io.IOException => false } // missing/vanished
-    if (!fresh) {
+    if (!graft.streaming.Artifacts.readText(fs, marker).contains(version)) {
       fs.delete(root, true)
       build(base)
-      val out = fs.create(marker, true)
-      try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      graft.streaming.Artifacts.writeText(fs, marker, version)
     }
     base
   }

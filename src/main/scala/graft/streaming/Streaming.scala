@@ -777,33 +777,9 @@ object Streaming {
             // receive a lazy plan that can still hit the swap window
             .localCheckpoint(true)
         }
-        // A concurrent compaction retires part files between this
-        // batch's directory listing and its tasks' reads, and clears
-        // the tombstone sidecar between the exists() probe and its
-        // read — the windows the land-then-retire swap cannot close
-        // (the artifact is always complete, but a PLAN can pin a file
-        // or a sidecar that is about to be superseded). A vanished
-        // file/path is a re-plan, not an error: retry re-lists the
-        // directory, which by the swap's ordering now names a complete
-        // pre- or post-compaction set. Surfaces as FileNotFound (task
-        // read) or as UNABLE_TO_INFER_SCHEMA / PATH_NOT_FOUND (planning
-        // over the vanished sidecar).
-        def isVanished(t: Throwable): Boolean =
-          t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-            (t match {
-              case st: org.apache.spark.SparkThrowable =>
-                Option(st.getCondition).exists(c =>
-                  c.startsWith("UNABLE_TO_INFER_SCHEMA") ||
-                  c.startsWith("PATH_NOT_FOUND") ||
-                  c.startsWith("FAILED_READ_FILE"))
-              case _ => false
-            }) ||
-            ((t.getCause ne t) && isVanished(t.getCause)))
-        def serve(attempts: Int): DataFrame =
-          try serveOnce()
-          catch { case t: Throwable if attempts > 1 && isVanished(t) =>
-            serve(attempts - 1) }
-        sink(serve(attempts = 3))
+        // a compaction swap can retire a file or the sidecar this
+        // batch's plan pinned: re-plan (Artifacts.retryVanished)
+        sink(Artifacts.retryVanished(attempts = 3)(serveOnce()))
       }
       .start()
 
@@ -881,9 +857,13 @@ object Streaming {
     * layers, [[graft.queries.Round11Queries.appendToHnsw]] folds the
     * same survivors into their promoted layers in the same pass).
     * Every `compactEvery`-th batch
-    * (5) folds the accumulated small-file tail back to ~`compactTarget`
-    * bytes ([[graft.queries.Round10Queries.compactAnnIndex]]), which
-    * cannot change any probe result (index rows are set-semantics).
+    * (5) makes the annidx3 deletes physical
+    * ([[graft.queries.Round10Queries.purgeAnnIndex]]) and folds the
+    * accumulated small-file tail back to ~`compactTarget` bytes
+    * ([[graft.queries.Round10Queries.compactAnnIndex]]), neither of
+    * which can change any probe result; both rewrites swap in through
+    * [[Artifacts.swap]], so a crash mid-rewrite is repaired by the next
+    * batch's first mutation.
     *
     * One pass per drop, shared ids throughout: a duplicate rejected by
     * the gate reaches NO downstream artifact, and a survivor reaches

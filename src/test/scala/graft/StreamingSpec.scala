@@ -1431,6 +1431,37 @@ class StreamingSpec extends SparkSpec {
     tombSaved.foreach { case (orig, _) => Files.delete(orig) }
     assert(search() == post,
       "post-window serve (with a crash-left empty sidecar dir) must equal the compacted answer")
+    // the same crash-left empty sidecar under every other delete-aware
+    // call: a knngraph append, and annidx3's read, append and purge —
+    // each must answer exactly as with no sidecar at all
+    Round11Queries.appendToKnnGraphIndex(spark, root, e,
+      e.filter(col("vec_id") >= 400 && col("vec_id") =!= 450L))
+    locally {
+      import graft.queries.{LlmQueries, Round10Queries}
+      val ev = Tables.embeddings(spark, sf("sf0.001"))
+        .select(col("vec_id"), col("label"),
+          transform(col("embedding"), _.cast("double")).as("v"))
+        .filter(col("vec_id") < 300)
+      val vecs = ev.select(col("vec_id"), col("v"))
+      val (cents, cb) = (LlmQueries.ivfCentroids(vecs), LlmQueries.pqCodebook(vecs))
+      val annDir = Files.createTempDirectory("graft_ann_empty_sidecar")
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).toSeq.sorted
+      val Seq(bare, crashed) = Seq("bare", "crashed").map { n =>
+        Round10Queries.annIndexRows(ev.filter(col("vec_id") < 200), cents, cb)
+          .write.parquet(s"$annDir/$n")
+        s"$annDir/$n"
+      }
+      Files.createDirectories(Paths.get(s"$crashed.tombstones"))
+      assert(rowsOf(Round10Queries.readAnnIndex(spark, crashed)) ==
+        rowsOf(spark.read.parquet(bare)), "read over an empty annidx sidecar")
+      Seq(bare, crashed).foreach(p => Round10Queries.appendToAnnIndex(
+        ev.filter(col("vec_id") >= 200), p, cents, cb))
+      assert(Round10Queries.purgeAnnIndex(spark, crashed) == 0,
+        "purge over an empty annidx sidecar has nothing to rewrite")
+      assert(rowsOf(Round10Queries.readAnnIndex(spark, crashed)) ==
+        rowsOf(spark.read.parquet(bare)), "append + purge over an empty annidx sidecar")
+    }
     Files.delete(tombSrc)
     // 2) LIVE RACE: micro-batches stream while a background thread runs
     //    append → compact cycles (each append reopens compaction work).
@@ -1487,45 +1518,58 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(p).collect()
         .map(_.toString).toSeq.sorted
     val before = rows(golden)
+    // purge runs through the same swap: a sidecar retiring every 7th id
+    // rides along in every copy (compaction leaves it alone)
+    Round10Queries.deleteFromAnnIndex(
+      e.filter(col("vec_id") % 7 === 0).select(col("vec_id")), golden)
+    val survivors = Round10Queries.readAnnIndex(spark, golden).collect()
+      .map(_.toString).toSeq.sorted
+    assert(survivors.nonEmpty && survivors.length < before.length)
     def copyTo(dst: String): Unit = {
       import scala.jdk.CollectionConverters._
-      val src = java.nio.file.Paths.get(golden)
-      val d = java.nio.file.Paths.get(dst)
-      java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
-        java.nio.file.Files.copy(p, d.resolve(src.relativize(p).toString))
+      for ((from, to) <- Seq(golden -> dst, s"$golden.tombstones" -> s"$dst.tombstones")) {
+        val src = java.nio.file.Paths.get(from)
+        val d = java.nio.file.Paths.get(to)
+        java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+          java.nio.file.Files.copy(p, d.resolve(src.relativize(p).toString))
+        }
       }
     }
-    // discover the failpoint labels with a recording (non-killing) run
-    val labels = scala.collection.mutable.ArrayBuffer[String]()
-    locally {
-      val probe = baseDir.toString + "/probe"
-      copyTo(probe)
-      val n = Round10Queries.compactAnnIndex(spark, probe, 1L << 20,
-        fp => labels += fp)
-      assert(n > 0 && rows(probe) == before,
-        "the uncrashed compaction must preserve the row multiset")
-    }
-    assert(labels.contains("staged") && labels.contains("planned") &&
-      labels.exists(_.startsWith("renamed-")) &&
-      labels.exists(_.startsWith("deleted-")), s"unexpected failpoints: $labels")
     final class Kill extends RuntimeException("kill")
-    labels.zipWithIndex.foreach { case (kill, i) =>
-      val dir = baseDir.toString + s"/crash$i"
-      copyTo(dir)
-      intercept[Kill] {
-        Round10Queries.compactAnnIndex(spark, dir, 1L << 20,
-          fp => if (fp == kill) throw new Kill)
+    // (operation, the row multiset it converges to)
+    val ops: Seq[(String, (String, String => Unit) => Int, Seq[String])] = Seq(
+      ("compact", (dir, fp) => Round10Queries.compactAnnIndex(spark, dir, 1L << 20, fp), before),
+      ("purge", (dir, fp) => Round10Queries.purgeAnnIndex(spark, dir, fp), survivors))
+    for ((op, run, after) <- ops) {
+      // discover the failpoint labels with a recording (non-killing) run
+      val labels = scala.collection.mutable.ArrayBuffer[String]()
+      locally {
+        val probe = baseDir.toString + s"/probe-$op"
+        copyTo(probe)
+        val n = run(probe, fp => labels += fp)
+        assert(n > 0 && rows(probe) == after,
+          s"the uncrashed $op must converge to its row multiset")
       }
-      // the artifact is never served mid-swap here (the loop runs the
-      // compaction between batches); what matters is convergence: the
-      // NEXT compaction entry repairs and completes
-      Round10Queries.compactAnnIndex(spark, dir, 1L << 20)
-      assert(rows(dir) == before,
-        s"rows diverged after kill at '$kill' + repair")
-      // and the staging dir is gone — repair left no debris
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir + "_compact_tmp")),
-        s"staging dir left behind after kill at '$kill'")
+      assert(labels.contains("staged") && labels.contains("planned") &&
+        labels.exists(_.startsWith("renamed-")) &&
+        labels.exists(_.startsWith("deleted-")), s"unexpected failpoints: $labels")
+      labels.zipWithIndex.foreach { case (kill, i) =>
+        val dir = baseDir.toString + s"/crash-$op-$i"
+        copyTo(dir)
+        intercept[Kill] {
+          run(dir, fp => if (fp == kill) throw new Kill)
+        }
+        // the artifact is never served mid-swap here (the loop runs the
+        // compaction between batches); what matters is convergence: the
+        // NEXT entry repairs and completes
+        run(dir, _ => ())
+        assert(rows(dir) == after,
+          s"rows diverged after $op kill at '$kill' + repair")
+        // and the staging dir is gone — repair left no debris
+        assert(!java.nio.file.Files.exists(
+          java.nio.file.Paths.get(dir + "_compact_tmp")),
+          s"staging dir left behind after $op kill at '$kill'")
+      }
     }
   }
 }
