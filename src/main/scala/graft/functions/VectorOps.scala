@@ -35,16 +35,19 @@ object VectorOps {
 
   /** [[cosineQ]] through the native codegen expression
     * (graft.expressions.CosineSimilarity), bit-identical but much
-    * faster — the HOF form is CodegenFallback. Needs
-    * GraftFunctions.ensure(spark) or GraftExtensions on the session. */
+    * faster — the HOF form is CodegenFallback. The one basis-point
+    * score every ANN path ranks by (also [[Retrieval.scoreById]]'s).
+    * Needs GraftFunctions.ensure(spark) or GraftExtensions on the
+    * session. */
   def cosineQNative(a: Column, b: Column): Column =
     floor(call_function("cosine_sim", a, b) * 10000)
 
   /** 32 sign bits of dims off+1..off+32 packed MSB-first into a long:
     * a sequential fold acc·2 + [x>0], so element off+1 carries weight
     * 2³¹. Two words cover a 64-dim vector without touching the BIGINT
-    * sign bit in either engine (the q163/q167 binary-quantization
-    * signature; oracle twin in Round10Queries.signWordSql). */
+    * sign bit in either engine (the binary-quantization signature
+    * [[Retrieval.hammingShortlist]] ranks; oracle twin in
+    * Round10Queries.signWordSql). */
   def signWord(v: Column, off: Int): Column =
     aggregate(slice(v, off + 1, 32), lit(0L),
       (acc, x) => acc * 2 + when(x > 0.0, lit(1L)).otherwise(lit(0L)))

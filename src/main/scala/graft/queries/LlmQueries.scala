@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
-import graft.functions.{TextOps, VectorOps}
+import graft.functions.{Retrieval, TextOps, VectorOps}
 
 /** Tier-L LLM-pipeline operators (SURVEY.md §2.11): deduplication,
   * near-dup detection, similarity search / ANN, kNN — over `documents`
@@ -530,14 +530,9 @@ object LlmQueries extends QueryPack {
     // (a |queries|-way parallelism ceiling AND a full sort of the
     // fanout); the heap keeps k rows per (task, q_id) and only
     // queries×k rows cross the shuffle — the q09 lesson applied to ANN
-    enc.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), floor(adist * 10000).cast("long").as("adist_q"))
-      .groupBy(col("q_id"))
-      .agg(call_function("collect_topk",
-        struct(col("adist_q"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), posexplode(col("t")).as(Seq("p", "s")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("s.vec_id").as("vec_id"), col("s.adist_q").as("adist_q"))
+    Retrieval.heapTopK(enc.join(broadcast(q), col("vec_id") =!= col("q_id")),
+        floor(adist * 10000).cast("long"), k)
+      .select(col("q_id"), col("rn"), col("vec_id"), col("hk").as("adist_q"))
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -633,16 +628,12 @@ object LlmQueries extends QueryPack {
     val cbLit = VectorOps.litArr2(cb)
     val adist = call_function("pq_adc_dist",
       col("qrv"), col("codes"), cbLit, lit(PqDs))
-    // bounded-heap top-k (the q09/q119 shape): only queries×k rows
-    // cross the shuffle, no window sort of the probed-cell fanout
-    enc.join(broadcast(qc), col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), floor(adist * 10000).cast("long").as("adist_q"))
-      .groupBy(col("q_id"))
-      .agg(call_function("collect_topk",
-        struct(col("adist_q"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), posexplode(col("t")).as(Seq("p", "s")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("s.vec_id").as("vec_id"), col("s.adist_q").as("adist_q"))
+    // bounded-heap top-k (q119's shape): only queries×k rows cross the
+    // shuffle, no window sort of the probed-cell fanout
+    Retrieval.heapTopK(
+        enc.join(broadcast(qc), col("cell") === col("qcell") && col("vec_id") =!= col("q_id")),
+        floor(adist * 10000).cast("long"), k)
+      .select(col("q_id"), col("rn"), col("vec_id"), col("hk").as("adist_q"))
       .orderBy(col("q_id"), col("rn"))
   }
 

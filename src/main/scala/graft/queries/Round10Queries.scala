@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{Retrieval, VectorOps}
 import graft.streaming.Artifacts
 
 /** Round-10 additions.
@@ -44,7 +44,8 @@ import graft.streaming.Artifacts
   */
 object Round10Queries extends QueryPack {
 
-  import VectorOps.{toD, cosineSql}
+  import VectorOps.{toD, cosineSql, cosineQNative}
+  import Retrieval.heapTopK
 
   // q161: ORC sink+source fidelity under the oracle -----------------------
 
@@ -140,7 +141,7 @@ object Round10Queries extends QueryPack {
       cb: IndexedSeq[IndexedSeq[Double]]): DataFrame =
     LlmQueries.ivfPqEncode(e, cents, cb)
       .select(col("vec_id"), col("label"),
-        signWord(col("v"), 0).as("lo"), signWord(col("v"), 32).as("hi"),
+        VectorOps.signWord(col("v"), 0).as("lo"), VectorOps.signWord(col("v"), 32).as("hi"),
         slice(col("v"), 1, MrlDims).as("prefix"),
         col("cell"), col("codes"),
         LlmQueries.pqCodesFor(col("v"), cb).as("rcodes"))
@@ -260,23 +261,6 @@ object Round10Queries extends QueryPack {
     }
   }
 
-  /** floor(cos·10⁴) through the native codegen expression. */
-  private def cosBp(a: Column, b: Column): Column =
-    floor(call_function("cosine_sim", a, b) * 10000).cast("long")
-
-  /** Bounded-heap top-k per q_id by (rank key asc, vec_id asc) — the
-    * q119 shape: only |queries|×k rows cross the shuffle, no window
-    * sort of the candidate fanout. `key` must already be "smaller is
-    * better" (negate sims). Returns (q_id, rn, vec_id, key). */
-  private[queries] def heapTopK(cand: DataFrame, key: Column, k: Int): DataFrame =
-    cand.select(col("q_id"), col("vec_id"), key.as("hk"))
-      .groupBy(col("q_id"))
-      .agg(call_function("collect_topk",
-        struct(col("hk"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), posexplode(col("t")).as(Seq("p", "s")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("s.vec_id").as("vec_id"), col("s.hk").as("hk"))
-
   /** DuckDB dot over elements xo+1..xo+n of x vs yo+1..yo+n of y —
     * the same sequential left fold as Spark's `aggregate` HOF. */
   private def odot(x: String, xo: Int, y: String, yo: Int, n: Int): String =
@@ -306,17 +290,14 @@ object Round10Queries extends QueryPack {
     val qp = idx.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("prefix").as("qp"))
     val cand = idx.join(broadcast(qp), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosBp(col("qp"), col("prefix")).as("psim"))
+      .select(col("q_id"), col("vec_id"), cosineQNative(col("qp"), col("prefix")).as("psim"))
     val short = heapTopK(cand, -col("psim"), MrlShort)
       .select(col("q_id"), col("vec_id"))
     // rerank: fetch shortlist vectors by id from the base table
     val e = corpus(s, d)
     val q = e.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val rer = e.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"), cosBp(col("qv"), col("v")).as("fsim"))
-    heapTopK(rer, -col("fsim"), MrlK)
+    heapTopK(Retrieval.scoreById(e, q, "fsim")(short), -col("fsim"), MrlK)
       .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
       .orderBy(col("q_id"), col("rn"))
   }
@@ -327,46 +308,34 @@ object Round10Queries extends QueryPack {
   private val HamK = 5
   private val HamQ = 8
 
-  /** See [[graft.functions.VectorOps.signWord]] (shared with the
-    * streaming ANN probe). */
-  private def signWord(v: Column, off: Int): Column =
-    VectorOps.signWord(v, off)
-
-  /** DuckDB twin of [[signWord]]: Σ [v[off+i]>0]·2^(32−i). */
+  /** DuckDB twin of [[graft.functions.VectorOps.signWord]]:
+    * Σ [v[off+i]>0]·2^(32−i). */
   private[queries] def signWordSql(v: String, off: Int): String =
     s"CAST(list_sum([CASE WHEN CAST($v[$off+i] AS DOUBLE) > 0 THEN (CAST(1 AS BIGINT) << (32-i)) ELSE 0 END for i in generate_series(1, 32)]) AS BIGINT)"
 
-  /** Candidate ranking is bit_count(xor) over the two packed words of
-    * the write-once [[annIndex]] layout — the stage-1 scan reads 8
-    * index bytes + the id per vector instead of the 256-byte embedding
-    * payload (PlanGuard-pinned), integer-exact, and at 100 TB the
-    * Hamming pass is the only full-corpus scan. Exact cosine reranks
-    * the 32-candidate shortlist fetched by id from the BASE table. */
+  /** The [[graft.functions.Retrieval.hammingRoute]] over the packed
+    * sign words of the write-once [[annIndex]] layout — the stage-1 scan
+    * reads 8 index bytes + the id per vector instead of the 256-byte
+    * embedding payload (PlanGuard-pinned), integer-exact, and at 100 TB
+    * the Hamming pass is the only full-corpus scan. Exact cosine reranks
+    * the 32-candidate shortlist fetched by id from the BASE table; ham
+    * rides along. */
   def q163(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
     val sg = s.read.parquet(annIndex(s, d)).select(col("vec_id"), col("lo"), col("hi"))
-    val qs = sg.filter(col("vec_id") < HamQ)
+    hammingServe(s, d, sg, sg, HamQ, HamShort, HamK)
+  }
+
+  /** q163's route for queries vec_id < `nq`: their sign words come from
+    * the `qIdx` index read, their full vectors from the base table. */
+  private def hammingServe(s: SparkSession, d: String, cands: DataFrame,
+      qIdx: DataFrame, nq: Int, shortlist: Int, k: Int): DataFrame = {
+    val qs = qIdx.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val cand = sg.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-         bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long").as("ham"))
-    val short = heapTopK(cand, col("ham"), HamShort)
-      .select(col("q_id"), col("vec_id"), col("hk").as("ham"))
     val e = corpus(s, d)
-    val q = e.filter(col("vec_id") < HamQ)
+    val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val rer = e.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"), col("ham"),
-        cosBp(col("qv"), col("v")).as("fsim"))
-    // final order: exact cosine desc, vec_id asc; ham rides along
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("fsim").desc, col("vec_id"))
-    rer.withColumn("rn", row_number().over(w))   // shortlist rows only: 8×32
-      .filter(col("rn") <= HamK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("ham"),
-        col("fsim").as("sim_q"))
+    Retrieval.hammingRoute(cands, qs, e, q, shortlist, k)
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -385,36 +354,16 @@ object Round10Queries extends QueryPack {
     * distance math (PlanGuard pins `EqualTo(label,3)` in the scan's
     * PushedFilters) — the pre-filtered shape, which unlike post-filter
     * rerank never returns fewer than k survivors when the category has
-    * them. Stage 1 Hamming-ranks the filtered candidates; exact cosine
-    * reranks the shortlist fetched by id from the base table. */
+    * them. q163's route runs over the filtered index: stage 1
+    * Hamming-ranks the label-3 candidates; exact cosine reranks the
+    * shortlist fetched by id from the base table. */
   def q167(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
     val idxPath = annIndex(s, d)
     val cands = s.read.parquet(idxPath)
       .filter(col("label") === FaLabel)
       .select(col("vec_id"), col("lo"), col("hi"))
-    val qs = s.read.parquet(idxPath).filter(col("vec_id") < FaQ)
-      .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val cand = cands.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-         bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long").as("ham"))
-    val short = heapTopK(cand, col("ham"), FaShort)
-      .select(col("q_id"), col("vec_id"), col("hk").as("ham"))
-    val e = corpus(s, d)
-    val q = e.filter(col("vec_id") < FaQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val rer = e.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"), col("ham"),
-        cosBp(col("qv"), col("v")).as("fsim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("fsim").desc, col("vec_id"))
-    rer.withColumn("rn", row_number().over(w))   // shortlist rows only
-      .filter(col("rn") <= FaK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("ham"),
-        col("fsim").as("sim_q"))
-      .orderBy(col("q_id"), col("rn"))
+    hammingServe(s, d, cands, s.read.parquet(idxPath), FaQ, FaShort, FaK)
   }
 
   // q164: late-interaction MaxSim (multi-vector scoring) -------------------
@@ -440,7 +389,7 @@ object Round10Queries extends QueryPack {
   private[graft] def maxSimColumns(qv: Column, v: Column): Column =
     (0 until MsM).map { i =>
       greatest((0 until MsM).map { j =>
-        cosBp(slice(qv, i * MsDs + 1, MsDs), slice(v, j * MsDs + 1, MsDs))
+        cosineQNative(slice(qv, i * MsDs + 1, MsDs), slice(v, j * MsDs + 1, MsDs))
       }: _*)
     }.reduce(_ + _)
 
@@ -478,7 +427,7 @@ object Round10Queries extends QueryPack {
       .select(col("vec_id").as("q_id"), col("label").as("q_label"), col("v").as("qv"))
     val cand = e.join(broadcast(q),
         col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-      .select(col("q_id"), col("vec_id"), cosBp(col("qv"), col("v")).as("sim"))
+      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim"))
     heapTopK(cand, -col("sim"), HnK)
       .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
       .orderBy(col("q_id"), col("rn"))

@@ -3,7 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorOps
+import graft.functions.{Retrieval, VectorOps}
+import graft.functions.Retrieval.topDistinct
+import graft.functions.VectorOps.{cosineQNative, toD}
 import graft.streaming.Artifacts
 
 /** Round-11/12 operators: corpus-wide kNN-graph construction — the
@@ -15,13 +17,6 @@ import graft.streaming.Artifacts
   * so DuckDB replays every round and the hash gate applies in full.
   */
 object Round11Queries extends QueryPack {
-
-  /** Float embedding → double array (one cast, shared by all stages). */
-  private def toD(c: Column): Column = transform(c, _.cast("double"))
-
-  /** floor(cos·10⁴) through the native codegen expression. */
-  private def cosBp(a: Column, b: Column): Column =
-    floor(call_function("cosine_sim", a, b) * 10000).cast("long")
 
   // q168: kNN graph (multi-table LSH seed + one NN-descent round) --------
 
@@ -76,7 +71,7 @@ object Round11Queries extends QueryPack {
     val seedCand = memb.select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
       .join(capped, Seq("t", "bk"))
       .filter(col("src") =!= col("nb"))
-      .select(col("src"), col("nb"), cosBp(col("v"), col("nv")).as("sim"))
+      .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
     topK(seedCand, kInt)
   }
 
@@ -116,7 +111,7 @@ object Round11Queries extends QueryPack {
       .join(b.select(col("vec_id").as("nb"), col("v").as("nv")), Seq("nb"))
     val composeS = u1.join(u2, Seq("mid"))
       .filter(col("nb") =!= col("src"))
-      .select(col("src"), col("nb"), cosBp(col("sv"), col("nv")).as("sim"))
+      .select(col("src"), col("nb"), cosineQNative(col("sv"), col("nv")).as("sim"))
     topK(undS.union(composeS), kInt)
   }
 
@@ -299,7 +294,7 @@ object Round11Queries extends QueryPack {
     * swapped keys (round 16): canonicalize each directed edge to
     * (lo, hi) and a pair is mutual iff BOTH directions arrive — count=2
     * (top-k lists are distinct per src, so no double-counting). The
-    * sim is direction-symmetric (one deterministic cosBp per vector
+    * sim is direction-symmetric (one deterministic bp cosine per vector
     * pair), so min(sim) ≡ either row's sim and the emitted (src, nb,
     * sim) rows are identical to the semi-join's src<nb half. Replaces
     * two sorted exchanges of the n·k edge list with one partial-agg
@@ -436,7 +431,7 @@ object Round11Queries extends QueryPack {
       .select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
     val dropE = membDrop.join(capped, Seq("t", "bk"))
       .filter(col("src") =!= col("nb"))
-      .select(col("src"), col("nb"), cosBp(col("v"), col("nv")).as("sim"))
+      .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
     val merged = g.select(col("src"), col("nb"), col("sim"))
       .union(dropE)
       .union(dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
@@ -633,18 +628,6 @@ object Round11Queries extends QueryPack {
         .write.parquet(s"$base/buckets")
     }
 
-  /** Bounded-heap top-`k` per q_id by (sim desc, vec_id asc) over
-    * (q_id, vec_id, sim) rows — the q119 serving shape: only
-    * |queries|·k rows cross the shuffle, no window sort of the
-    * candidate fanout. */
-  private def topQ(cand: DataFrame, k: Int): DataFrame =
-    cand.groupBy(col("q_id"))
-      .agg(call_function("collect_topk_distinct",
-        struct((-col("sim")).as("nsim"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), posexplode(col("t")).as(Seq("p", "e")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("e.vec_id").as("vec_id"), (-col("e.nsim")).as("sim"))
-
   /** q171: ANN queries SERVED from the converged kNN graph — greedy
     * beam search (the HNSW layer-0 idea, Malkov & Yashunin 2018, on the
     * flat converged graph): seed each query's frontier from its frozen-
@@ -666,7 +649,7 @@ object Round11Queries extends QueryPack {
     * ≥ 0.9 vs exact brute force is pinned in Round11Spec — above
     * q163's 32-deep Hamming shortlist on the same queries. */
   def q171(s: SparkSession, d: String): DataFrame =
-    topQ(flatGraphSearch(s, d)._1, GdK)
+    topDistinct(flatGraphSearch(s, d)._1, "sim", GdK)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
       .orderBy(col("q_id"), col("rn"))
 
@@ -691,47 +674,73 @@ object Round11Queries extends QueryPack {
 
   /** The flat beam search over whatever graph/bucket state the caller
     * holds — q171/q174 pass the write-once fixture artifact; the
-    * artifact-lifecycle spec passes a delete-aware read of a mutated
-    * copy. Returns (final beam, full scored set) — see
-    * [[flatGraphSearch]]. */
+    * artifact-lifecycle spec and the streaming serve path pass a
+    * delete-aware read. [[beamSearch]] scored by exact cosine
+    * ([[graft.functions.Retrieval.scoreById]]). Returns (final beam
+    * (q_id, vec_id, sim), full scored set) — see [[flatGraphSearch]]. */
   private[graft] def graphSearch(g: DataFrame, buckets: DataFrame,
                                  b: DataFrame, q: DataFrame,
                                  beam: Int = GdBeam): (DataFrame, DataFrame) = {
-    // entry candidates: the query's buckets in each LSH table, against
-    // the capped corpus bucket lists — |Q|·tables·cap id pairs
-    val qMemb = bucketMembership(
-        q.select(col("q_id").as("vec_id"), col("qv").as("v")))
+    val r = beamSearch(g, entryProbe(buckets, q), Retrieval.scoreById(b, q),
+      "sim", desc = true, beam)
+    (r.frontier, r.scored)
+  }
+
+  /** The entry probe of every graph search: each query's bucket in each
+    * LSH table ([[bucketMembership]] of qv), against the capped corpus
+    * bucket lists (t, bk, nb) — |Q|·tables·cap id pairs, self excluded.
+    * Returns (q_id, vec_id). */
+  private def entryProbe(buckets: DataFrame, q: DataFrame): DataFrame =
+    bucketMembership(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
       .select(col("vec_id").as("q_id"), col("t"), col("bk"))
-    val entry = qMemb.join(buckets.select(col("t"), col("bk"), col("nb")), Seq("t", "bk"))
+      .join(buckets.select(col("t"), col("bk"), col("nb")), Seq("t", "bk"))
       .filter(col("nb") =!= col("q_id"))
       .select(col("q_id"), col("nb").as("vec_id"))
-    def score(cand: DataFrame): DataFrame =
-      b.join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(q), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"), cosBp(col("qv"), col("v")).as("sim"))
-    // Per-hop lazy localCheckpoint (the q175/q173 loop pattern): frontier
-    // feeds BOTH the next expansion and the next union, and sc feeds BOTH
-    // the next frontier and the scored union, so the unrolled plan doubles
-    // per hop — ~2^hops copies of the entry probe and its base-table scans
-    // (measured: 122-Exchange / 106-parquet-scan plans). Truncating lineage
-    // at each hop keeps the plan constant-size and each hop computed once.
-    val s0 = score(entry).localCheckpoint(false)
-    var frontier = topQ(s0, beam)
-      .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
-    var scored = s0
-    for (_ <- 1 to GdHops) {
-      val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
+
+  /** One beam search: the final frontier (q_id, vec_id, score), every
+    * row the traversal scored (entry ∪ each hop's expansion), and the
+    * UNcheckpointed entry and first-hop plans — the PlanGuard hooks the
+    * per-hop checkpoints would otherwise truncate away. */
+  private case class Beam(frontier: DataFrame, scored: DataFrame,
+                          entry: DataFrame, hop1: DataFrame)
+
+  /** The beam loop shared by q171's exact and q176's ADC traversal:
+    * score the `entry` candidates, keep the best `beam` by `by` (desc
+    * for similarities, asc for distances, vec_id tiebreak), then
+    * [[GdHops]] hops — expand the frontier over the graph `g` (src, nb),
+    * drop self, score, merge into the distinct heap. Rescoring a
+    * frontier node yields the identical row, so the dedup heap absorbs
+    * it — no visited-set state needed.
+    *
+    * Per-hop lazy localCheckpoint (the q175/q173 loop pattern): frontier
+    * feeds BOTH the next expansion and the next union, and each hop's
+    * scored rows feed BOTH the next frontier and the scored union, so the
+    * unrolled plan doubles per hop — ~2^hops copies of the entry probe and
+    * its base-table scans (measured: 122-Exchange / 106-parquet-scan
+    * plans). Truncating lineage at each hop keeps the plan constant-size
+    * and each hop computed once. */
+  private def beamSearch(g: DataFrame, entry: DataFrame,
+                         score: DataFrame => DataFrame, by: String,
+                         desc: Boolean, beam: Int): Beam = {
+    def top(c: DataFrame): DataFrame = topDistinct(c, by, beam, desc)
+      .select(col("q_id"), col("vec_id"), col(by)).localCheckpoint(false)
+    def expand(f: DataFrame): DataFrame =
+      score(f.select(col("q_id"), col("vec_id").as("src"))
         .join(g.select(col("src"), col("nb")), Seq("src"))
         .filter(col("nb") =!= col("q_id"))
-        .select(col("q_id"), col("nb").as("vec_id"))
-      // rescoring a frontier node yields the identical row, so the
-      // dedup heap absorbs it — no visited-set state needed
-      val sc = score(expand).localCheckpoint(false)
-      frontier = topQ(frontier.unionByName(sc), beam)
-        .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
-      scored = scored.unionByName(sc)
+        .select(col("q_id"), col("nb").as("vec_id")))
+    def hop(f: DataFrame, scored: DataFrame, sc: DataFrame): (DataFrame, DataFrame) = {
+      val c = sc.localCheckpoint(false)
+      (top(f.unionByName(c)), scored.unionByName(c))
     }
-    (frontier, scored)
+    val s0 = score(entry)
+    val c0 = s0.localCheckpoint(false)
+    val f0 = top(c0)
+    val hop1 = expand(f0)
+    val (frontier, scored) = (2 to GdHops).foldLeft(hop(f0, c0, hop1)) {
+      case ((f, acc), _) => hop(f, acc, expand(f))
+    }
+    Beam(frontier, scored, s0, hop1)
   }
 
   // q174: attribute-filtered graph search -------------------------------
@@ -762,9 +771,9 @@ object Round11Queries extends QueryPack {
   def q174(s: SparkSession, d: String): DataFrame = {
     val scored = flatGraphSearch(s, d)._2
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    topQ(scored.join(labels, Seq("vec_id"))
+    topDistinct(scored.join(labels, Seq("vec_id"))
         .filter(col("label") === FgLabel)
-        .select(col("q_id"), col("vec_id"), col("sim")), GdK)
+        .select(col("q_id"), col("vec_id"), col("sim")), "sim", GdK)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
       .orderBy(col("q_id"), col("rn"))
   }
@@ -800,7 +809,7 @@ object Round11Queries extends QueryPack {
       .join(lists, Seq("t", "bk"))
       .filter(col("src") =!= col("nb"))
       .join(b.select(col("vec_id").as("nb"), col("v").as("nv")), Seq("nb"))
-      .select(col("src"), col("nb"), cosBp(col("v"), col("nv")).as("sim"))
+      .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
     val dropE = topK(cand, KiK).select(col("src"), col("nb"), col("sim"))
     dropE.unionByName(
         dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
@@ -887,15 +896,6 @@ object Round11Queries extends QueryPack {
                              // that noise (8 code bytes/row keeps it cheap)
   private val PfRerank = 60  // exact-rerank pool cut from the ADC beam
 
-  /** Bounded top-k DISTINCT per q_id by (ad ASC, vec_id) — the
-    * ascending twin of [[topQ]] for distance-ranked frontiers. */
-  private def topQA(cand: DataFrame, k: Int): DataFrame =
-    cand.groupBy(col("q_id"))
-      .agg(call_function("collect_topk_distinct",
-        struct(col("ad"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), explode(col("t")).as("e"))
-      .select(col("q_id"), col("e.vec_id").as("vec_id"), col("e.ad").as("ad"))
-
   /** q176: the DiskANN serving split (Subramanya et al. 2019) on the
     * existing artifacts — graph BUILT at full precision (the converged
     * q169 `knngraph`), traversal scored on PQ codes, exact vectors
@@ -923,16 +923,15 @@ object Round11Queries extends QueryPack {
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // full precision only here: |Q|·PfRerank by-id fetches
-    val pool = topQA(frontier, PfRerank).select(col("q_id"), col("vec_id"))
-    val rer = b.join(broadcast(pool), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"), cosBp(col("qv"), col("v")).as("sim"))
-    topQ(rer, GdK)
+    val pool = topDistinct(frontier, "ad", PfRerank, desc = false)
+      .select(col("q_id"), col("vec_id"))
+    topDistinct(Retrieval.scoreById(b, q)(pool), "sim", GdK)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** q176's ADC traversal: (final frontier, the ADC-scored entry probe,
+  /** q176's ADC traversal: [[beamSearch]] ranked by ascending ADC
+    * distance. Returns (final frontier, the ADC-scored entry probe,
     * hop 1's scored expansion). The second and third returns are the
     * PlanGuard hooks — per-hop lazy localCheckpoints truncate the hop
     * sub-plans out of the final plan, so the spec pins the column-pruned
@@ -961,28 +960,8 @@ object Round11Queries extends QueryPack {
           floor(call_function("pq_adc_dist",
             col("qv"), col("codes"), cbLit, lit(LlmQueries.PqDs)) * 10000)
             .cast("long").as("ad"))
-    val qMemb = bucketMembership(b.filter(col("vec_id") < GdQ))
-      .select(col("vec_id").as("q_id"), col("t"), col("bk"))
-    val entry = qMemb.join(buckets, Seq("t", "bk"))
-      .filter(col("nb") =!= col("q_id"))
-      .select(col("q_id"), col("nb").as("vec_id"))
-    // Per-hop lazy localCheckpoint (q175's loop pattern): frontier feeds
-    // both the expansion and the union, so the unrolled plan doubles per
-    // hop (measured: a 128-Exchange / 110-parquet-scan plan before).
-    val s0 = scoreAdc(entry)
-    var frontier = topQA(s0, PfBeam).localCheckpoint(false)
-    var hop1: DataFrame = null
-    for (h <- 1 to GdHops) {
-      val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
-        .join(g, Seq("src"))
-        .filter(col("nb") =!= col("q_id"))
-        .select(col("q_id"), col("nb").as("vec_id"))
-      val sc = scoreAdc(expand)
-      if (h == 1) hop1 = sc // uncheckpointed handle: the guard's hop plan
-      frontier = topQA(frontier.unionByName(sc), PfBeam)
-        .localCheckpoint(false)
-    }
-    (frontier, s0, hop1)
+    val r = beamSearch(g, entryProbe(buckets, q), scoreAdc, "ad", desc = false, PfBeam)
+    (r.frontier, r.entry, r.hop1)
   }
 
   // q175: MMR-diversified retrieval over the served beam ----------------
@@ -1032,7 +1011,7 @@ object Round11Queries extends QueryPack {
         .join(selected.select(col("q_id"), col("vec_id")), Seq("q_id", "vec_id"), "left_anti")
         .join(broadcast(selV), Seq("q_id"))
         .groupBy(col("q_id"), col("vec_id"), col("sim"))
-        .agg(max(cosBp(col("v"), col("sv"))).as("pen"))
+        .agg(max(cosineQNative(col("v"), col("sv"))).as("pen"))
       selected = selected.unionByName(pick1(
           pen.select(col("q_id"),
             (-(lit(MmrLam) * col("sim") - lit(MmrPen) * col("pen"))).as("nscore"),
@@ -1200,10 +1179,7 @@ object Round11Queries extends QueryPack {
     val entry = b.select(min(struct((-maxLvl(col("vec_id"))).as("nl"),
         md5(col("vec_id").cast("string")).as("m"), col("vec_id").as("vid"))).as("e"))
       .select(col("e.vid").as("vec_id"))
-    def score(cand: DataFrame): DataFrame =
-      b.join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(q), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"), cosBp(col("qv"), col("v")).as("sim"))
+    val score = Retrieval.scoreById(b, q) _
     // every round references the frontier TWICE (expansion + union), so
     // without lineage truncation the analyzer tree doubles per round —
     // 2^19 nodes over the 16+3 hops, minutes of driver-side analysis
@@ -1216,7 +1192,8 @@ object Round11Queries extends QueryPack {
     // tree is referenced twice by hop 2 and recomputes, and exchange
     // reuse doesn't reliably absorb it under AQE. Measured 7.3 s vs
     // 4.1 s at sf0.1; the per-hop checkpoint stays.)
-    var frontier = topQ(score(q.select(col("q_id")).crossJoin(broadcast(entry))), HnBeam)
+    var frontier = topDistinct(
+        score(q.select(col("q_id")).crossJoin(broadcast(entry))), "sim", HnBeam)
       .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
     for (l <- HnL to 1 by -1; _ <- 1 to HnHops) {
       // partition pruning: each hop reads exactly level l's files
@@ -1224,17 +1201,17 @@ object Round11Queries extends QueryPack {
       val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
         .join(gl, Seq("src"))
         .select(col("q_id"), col("nb").as("vec_id"))
-      frontier = topQ(frontier.unionByName(score(expand)), HnBeam)
+      frontier = topDistinct(frontier.unionByName(score(expand)), "sim", HnBeam)
         .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
     }
     for (_ <- 1 to GdHops) {
       val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
         .join(g0.select(col("src"), col("nb")), Seq("src"))
         .select(col("q_id"), col("nb").as("vec_id"))
-      frontier = topQ(frontier.unionByName(score(expand)), GdBeam)
+      frontier = topDistinct(frontier.unionByName(score(expand)), "sim", GdBeam)
         .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
     }
-    topQ(frontier.filter(col("vec_id") =!= col("q_id")), GdK)
+    topDistinct(frontier.filter(col("vec_id") =!= col("q_id")), "sim", GdK)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
   }
 

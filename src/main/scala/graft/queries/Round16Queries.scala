@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps.{cosineSql, toD}
+import graft.functions.Retrieval.{hammingShortlist, heapTopK, scoreById}
+import graft.functions.VectorOps.{cosineQNative, cosineSql, toD}
 
 /** Round-16 additions: retrieval-quality evaluation joins the ANN
   * family as a first-class pipeline pass — q183 grades a production
@@ -35,13 +36,14 @@ object Round16Queries extends QueryPack {
     NdW.zipWithIndex.map { case (w, i) => (if (i < 3) 3L else 2L) * w }.sum
 
   /** q183: NDCG@10 of the served retriever vs the exact ranking.
-    * System list = q163's serving route: Hamming-rank the packed sign
-    * words of the annidx3 layout (8 index bytes/vector, the only
-    * corpus-wide scan), exact-cosine-rerank the 32-candidate
-    * shortlist, keep the top-10. Relevance grades come from the EXACT
-    * cosine ranking: rank ≤ 3 → rel 3, ≤ 10 → rel 2, ≤ 30 → rel 1,
-    * else 0 — so the metric rewards putting the truly-nearest
-    * documents early, not just retrieving them somewhere.
+    * System list = the Hamming route's stage 1
+    * ([[graft.functions.Retrieval.hammingShortlist]] over the packed
+    * sign words of the annidx3 layout — 8 index bytes/vector, the only
+    * corpus-wide scan), then a heap exact-cosine rerank of the
+    * 32-candidate shortlist keeping the top-10. Relevance grades come
+    * from the EXACT cosine ranking: rank ≤ 3 → rel 3, ≤ 10 → rel 2,
+    * ≤ 30 → rel 1, else 0 — so the metric rewards putting the
+    * truly-nearest documents early, not just retrieving them somewhere.
     *
     * Scale shape: the SYSTEM side is the production serve path
     * (index-column scan + bounded heap + by-id rerank — nothing
@@ -58,29 +60,18 @@ object Round16Queries extends QueryPack {
       .select(col("vec_id"), col("lo"), col("hi"))
     val qs = sg.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val cand = sg.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-         bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long").as("ham"))
-    val short = Round10Queries.heapTopK(cand, col("ham"), NdShort)
-      .select(col("q_id"), col("vec_id"))
+    val short = hammingShortlist(sg, qs, NdShort).select(col("q_id"), col("vec_id"))
     val e = Round10Queries.corpus(s, d)
     val q = e.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    def bp(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      floor(call_function("cosine_sim", a, b) * 10000).cast("long")
     // system top-10: exact rerank of the shortlist (8×32 rows)
-    val sys = Round10Queries.heapTopK(
-        e.join(broadcast(short), Seq("vec_id"))
-          .join(broadcast(q), Seq("q_id"))
-          .select(col("q_id"), col("vec_id"), (-bp(col("qv"), col("v"))).as("nsim")),
-        col("nsim"), NdK)
+    val sys = heapTopK(scoreById(e, q)(short), -col("sim"), NdK)
       .select(col("q_id"), col("rn"), col("vec_id"))
     // exact top-30 per query: the graded-relevance ground truth
-    val exact = Round10Queries.heapTopK(
+    val exact = heapTopK(
         e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id"), (-bp(col("qv"), col("v"))).as("nsim")),
-        col("nsim"), 30)
+          .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim")),
+        -col("sim"), 30)
       .select(col("q_id"), col("vec_id"), col("rn").as("er"))
     val wLit = typedLit(NdW)
     sys.join(exact, Seq("q_id", "vec_id"), "left")

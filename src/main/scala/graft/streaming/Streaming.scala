@@ -683,11 +683,12 @@ object Streaming {
   // ---- streaming vector-search probe (round-10 retrievers × streams) ----
 
   /** Two-stage ANN probe of one query batch against the STATIC binary
-    * index + base vectors — q163's core shared by batch and stream:
-    * arriving query vectors compute their sign words in-batch, Hamming-
-    * rank the index (xor+popcount over 8 bytes/vector), and the
-    * per-query shortlist reranks by exact cosine against base vectors
-    * fetched by id. Returns `(q_id, rn, vec_id, sim_q)`, top-k per
+    * index + base vectors — the Hamming route q163 serves
+    * ([[graft.functions.Retrieval.hammingRoute]]): arriving query
+    * vectors compute their sign words in-batch, Hamming-rank the index
+    * (xor+popcount over 8 bytes/vector), and the per-query shortlist
+    * reranks by exact cosine against base vectors fetched by id.
+    * Returns `(q_id, rn, vec_id, sim_q)`, top-k per
     * query. No cross-batch state: a query's answer depends only on the
     * static corpus, so `foreachBatch` runs the exact batch plan
     * (broadcast of the small query side, heap shortlist) per drop — at
@@ -705,30 +706,12 @@ object Streaming {
     * (round-11 ADVICE). */
   def annProbe(index: DataFrame, base: DataFrame, queries: DataFrame,
                shortlist: Int, k: Int, excludeSelf: Boolean): DataFrame = {
-    import graft.functions.VectorOps
+    import graft.functions.{Retrieval, VectorOps}
     graft.GraftFunctions.ensure(index.sparkSession)
     val qs = queries.select(col("q_id"), col("qv"),
       VectorOps.signWord(col("qv"), 0).as("qlo"),
       VectorOps.signWord(col("qv"), 32).as("qhi"))
-    val cand = index.select(col("vec_id"), col("lo"), col("hi"))
-      .join(broadcast(qs.select(col("q_id"), col("qlo"), col("qhi"))),
-        if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-         bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long").as("ham"))
-      .groupBy(col("q_id"))
-      .agg(call_function("collect_topk",
-        struct(col("ham"), col("vec_id")), lit(shortlist), lit(true)).as("t"))
-      .select(col("q_id"), explode(col("t")).as("s"))
-      .select(col("q_id"), col("s.vec_id").as("vec_id"))
-    val rer = base.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(qs.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        floor(call_function("cosine_sim", col("qv"), col("v")) * 10000)
-          .cast("long").as("sim_q"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    rer.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    Retrieval.hammingRoute(index, qs, base, qs, shortlist, k, excludeSelf)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
   }
 
@@ -754,8 +737,9 @@ object Streaming {
     * `appendToKnnGraphIndex` find the new vectors and queries arriving
     * after a `deleteFromKnnGraphIndex` never see the retired ones
     * (spec-pinned across a mutation sequence). Per batch the work is
-    * the q171 serve shape — entry probe + beam·K by-id fetches — never
-    * a corpus scan. */
+    * q171's `graphSearch` — entry probe + beam·K by-id fetches, never a
+    * corpus scan — and its top-k through the shared bounded heap, so the
+    * rows equal q171's (spec-pinned). */
   def graphSearchStream(queries: DataFrame, idxPath: String, base: DataFrame,
                         k: Int, sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream
@@ -767,12 +751,8 @@ object Streaming {
           val (g, lists) = graft.queries.Round11Queries.readKnnGraphIndex(s, idxPath)
           val (frontier, _) = graft.queries.Round11Queries
             .graphSearch(g, lists, base, batch.toDF())
-          frontier.groupBy(col("q_id"))
-            .agg(call_function("collect_topk",
-              struct((-col("sim")).as("ns"), col("vec_id")), lit(k), lit(true)).as("t"))
-            .select(col("q_id"), posexplode(col("t")).as(Seq("p", "e")))
-            .select(col("q_id"), (col("p") + 1).as("rn"),
-              col("e.vec_id").as("vec_id"), (-col("e.ns")).as("sim_q"))
+          graft.functions.Retrieval.heapTopK(frontier, -col("sim"), k)
+            .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
             // materialize INSIDE the retry scope: the sink must never
             // receive a lazy plan that can still hit the swap window
             .localCheckpoint(true)

@@ -757,6 +757,21 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.map(r => (r.head, r(1).toString.toInt, r(2), r(3))) ==
       q163.map(r => (r.head, r(1).toString.toInt, r(2), r(3))),
       "streaming probe diverged from the oracle-checked q163 result")
+    // graph twin: the same two drops through the graph serve path over
+    // the write-once knngraph artifact ≡ the oracle-checked q171 rows
+    val graphIdx = graft.queries.Round11Queries.knnGraphIndex(spark, sf("sf0.001"))
+    val gMem = MemoryStream[(Long, Seq[Double])]
+    val gGot = scala.collection.mutable.ArrayBuffer[Seq[Any]]()
+    val gq = Streaming.graphSearchStream(gMem.toDF().toDF("q_id", "qv"), graphIdx, base,
+      k = 5, out => gGot.synchronized { gGot ++= out.collect().map(_.toSeq) })
+    gMem.addData(drop1.toSeq: _*); gq.processAllAvailable()
+    gMem.addData(drop2.toSeq: _*); gq.processAllAvailable()
+    gq.stop()
+    val q171 = SparkEntry.queries("q171_graph_ann")(spark, sf("sf0.001"))
+      .select("q_id", "rn", "vec_id", "sim_q")
+      .collect().map(_.toSeq).toSeq.sortBy(key)
+    assert(q171.nonEmpty && gGot.toSeq.sortBy(key) == q171,
+      "streaming graph search diverged from the oracle-checked q171 result")
     index.unpersist(); base.unpersist()
   }
 
