@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * the by-id exact scorer ([[VectorOps.cosineQNative]] over vectors
   * fetched by id), the bounded per-query heaps (plain and distinct) and
   * the Hamming two-stage route (sign-word shortlist, by-id rerank). The
-  * graph entry probe and beam loop live beside the knngraph artifact in
-  * [[graft.queries.Round11Queries]].
+  * graph searches are one operator, [[graft.plans.GraphWalk]], which
+  * [[graft.queries.Round11Queries]] calls with each search's scorer and
+  * layer schedule.
   *
   * Every rank is integer-keyed with a vec_id tiebreak, so each cut is
   * bit-deterministic and the DuckDB oracles replay it exactly. Inputs

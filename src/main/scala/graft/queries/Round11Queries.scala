@@ -6,6 +6,7 @@ import graft.Tables
 import graft.functions.{Retrieval, VectorOps}
 import graft.functions.Retrieval.topDistinct
 import graft.functions.VectorOps.{cosineQNative, toD}
+import graft.plans.{EdgeSet, GraphWalk, WalkStage}
 import graft.streaming.Artifacts
 
 /** Round-11/12 operators: corpus-wide kNN-graph construction — the
@@ -38,11 +39,17 @@ object Round11Queries extends QueryPack {
     * entry layer (buckets are deterministic functions of the vector, so
     * every consumer bucketizes identically). */
   private[graft] def bucketMembership(b: DataFrame): DataFrame =
-    b.select(col("vec_id"), col("v"),
-        explode(array((0 until KgTables).map(t =>
-          struct(lit(t).as("t"),
-            VectorOps.lshBucket(col("v"), KgBits, t * KgBits).as("bk"))): _*)).as("m"))
+    b.select(col("vec_id"), col("v"), explode(bucketsOf(col("v"))).as("m"))
       .select(col("vec_id"), col("v"), col("m.t").as("t"), col("m.bk").as("bk"))
+
+  /** A vector's (t, bk) in each of the [[KgTables]] tables. */
+  private def bucketsOf(v: Column): Column =
+    array((0 until KgTables).map(t =>
+      struct(lit(t).as("t"), VectorOps.lshBucket(v, KgBits, t * KgBits).as("bk"))): _*)
+
+  /** One BIGINT per (table, bucket): the graph walk's entry-list key. */
+  private def entryKey(t: Column, bk: Column): Column =
+    (t * lit(1 << KgBits) + bk).cast("long")
 
   /** Per-(table, bucket) candidate lists capped at [[KgCap]] in
     * (md5(id), id) order — the cap is what keeps candidate generation
@@ -306,11 +313,13 @@ object Round11Queries extends QueryPack {
     // duplicate directed edges (count==2 would mistake two copies of
     // a->b for mutuality). Same single partial-agg exchange — the two
     // int flags combine map-side like the count did.
-    gTop.groupBy(least(col("src"), col("nb")).as("src"),
-        greatest(col("src"), col("nb")).as("nb"))
+    // the edge ends are renamed (a, b) first, so the flags can only
+    // read the directed edge, never the grouping keys named src/nb
+    gTop.select(col("src").as("a"), col("nb").as("b"), col("sim"))
+      .groupBy(least(col("a"), col("b")).as("src"), greatest(col("a"), col("b")).as("nb"))
       .agg(min(col("sim")).as("sim"),
-        max(when(col("src") < col("nb"), 1).otherwise(0)).as("fwd"),
-        max(when(col("src") > col("nb"), 1).otherwise(0)).as("rev"))
+        max(when(col("a") < col("b"), 1).otherwise(0)).as("fwd"),
+        max(when(col("a") > col("b"), 1).otherwise(0)).as("rev"))
       .filter(col("fwd") === 1 && col("rev") === 1)
       .select(col("src"), col("nb"), col("sim"))
 
@@ -639,11 +648,10 @@ object Round11Queries extends QueryPack {
     * final order are bit-deterministic.
     *
     * Scale shape (the serve-time economics the brute/Hamming paths
-    * can't reach): per query per hop the work is ≤ beam·K id pairs —
-    * the corpus is touched only by (a) the entry probe against the
-    * PERSISTED bucket lists and (b) by-id vector fetches for scoring
-    * (broadcast of the ≤ |Q|·beam·K candidate ids onto the base scan;
-    * on a cluster, a point-lookup against the bucketed base table).
+    * can't reach): per query per hop the work is ≤ beam·K scored id
+    * pairs, and the whole search is ONE [[GraphWalk]] — the query rows
+    * stream, the graph, the bucket lists and the vectors arrive as
+    * broadcasts, and each task runs every hop of its queries in memory.
     * Nothing corpus-sized ever shuffles at serve time; the O(n) work
     * all lives in the write-once [[knnGraphIndex]] build. Recall@5
     * ≥ 0.9 vs exact brute force is pinned in Round11Spec — above
@@ -653,13 +661,11 @@ object Round11Queries extends QueryPack {
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
       .orderBy(col("q_id"), col("rn"))
 
-  /** q171's search loop, also returning the full SCORED set — every
-    * (q_id, vec_id, sim) the traversal ever evaluated (entry probe +
-    * all hop expansions). q171 emits the top-[[GdK]] of the final
-    * frontier and never evaluates the scored union (lazy plans — its
-    * physical plan is unchanged); q174 post-filters the scored set by
-    * attribute. The scored plans are SHARED between the two returns,
-    * so evaluating both costs one traversal. */
+  /** q171's search, also returning the full SCORED multiset — every
+    * (q_id, vec_id, sim) the traversal evaluated (entry probe + all hop
+    * expansions). q171 emits the top-[[GdK]] of the final frontier and
+    * never evaluates the scored walk (lazy plans); q174 post-filters the
+    * scored set by attribute and never evaluates the frontier walk. */
   private def flatGraphSearch(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.GraftFunctions.ensure(s)
     val idx = knnGraphIndex(s, d)
@@ -675,73 +681,41 @@ object Round11Queries extends QueryPack {
   /** The flat beam search over whatever graph/bucket state the caller
     * holds — q171/q174 pass the write-once fixture artifact; the
     * artifact-lifecycle spec and the streaming serve path pass a
-    * delete-aware read. [[beamSearch]] scored by exact cosine
-    * ([[graft.functions.Retrieval.scoreById]]). Returns (final beam
-    * (q_id, vec_id, sim), full scored set) — see [[flatGraphSearch]]. */
+    * delete-aware read. One [[flatWalk]] scored by exact cosine
+    * ([[VectorOps.cosineQNative]] of qv against the corpus v). Returns
+    * (final beam (q_id, vec_id, sim), full scored multiset) — two walks
+    * over the same inputs, each computed only when its frame runs (see
+    * [[flatGraphSearch]]). */
   private[graft] def graphSearch(g: DataFrame, buckets: DataFrame,
                                  b: DataFrame, q: DataFrame,
                                  beam: Int = GdBeam): (DataFrame, DataFrame) = {
-    val r = beamSearch(g, entryProbe(buckets, q), Retrieval.scoreById(b, q),
-      "sim", desc = true, beam)
-    (r.frontier, r.scored)
+    def walk(emitScored: Boolean): DataFrame =
+      flatWalk(g, buckets, b.select(col("vec_id"), col("v")), q,
+        cosineQNative(col("qv"), col("v")), "sim", desc = true, beam, emitScored)
+    (walk(emitScored = false), walk(emitScored = true))
   }
 
-  /** The entry probe of every graph search: each query's bucket in each
-    * LSH table ([[bucketMembership]] of qv), against the capped corpus
-    * bucket lists (t, bk, nb) — |Q|·tables·cap id pairs, self excluded.
-    * Returns (q_id, vec_id). */
-  private def entryProbe(buckets: DataFrame, q: DataFrame): DataFrame =
-    bucketMembership(q.select(col("q_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("q_id"), col("t"), col("bk"))
-      .join(buckets.select(col("t"), col("bk"), col("nb")), Seq("t", "bk"))
-      .filter(col("nb") =!= col("q_id"))
-      .select(col("q_id"), col("nb").as("vec_id"))
-
-  /** One beam search: the final frontier (q_id, vec_id, score), every
-    * row the traversal scored (entry ∪ each hop's expansion), and the
-    * UNcheckpointed entry and first-hop plans — the PlanGuard hooks the
-    * per-hop checkpoints would otherwise truncate away. */
-  private case class Beam(frontier: DataFrame, scored: DataFrame,
-                          entry: DataFrame, hop1: DataFrame)
-
-  /** The beam loop shared by q171's exact and q176's ADC traversal:
-    * score the `entry` candidates, keep the best `beam` by `by` (desc
-    * for similarities, asc for distances, vec_id tiebreak), then
-    * [[GdHops]] hops — expand the frontier over the graph `g` (src, nb),
-    * drop self, score, merge into the distinct heap. Rescoring a
-    * frontier node yields the identical row, so the dedup heap absorbs
-    * it — no visited-set state needed.
-    *
-    * Per-hop lazy localCheckpoint (the q175/q173 loop pattern): frontier
-    * feeds BOTH the next expansion and the next union, and each hop's
-    * scored rows feed BOTH the next frontier and the scored union, so the
-    * unrolled plan doubles per hop — ~2^hops copies of the entry probe and
-    * its base-table scans (measured: 122-Exchange / 106-parquet-scan
-    * plans). Truncating lineage at each hop keeps the plan constant-size
-    * and each hop computed once. */
-  private def beamSearch(g: DataFrame, entry: DataFrame,
-                         score: DataFrame => DataFrame, by: String,
-                         desc: Boolean, beam: Int): Beam = {
-    def top(c: DataFrame): DataFrame = topDistinct(c, by, beam, desc)
-      .select(col("q_id"), col("vec_id"), col(by)).localCheckpoint(false)
-    def expand(f: DataFrame): DataFrame =
-      score(f.select(col("q_id"), col("vec_id").as("src"))
-        .join(g.select(col("src"), col("nb")), Seq("src"))
-        .filter(col("nb") =!= col("q_id"))
-        .select(col("q_id"), col("nb").as("vec_id")))
-    def hop(f: DataFrame, scored: DataFrame, sc: DataFrame): (DataFrame, DataFrame) = {
-      val c = sc.localCheckpoint(false)
-      (top(f.unionByName(c)), scored.unionByName(c))
-    }
-    val s0 = score(entry)
-    val c0 = s0.localCheckpoint(false)
-    val f0 = top(c0)
-    val hop1 = expand(f0)
-    val (frontier, scored) = (2 to GdHops).foldLeft(hop(f0, c0, hop1)) {
-      case ((f, acc), _) => hop(f, acc, expand(f))
-    }
-    Beam(frontier, scored, s0, hop1)
-  }
+  /** The flat graph search of q171/q174/q176 as one [[GraphWalk]]:
+    * entry from the capped bucket lists (t, bk, nb) by each query's
+    * bucket in every LSH table ([[bucketsOf]] of qv — the membership
+    * expression the lists were built with), then [[GdHops]] hops over
+    * the graph `g` (src, nb); self dropped at entry and on every hop,
+    * the best `beam` kept by `score` (desc for similarities, asc for
+    * distances, vec_id tiebreak). Rescoring a frontier node yields the
+    * identical row, so the distinct heap absorbs it — no visited set.
+    * `vectors` is (vec_id, the scorer's columns), `q` (q_id, qv).
+    * Returns (q_id, vec_id, `name`). */
+  private def flatWalk(g: DataFrame, buckets: DataFrame, vectors: DataFrame,
+                       q: DataFrame, score: Column, name: String, desc: Boolean,
+                       beam: Int, emitScored: Boolean): DataFrame =
+    GraphWalk.walk(
+      q.select(col("q_id"), col("qv"),
+        transform(bucketsOf(col("qv")), m => entryKey(m("t"), m("bk"))).as("keys")),
+      g, buckets.select(entryKey(col("t"), col("bk")).as("key"), col("nb")),
+      vectors, None, score, name, desc,
+      Seq(WalkStage(EdgeSet.Entry, beam, 1, dropSelf = true),
+        WalkStage(EdgeSet.Graph, beam, GdHops, dropSelf = true)),
+      emitScored)
 
   // q174: attribute-filtered graph search -------------------------------
 
@@ -905,10 +879,10 @@ object Round11Queries extends QueryPack {
     * the final top-[[PfRerank]] by ADC is reranked with exact cosine
     * and the top-[[GdK]] emitted.
     *
-    * Why this matters at 100 TB: q171's hops fetch the 256-byte float
-    * payload for every scored candidate; here the traversal's by-id
-    * fetches read 8 CODE bytes per row from the column-pruned index
-    * scan (PlanGuard pins `embedding` out and `rcodes` in), and the
+    * Why this matters at 100 TB: q171's walk holds the 256-byte float
+    * payload of every vector it may score; here the walk's vectors
+    * child is 8 CODE bytes per row from the column-pruned index scan
+    * (Round11Spec pins `embedding` out and `rcodes` in), and the
     * full-precision table is touched for only |Q|·[[PfRerank]] rows at
     * the end — DiskANN's memory/disk split, with the codebook a
     * bounded driver literal (the frozen model artifact every consumer
@@ -917,7 +891,7 @@ object Round11Queries extends QueryPack {
     * documents how much). Deterministic: integer-quantized distances,
     * id tiebreaks, fixed hops — DuckDB replays the whole search. */
   def q176(s: SparkSession, d: String): DataFrame = {
-    val (frontier, _, _) = pqSearch(s, d)
+    val frontier = pqSearch(s, d)
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), toD(col("embedding")).as("v"))
     val q = b.filter(col("vec_id") < GdQ)
@@ -930,39 +904,34 @@ object Round11Queries extends QueryPack {
       .orderBy(col("q_id"), col("rn"))
   }
 
-  /** q176's ADC traversal: [[beamSearch]] ranked by ascending ADC
-    * distance. Returns (final frontier, the ADC-scored entry probe,
-    * hop 1's scored expansion). The second and third returns are the
-    * PlanGuard hooks — per-hop lazy localCheckpoints truncate the hop
-    * sub-plans out of the final plan, so the spec pins the column-pruned
-    * rcodes scan (8 code bytes, never the float payload) on BOTH the
-    * entry plan and a real in-loop hop plan (round-16 ADVICE: entry
-    * alone relied on the hops sharing scoreAdc by construction; the hop
-    * hook catches a future edit that widens the in-loop read). */
-  private[graft] def pqSearch(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** q176's ADC traversal over the fixture artifacts: the q171
+    * queries against the knngraph, scored on annidx3's `rcodes` with the
+    * corpus codebook. Returns the final frontier (q_id, vec_id, ad);
+    * its [[GraphWalk]] codes child is the column-pruned rcodes scan
+    * (PlanGuard in Round11Spec: never `embedding`, never `prefix`). */
+  private[graft] def pqSearch(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
     val idx = knnGraphIndex(s, d)
-    val g = s.read.parquet(s"$idx/graph").select(col("src"), col("nb"))
-    val buckets = s.read.parquet(s"$idx/buckets")
-    val enc = s.read.parquet(Round10Queries.annIndex(s, d))
+    val codes = s.read.parquet(Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), toD(col("embedding")).as("v"))
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val cb = LlmQueries.pqCodebook(b)
-    val cbLit = VectorOps.litArr2(cb)
-    def scoreAdc(cand: DataFrame): DataFrame =
-      enc.join(broadcast(cand), Seq("vec_id"))
-        .join(broadcast(q), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          floor(call_function("pq_adc_dist",
-            col("qv"), col("codes"), cbLit, lit(LlmQueries.PqDs)) * 10000)
-            .cast("long").as("ad"))
-    val r = beamSearch(g, entryProbe(buckets, q), scoreAdc, "ad", desc = false, PfBeam)
-    (r.frontier, r.entry, r.hop1)
+    pqSearch(s.read.parquet(s"$idx/graph"), s.read.parquet(s"$idx/buckets"),
+      codes, q, LlmQueries.pqCodebook(b))
   }
+
+  /** The ADC traversal itself: [[flatWalk]] over the graph `g` and
+    * bucket lists, ranked by ascending floor(adc·10⁴) of qv against the
+    * PQ `codes` (vec_id, codes) under codebook `cb`, beam [[PfBeam]].
+    * Returns the final frontier (q_id, vec_id, ad). */
+  private[graft] def pqSearch(g: DataFrame, buckets: DataFrame, codes: DataFrame,
+                              q: DataFrame, cb: Seq[Seq[Double]]): DataFrame =
+    flatWalk(g, buckets, codes.select(col("vec_id"), col("codes")), q,
+      floor(call_function("pq_adc_dist", col("qv"), col("codes"),
+        VectorOps.litArr2(cb), lit(LlmQueries.PqDs)) * 10000).cast("long"),
+      "ad", desc = false, PfBeam, emitScored = false)
 
   // q175: MMR-diversified retrieval over the served beam ----------------
 
@@ -1144,25 +1113,15 @@ object Round11Queries extends QueryPack {
     graft.GraftFunctions.ensure(s)
     val idx0 = knnGraphIndex(s, d)
     val idxH = hnswIndex(s, d)
-    val g0 = s.read.parquet(s"$idx0/graph").select(col("src"), col("nb"))
+    val g0 = s.read.parquet(s"$idx0/graph")
     val layers = s.read.parquet(s"$idxH/layers")
-    // The serve loop's by-id vector fetches scan the corpus once PER
-    // HOP through score(): at sf100 that was 19 full decodes of the 2M
-    // float payload — the entire 37 s serve floor (the flat q171 pays
-    // 4 scans for its 5.5 s). A serving tier keeps the vector table
-    // RESIDENT (HNSW's in-RAM vectors / DiskANN's mmap), so the bench
-    // shape is: persist the narrow (vec_id, v) projection, drive the
-    // whole search to completion while it is live (eager checkpoint of
-    // the |Q|·k result), release. Measured 37.4 → 15.2 s at sf100.
+    // the corpus is read once, as the walk's broadcast vectors child —
+    // resident for every hop the way a serving tier holds it in RAM
     val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v")).persist()
-    val out =
-      try {
-        val q = b.filter(col("vec_id") < GdQ)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        hnswSearch(layers, g0, b, q).localCheckpoint(true)
-      } finally b.unpersist() // even a failed search must not pin 2M rows
-    out.orderBy(col("q_id"), col("rn"))
+      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val q = b.filter(col("vec_id") < GdQ)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    hnswSearch(layers, g0, b, q).orderBy(col("q_id"), col("rn"))
   }
 
   /** The hierarchical search itself, over whatever layer/graph state the
@@ -1171,46 +1130,31 @@ object Round11Queries extends QueryPack {
     * in-memory state, proving the maintained hierarchy SERVES. `layers`
     * is (lvl, src, nb[, …]), `g0` (src, nb[, …]), `b` the corpus
     * (vec_id, v), `q` the queries (q_id, qv); emits (q_id, rn, vec_id,
-    * sim_q), unordered — exactly q173's rows. */
+    * sim_q), unordered — exactly q173's rows.
+    *
+    * The whole descent (the entry, [[HnHops]] hops on each of the
+    * [[HnL]] layers, then [[GdHops]] L0 hops) is ONE [[GraphWalk]]: every
+    * hop of a query runs inside the task that holds it, against broadcast
+    * layers, graph and vectors, so a request costs the broadcasts plus
+    * one stage — no job, shuffle or checkpoint per hop. The final
+    * top-[[GdK]] is one distinct heap after it. */
   private[graft] def hnswSearch(layers: DataFrame, g0: DataFrame,
                                 b: DataFrame, q: DataFrame): DataFrame = {
     // the global entry point: the (level desc, md5 asc, id asc) minimum
-    // — ONE scalar row from a map-combined struct-min, never a sort
+    // — ONE scalar row from a map-combined struct-min, never a sort —
+    // as the walk's one entry list, under the key every query carries
     val entry = b.select(min(struct((-maxLvl(col("vec_id"))).as("nl"),
         md5(col("vec_id").cast("string")).as("m"), col("vec_id").as("vid"))).as("e"))
-      .select(col("e.vid").as("vec_id"))
-    val score = Retrieval.scoreById(b, q) _
-    // every round references the frontier TWICE (expansion + union), so
-    // without lineage truncation the analyzer tree doubles per round —
-    // 2^19 nodes over the 16+3 hops, minutes of driver-side analysis
-    // before a single task runs (measured). The lazy per-round
-    // localCheckpoint keeps the plan constant-size: each hop is its own
-    // small job over the ≤ |Q|·beam checkpointed frontier rows — which
-    // is also exactly how a serving tier executes a hop loop. (A
-    // round-14 experiment fused the two hops of a layer into one job to
-    // cut the job count 19 → 10: SLOWER — the un-materialized hop-1
-    // tree is referenced twice by hop 2 and recomputes, and exchange
-    // reuse doesn't reliably absorb it under AQE. Measured 7.3 s vs
-    // 4.1 s at sf0.1; the per-hop checkpoint stays.)
-    var frontier = topDistinct(
-        score(q.select(col("q_id")).crossJoin(broadcast(entry))), "sim", HnBeam)
-      .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
-    for (l <- HnL to 1 by -1; _ <- 1 to HnHops) {
-      // partition pruning: each hop reads exactly level l's files
-      val gl = layers.filter(col("lvl") === l).select(col("src"), col("nb"))
-      val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
-        .join(gl, Seq("src"))
-        .select(col("q_id"), col("nb").as("vec_id"))
-      frontier = topDistinct(frontier.unionByName(score(expand)), "sim", HnBeam)
-        .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
-    }
-    for (_ <- 1 to GdHops) {
-      val expand = frontier.select(col("q_id"), col("vec_id").as("src"))
-        .join(g0.select(col("src"), col("nb")), Seq("src"))
-        .select(col("q_id"), col("nb").as("vec_id"))
-      frontier = topDistinct(frontier.unionByName(score(expand)), "sim", GdBeam)
-        .select(col("q_id"), col("vec_id"), col("sim")).localCheckpoint(false)
-    }
+      .select(lit(0L).as("key"), col("e.vid").as("nb"))
+    // one walk: the entry, [[HnHops]] beam-[[HnBeam]] hops on each layer
+    // from the top, then the q171 L0 hops — self kept throughout
+    val schedule = WalkStage(EdgeSet.Entry, HnBeam, 1, dropSelf = false) +:
+      (HnL to 1 by -1).map(l => WalkStage(EdgeSet.Layer(l), HnBeam, HnHops, dropSelf = false)) :+
+      WalkStage(EdgeSet.Graph, GdBeam, GdHops, dropSelf = false)
+    val frontier = GraphWalk.walk(
+      q.select(col("q_id"), col("qv"), array(lit(0L)).as("keys")),
+      g0, entry, b.select(col("vec_id"), col("v")), Some(layers),
+      cosineQNative(col("qv"), col("v")), "sim", desc = true, schedule, emitScored = false)
     topDistinct(frontier.filter(col("vec_id") =!= col("q_id")), "sim", GdK)
       .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
   }

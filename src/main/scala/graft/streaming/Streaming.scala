@@ -737,9 +737,10 @@ object Streaming {
     * `appendToKnnGraphIndex` find the new vectors and queries arriving
     * after a `deleteFromKnnGraphIndex` never see the retired ones
     * (spec-pinned across a mutation sequence). Per batch the work is
-    * q171's `graphSearch` — entry probe + beam·K by-id fetches, never a
-    * corpus scan — and its top-k through the shared bounded heap, so the
-    * rows equal q171's (spec-pinned). */
+    * q171's `graphSearch` — one in-task graph walk against the broadcast
+    * artifact read and `base` vectors, nothing shuffled but the top-k —
+    * and its top-k through the shared bounded heap, so the rows equal
+    * q171's (spec-pinned). */
   def graphSearchStream(queries: DataFrame, idxPath: String, base: DataFrame,
                         k: Int, sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream

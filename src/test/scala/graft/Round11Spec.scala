@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.OrcIO
 
@@ -137,6 +138,24 @@ class Round11Spec extends SparkSpec {
     // 0.86 regardless of extra rounds/caps), exactly Dong et al.'s
     // K-vs-recall tradeoff
     checkGraph("q169_knn_converged", 0.97)
+  }
+
+  test("graph builder output is unique on (src, nb): seed, each descent round, the final graph") {
+    // knnGraphBuildCounted's one-job convergence count (a left join of
+    // each round on the previous round's (src, nb)) is exact only while
+    // every round's edge list holds each (src, nb) once — topK's
+    // distinct heap is what guarantees it
+    import graft.queries.Round11Queries
+    graft.GraftFunctions.ensure(spark)
+    val b = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val seed = Round11Queries.seedGraph(b, 15)
+    val round1 = Round11Queries.descentRound(seed, b, 15, 30)
+    val built = Round11Queries.knnGraphBuild(b, 15, 30, 3)
+    for ((g, which) <- Seq((seed, "seed"), (round1, "descent round"), (built, "knnGraphBuild"))) {
+      val dup = g.groupBy("src", "nb").count().filter(col("count") > 1).count()
+      assert(dup == 0, s"$which emits $dup duplicated (src, nb) edges")
+    }
   }
 
   test("q169 bench-scale recall pin: recall@5 >= 0.85 at sf0.1") {
@@ -320,27 +339,76 @@ class Round11Spec extends SparkSpec {
     // 0.75 @ (60, 30), 0.875 @ (90, 60) — recall follows the rerank
     // budget exactly as DiskANN's L does; shipped knobs are (90, 60)
     assert(r176 >= 0.8, s"q176 recall@5 fell to $r176 (floor 0.8; measured 0.875)")
-    // the DiskANN split in the plan: every scan that reads the PQ codes
-    // is pruned away from the float payload (8 code bytes, not 256).
-    // The per-hop localCheckpoints truncate the hop sub-plans out of
-    // q176's final plan, so pin the guard on the traversal's own
-    // ADC-scored entry plan (pqSearch._2) — the hops score through the
-    // same scoreAdc over the same index read by construction.
-    val (_, entryProbe, hop1) =
-      graft.queries.Round11Queries.pqSearch(spark, sf("sf0.001"))
-    // pin the rcodes-only pruned scan on BOTH guard hooks: the entry
-    // probe AND a real in-loop hop expansion (round-16 ADVICE — the
-    // entry plan alone relied on the hops sharing scoreAdc by
-    // construction; this catches a future edit that widens the hop read)
-    for ((df, which) <- Seq((entryProbe, "entry"), (hop1, "hop1"))) {
-      val plan = df.queryExecution.executedPlan.toString
-      val codeScans = plan.linesIterator.filter(l =>
-        l.contains("FileScan parquet") && l.contains("rcodes")).toSeq
-      assert(codeScans.nonEmpty,
-        s"$which must score from the rcodes index scan:\n$plan")
-      codeScans.foreach(l => assert(!l.contains("embedding") && !l.contains("prefix"),
-        s"$which ADC scan must not read the float payload:\n$l"))
+    // the DiskANN split in the plan: the walk scores from the PQ codes
+    // child, a column-pruned rcodes scan (8 code bytes, not 256) — pinned
+    // on GraphWalk's own codes child, which every hop reads
+    val walks = graft.queries.Round11Queries.pqSearch(spark, sf("sf0.001"))
+      .queryExecution.sparkPlan.collect { case w: graft.plans.GraphWalkExec => w }
+    assert(walks.size == 1, "q176 must traverse in one GraphWalk")
+    val codes = walks.head.children(3).toString
+    assert(codes.contains("FileScan parquet") && codes.contains("rcodes"),
+      s"the walk must score from the rcodes index scan:\n$codes")
+    assert(!codes.contains("embedding") && !codes.contains("prefix"),
+      s"the ADC scan must not read the float payload:\n$codes")
+  }
+
+  /** The walk answers the pinned resource holds, recomputed: on sf0.001,
+    * 8 out-of-corpus queries (noisy copies of corpus vectors, q_id =
+    * 10⁸ + i, the perfbench convention) against the plain knngraph
+    * artifact and against a copy after one append (a re-added drop:
+    * duplicate edges and bucket rows) and one delete (a tombstone). Per
+    * artifact: graphSearch's frontier rows and the size and SHA-256 of
+    * its sorted scored multiset, pqSearch's frontier and hnswSearch's
+    * rows, each sorted. */
+  private def walkAnswers(): Seq[String] = {
+    import spark.implicits._
+    import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
+    graft.GraftFunctions.ensure(spark)
+    val d = sf("sf0.001")
+    val b = Tables.embeddings(spark, d)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val vecs = b.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val rnd = new java.util.Random(5L)
+    val q = (0 until 8).map { i =>
+      (100000000L + i, vecs(13L + 61L * i).map(_ + 0.03 * rnd.nextGaussian()))
+    }.toDF("q_id", "qv")
+    val plain = Round11Queries.knnGraphIndex(spark, d)
+    val mutated = tmp("graft_walk_pin") + "/knng"
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(plain), new java.io.File(mutated))
+    Round11Queries.appendToKnnGraphIndex(spark, mutated, b,
+      b.filter(col("vec_id").between(200, 209)))
+    Round11Queries.deleteFromKnnGraphIndex(spark, mutated, Seq(13L, 74L, 205L).toDF("vec_id"))
+    val layers = spark.read.parquet(s"${Round11Queries.hnswIndex(spark, d)}/layers")
+    val codes = spark.read.parquet(Round10Queries.annIndex(spark, d))
+      .select(col("vec_id"), col("rcodes").as("codes"))
+    val cb = LlmQueries.pqCodebook(b)
+    def lines(tag: String, df: DataFrame): Seq[String] =
+      df.collect().map(r => (tag +: r.toSeq.map(String.valueOf)).mkString(" ")).sorted.toSeq
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    Seq("plain" -> plain, "mutated" -> mutated).flatMap { case (name, path) =>
+      val (g, lists) = Round11Queries.readKnnGraphIndex(spark, path)
+      val g0 = g.select(col("src"), col("nb"))
+      val (frontier, scored) = Round11Queries.graphSearch(g0, lists, b, q)
+      val sc = lines("s", scored.select("q_id", "vec_id", "sim"))
+      lines(s"$name graph", frontier.select("q_id", "vec_id", "sim")) ++
+        Seq(s"$name scored ${sc.size} ${sha256(sc.mkString("\n"))}") ++
+        lines(s"$name pq", Round11Queries.pqSearch(g0, lists, codes, q, cb)
+          .select("q_id", "vec_id", "ad")) ++
+        lines(s"$name hnsw", Round11Queries.hnswSearch(layers, g0, b, q)
+          .select("q_id", "rn", "vec_id", "sim_q"))
     }
+  }
+
+  test("pinned walk answers: GraphWalk reproduces the per-hop loop's graph, PQ and HNSW rows") {
+    val src = scala.io.Source.fromResource("graph_walk_pinned.txt")
+    val pinned = try src.getLines().filterNot(_.startsWith("#")).toSeq finally src.close()
+    val got = walkAnswers()
+    assert(got.size == pinned.size, s"${got.size} answer lines, ${pinned.size} pinned")
+    val diff = got.zip(pinned).filter { case (a, p) => a != p }
+    assert(diff.isEmpty, s"${diff.size} lines differ, first: ${diff.take(3).mkString("; ")}")
   }
 
   test("q175 MMR rerank: rank-1 kept, strictly more diverse than plain top-5, subset of the beam") {

@@ -1099,6 +1099,13 @@ class StreamingSpec extends SparkSpec {
       mem.addData((qid, qv)); sq.processAllAvailable()
       served.synchronized(served.last)
     }
+    // 0) the same probe BEFORE the append, in this session: 450 is not
+    //    in the artifact yet — any serve-side cache of the graph must be
+    //    invalidated by the append below (which touches neither
+    //    `_GRAFT_DONE` nor `_compact_manifest`)
+    val before = search(9450L, vecOf(450))
+    assert(before.nonEmpty && !before.exists(_._1 == 450L),
+      s"450 is not in the artifact before the append, got $before")
     // 1) on-disk append: the drop becomes findable through the ARTIFACT
     Round11Queries.appendToKnnGraphIndex(spark, root, e, drop)
     val hit = search(9450L, vecOf(450))
