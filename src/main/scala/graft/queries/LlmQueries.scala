@@ -495,7 +495,7 @@ object LlmQueries extends QueryPack {
   def q119(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
-    val enc = s.read.parquet(Round10Queries.annIndex(s, d))
+    val enc = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
     pqAdcSearch(enc, e, pqCodebook(e), nQueries = 5, k = 3)
   }
@@ -566,7 +566,7 @@ object LlmQueries extends QueryPack {
     // codes) only, never the embedding payload, and never re-encodes
     // the corpus at query time (PlanGuard-pinned). Queries still
     // route + residualize against the same literal model.
-    val enc = s.read.parquet(Round10Queries.annIndex(s, d))
+    val enc = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("cell"), col("codes"))
     ivfPqProbe(enc, e, ivfCentroids(e), pqCodebook(e), nprobe = 2, k = 3, nQueries = 5)
   }

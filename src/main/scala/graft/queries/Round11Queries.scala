@@ -271,7 +271,7 @@ object Round11Queries extends QueryPack {
     // deterministic end-to-end; oracle replays the build), but q170 no
     // longer re-runs the O(n·K²) build the suite already owns on disk.
     val idx = knnGraphIndex(s, d)
-    val g = topK(s.read.parquet(s"$idx/graph")
+    val g = topK(readKnnGraphIndex(s, idx)._1
         .select(col("src"), col("nb"), col("sim")), KgK)
       .select(col("src"), col("nb"), col("sim"))
     val mutual = mutualEdges(g)
@@ -623,18 +623,16 @@ object Round11Queries extends QueryPack {
   private[graft] def knnGraphIndex(s: SparkSession, d: String): String =
     // recipe version in the marker (round-15 ADVICE): descent params or
     // bucket caps changing rebuilds the serving graph automatically
+    // (`manifest`: the build commits version 0 of the artifact)
     Round8Queries.ensureScratch(s, "knngraph", d,
-        s"r16:K=$KiK/${KiUnd}x$KiRounds:cap=$KgCap") { base =>
+        s"r16:K=$KiK/${KiUnd}x$KiRounds:cap=$KgCap:manifest") { base =>
       val b = Tables.embeddings(s, d)
         .select(col("vec_id"), toD(col("embedding")).as("v"))
-      knnGraphBuild(b, KiK, KiUnd, KiRounds)
-        .select(col("src"), col("nb"), col("sim"))
-        .repartition(8)
-        .write.parquet(s"$base/graph")
-      cappedBuckets(bucketMembership(b))
-        .select(col("t"), col("bk"), col("nb"))
-        .repartition(4)
-        .write.parquet(s"$base/buckets")
+      Artifacts.commit(s, Artifacts.knngraph(base), "build")(_ => Some(Artifacts.Change(Seq(
+        "graph" -> knnGraphBuild(b, KiK, KiUnd, KiRounds)
+          .select(col("src"), col("nb"), col("sim")).repartition(8),
+        "buckets" -> cappedBuckets(bucketMembership(b))
+          .select(col("t"), col("bk"), col("nb")).repartition(4)))))
     }
 
   /** q171: ANN queries SERVED from the converged kNN graph — greedy
@@ -668,12 +666,10 @@ object Round11Queries extends QueryPack {
     * scored set by attribute and never evaluates the frontier walk. */
   private def flatGraphSearch(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.GraftFunctions.ensure(s)
-    val idx = knnGraphIndex(s, d)
+    val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), toD(col("embedding")).as("v"))
-    graphSearch(
-      s.read.parquet(s"$idx/graph").select(col("src"), col("nb")),
-      s.read.parquet(s"$idx/buckets"), b,
+    graphSearch(g.select(col("src"), col("nb")), lists, b,
       b.filter(col("vec_id") < GdQ)
         .select(col("vec_id").as("q_id"), col("v").as("qv")))
   }
@@ -757,7 +753,8 @@ object Round11Queries extends QueryPack {
   /** Append a vector drop to the ON-DISK knngraph artifact — the LSM
     * delta design that lets a serving tier ingest without holding the
     * graph in memory (the in-memory path is [[appendToKnnGraph]] +
-    * `IngestState`; this is the same operation landed as part files).
+    * `IngestState`; this is the same operation committed as part files,
+    * graph and bucket parts in one commit, once per `key`).
     * Works because serving consumes the graph as an EDGE SET and the
     * bucket table as candidate lists: the drop's top-[[KiK]] edges
     * (scored against by-id fetches of its persisted-bucket mates) plus
@@ -768,44 +765,46 @@ object Round11Queries extends QueryPack {
     * shape. Per-drop work: one probe of the persisted bucket lists +
     * O(|drop|·cap) scored pairs — the nearDupProbe economics. A re-add
     * under a still-tombstoned id compacts first
-    * ([[graft.streaming.Artifacts.beforeAppend]]). */
+    * ([[graft.streaming.Artifacts.append]]). */
   def appendToKnnGraphIndex(s: SparkSession, idxPath: String,
-                            b: DataFrame, drop: DataFrame): Unit = {
-    Artifacts.beforeAppend(s, Artifacts.knngraph(idxPath), drop)(
-      compactKnnGraphIndex(s, idxPath))
-    val memb = bucketMembership(drop)
-    val dropLists = memb.select(col("t"), col("bk"), col("vec_id").as("nb"))
-    // candidates = persisted lists ∪ this drop's own memberships (so
-    // drop-internal near-pairs are seen); compaction re-caps later
-    val lists = s.read.parquet(s"$idxPath/buckets")
-      .select(col("t"), col("bk"), col("nb")).unionByName(dropLists)
-    val cand = memb.select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
-      .join(lists, Seq("t", "bk"))
-      .filter(col("src") =!= col("nb"))
-      .join(b.select(col("vec_id").as("nb"), col("v").as("nv")), Seq("nb"))
-      .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
-    val dropE = topK(cand, KiK).select(col("src"), col("nb"), col("sim"))
-    dropE.unionByName(
-        dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
-      .write.mode("append").parquet(s"$idxPath/graph")
-    dropLists.write.mode("append").parquet(s"$idxPath/buckets")
-  }
+                            b: DataFrame, drop: DataFrame, key: String = ""): Unit =
+    Artifacts.append(s, Artifacts.knngraph(idxPath), drop, key)(
+        compactKnnGraphIndex(s, idxPath)) { m =>
+      val memb = bucketMembership(drop)
+      val dropLists = memb.select(col("t"), col("bk"), col("vec_id").as("nb"))
+      // candidates = committed lists ∪ this drop's own memberships (so
+      // drop-internal near-pairs are seen); compaction re-caps later
+      val lists = m.read(s, "buckets")
+        .select(col("t"), col("bk"), col("nb")).unionByName(dropLists)
+      val cand = memb.select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
+        .join(lists, Seq("t", "bk"))
+        .filter(col("src") =!= col("nb"))
+        .join(b.select(col("vec_id").as("nb"), col("v").as("nv")), Seq("nb"))
+        .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
+      val dropE = topK(cand, KiK).select(col("src"), col("nb"), col("sim"))
+      Seq("graph" -> dropE.unionByName(
+          dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim"))),
+        "buckets" -> dropLists)
+    }
 
-  /** Logical delete from the artifact: O(|delete|) append to the
-    * `<idx>/tombstones` sidecar ([[graft.streaming.Artifacts]]);
-    * [[readKnnGraphIndex]] hides the retired ids from every serve path
-    * and the next compaction makes it physical. */
+  /** Logical delete from the artifact: O(|delete|) commit to the
+    * `<idx>/tombstones` sidecar ([[graft.streaming.Artifacts]]) under
+    * `key`; [[readKnnGraphIndex]] hides the retired ids from every serve
+    * path and the next compaction makes it physical. */
   def deleteFromKnnGraphIndex(s: SparkSession, idxPath: String,
-                              delIds: DataFrame): Unit =
-    Artifacts.appendTombstones(s, Artifacts.knngraph(idxPath), delIds)
+                              delIds: DataFrame, key: String = ""): Unit =
+    Artifacts.delete(s, Artifacts.knngraph(idxPath), delIds, key)
 
-  /** Delete-aware read of the artifact: (edges, bucket lists) minus the
-    * tombstone set (both anti-joins broadcast); a plain artifact reads
-    * as bare scans. */
-  def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) = {
-    val g = s.read.parquet(s"$idxPath/graph")
-    val lists = s.read.parquet(s"$idxPath/buckets")
-    Artifacts.tombstones(s, Artifacts.knngraph(idxPath)).fold((g, lists)) { del =>
+  /** Delete-aware read of the artifact's newest manifest: (edges, bucket
+    * lists) minus the tombstone set (both anti-joins broadcast); a plain
+    * artifact reads as bare scans. */
+  def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) =
+    readKnnGraph(s, Artifacts.snapshot(s, Artifacts.knngraph(idxPath)))
+
+  private def readKnnGraph(s: SparkSession, m: Artifacts.Manifest): (DataFrame, DataFrame) = {
+    val g = m.read(s, "graph")
+    val lists = m.read(s, "buckets")
+    m.tombstones(s).fold((g, lists)) { del =>
       (g.join(del.select(col("vec_id").as("src")), Seq("src"), "left_anti")
          .join(del.select(col("vec_id").as("nb")), Seq("nb"), "left_anti")
          .select(col("src"), col("nb"), col("sim")),
@@ -824,43 +823,29 @@ object Round11Queries extends QueryPack {
     * principle — the result is exactly the shape a fresh build
     * guarantees (whose recall floors are pinned); the lifecycle spec
     * pins that fixture probes keep their answers across the rewrite.
-    * The rewrite lands through [[graft.streaming.Artifacts.swap]], which
-    * retires the old parts and the sidecar after the new parts land.
-    * Returns the number of graph part files the rewrite replaced
-    * (0 = nothing to do — idempotent on a compact artifact). */
-  def compactKnnGraphIndex(s: SparkSession, idxPath: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val at = Artifacts.knngraph(idxPath)
-    Artifacts.repair(s, at)
-    val fs = new Path(idxPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    def parts(dir: String) = fs.listStatus(new Path(dir)).toSeq
-      .map(_.getPath).filter(p => p.getName.endsWith(".parquet"))
-    val olds = parts(s"$idxPath/graph")
-    // idempotence marker: the file set the LAST compaction left behind
-    // (underscore-prefixed — parquet readers skip it); appends change
-    // the set, deletes leave a sidecar — either reopens the work
-    val marker = new Path(s"$idxPath/graph/_compact_manifest")
-    def manifest(ps: Seq[Path]) = ps.map(_.getName).sorted.mkString("\n")
-    if (Artifacts.tombstones(s, at).isEmpty &&
-        Artifacts.readText(fs, marker).contains(manifest(olds))) return 0
-    val oldLists = parts(s"$idxPath/buckets")
-    val (g, lists) = readKnnGraphIndex(s, idxPath)
-    val wCap = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("t"), col("bk"))
-      .orderBy(md5(col("nb").cast("string")), col("nb"))
-    topK(g.select(col("src"), col("nb"), col("sim")), KiK)
-      .select(col("src"), col("nb"), col("sim"))
-      .repartition(8).write.parquet(s"${at.staging}/compact-graph")
-    lists.distinct()
-      .withColumn("br", row_number().over(wCap)).filter(col("br") <= KgCap)
-      .select(col("t"), col("bk"), col("nb"))
-      .repartition(4).write.parquet(s"${at.staging}/compact-buckets")
-    Artifacts.swap(s, at,
-      Seq("compact-graph" -> s"$idxPath/graph", "compact-buckets" -> s"$idxPath/buckets"),
-      (olds ++ oldLists).map(_.toString) :+ at.sidecar)
-    Artifacts.writeText(fs, marker, manifest(parts(s"$idxPath/graph")))
-    olds.length
-  }
+    * The rewrite lands through one [[graft.streaming.Artifacts.commit]]
+    * that retires every old part and tombstone. A compaction over a
+    * manifest committed by a compaction with no tombstones has nothing
+    * to do; `failpoint` is the crash-race spec's kill switch. Returns
+    * the number of graph part files the rewrite replaced (0 = nothing
+    * to do — idempotent on a compact artifact). */
+  def compactKnnGraphIndex(s: SparkSession, idxPath: String,
+                           failpoint: String => Unit = _ => ()): Int =
+    Artifacts.commit(s, Artifacts.knngraph(idxPath), "compact", failpoint = failpoint) { m =>
+      Option.when(m.op != "compact" || m.pendingDeletes) {
+        val (g, lists) = readKnnGraph(s, m)
+        val wCap = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("t"), col("bk"))
+          .orderBy(md5(col("nb").cast("string")), col("nb"))
+        Artifacts.Change(Seq(
+          "graph" -> topK(g.select(col("src"), col("nb"), col("sim")), KiK)
+            .select(col("src"), col("nb"), col("sim")).repartition(8),
+          "buckets" -> lists.distinct()
+            .withColumn("br", row_number().over(wCap)).filter(col("br") <= KgCap)
+            .select(col("t"), col("bk"), col("nb")).repartition(4)),
+          m.at.dirs.flatMap { case (t, _) => m.parts(t).map(t -> _._1) })
+      }
+    }.fold(0)(_.retire.count(_._1 == "graph"))
 
   // q176: PQ-fused graph traversal (DiskANN) ----------------------------
 
@@ -911,15 +896,14 @@ object Round11Queries extends QueryPack {
     * (PlanGuard in Round11Spec: never `embedding`, never `prefix`). */
   private[graft] def pqSearch(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val idx = knnGraphIndex(s, d)
-    val codes = s.read.parquet(Round10Queries.annIndex(s, d))
+    val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
+    val codes = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
     val b = Tables.embeddings(s, d)
       .select(col("vec_id"), toD(col("embedding")).as("v"))
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    pqSearch(s.read.parquet(s"$idx/graph"), s.read.parquet(s"$idx/buckets"),
-      codes, q, LlmQueries.pqCodebook(b))
+    pqSearch(g, lists, codes, q, LlmQueries.pqCodebook(b))
   }
 
   /** The ADC traversal itself: [[flatWalk]] over the graph `g` and
@@ -1111,9 +1095,8 @@ object Round11Queries extends QueryPack {
     * the single seeded entry row. */
   def q173(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val idx0 = knnGraphIndex(s, d)
+    val g0 = readKnnGraphIndex(s, knnGraphIndex(s, d))._1
     val idxH = hnswIndex(s, d)
-    val g0 = s.read.parquet(s"$idx0/graph")
     val layers = s.read.parquet(s"$idxH/layers")
     // the corpus is read once, as the walk's broadcast vectors child —
     // resident for every hop the way a serving tier holds it in RAM

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextOps
-import graft.streaming.Streaming
+import graft.streaming.{Artifacts, Streaming}
 
 /** Round-14 additions: the composed CDC ingest loop promoted to the
   * oracle board (q178, the q177 discipline applied to
@@ -198,9 +198,7 @@ object Round14Queries extends QueryPack {
         case Some(v) => s.conf.set("spark.sql.streaming.checkpointLocation", v)
         case None => s.conf.unset("spark.sql.streaming.checkpointLocation")
       }
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(tmpRoot).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
     }
   }
 
@@ -210,15 +208,8 @@ object Round14Queries extends QueryPack {
     // private mutable copy of the annidx template (file-level copy, no
     // Spark job — the loop appends part files, writes tombstone
     // sidecars and physically rewrites it at purge/compact)
-    locally {
-      import scala.jdk.CollectionConverters._
-      val src = java.nio.file.Paths.get(scratch, "annidx")
-      val dst = java.nio.file.Paths.get(idxPath)
-      java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
-        java.nio.file.Files.copy(p, dst.resolve(src.relativize(p).toString),
-          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-      }
-    }
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(scratch, "annidx"), new java.io.File(idxPath))
     val base = s.read.parquet(s"$scratch/base")
     val baseVecs = base.select(col("doc_id").as("vec_id"), col("v"))
     val cents = LlmQueries.ivfCentroids(baseVecs)
@@ -263,12 +254,13 @@ object Round14Queries extends QueryPack {
     // was appended in batch 1 and retired in batch 2)
     val surviving = (0L until 200L).toSet - 5L + 902L
     val idxRead = Round10Queries.readAnnIndex(s, idxPath)
+    val committed = Artifacts.snapshot(s, Artifacts.annidx(idxPath))
     // one tagged union + one collect instead of FIVE separate jobs —
     // the assertions read four artifacts (delete-aware index read, raw
     // index parquet, corpus, graph edge endpoints) but need only their
     // id sets, so all four ship through a single distinct
     val tagged = idxRead.select(lit("i").as("t"), col("vec_id"))
-      .unionByName(s.read.parquet(idxPath).select(lit("r").as("t"), col("vec_id")))
+      .unionByName(committed.read(s, "index").select(lit("r").as("t"), col("vec_id")))
       .unionByName(st.corpus.select(lit("c").as("t"), col("vec_id")))
       .unionByName(st.graph.select(lit("g").as("t"), col("src").as("vec_id")))
       .unionByName(st.graph.select(lit("g").as("t"), col("nb").as("vec_id")))
@@ -300,8 +292,9 @@ object Round14Queries extends QueryPack {
       r.exists(x => x.getLong(1) == 902L && x.getLong(2) >= 9999L)
     val served = top1Is902(top1.get("a")) && top1Is902(top1.get("g"))
     // the in-loop purge+compact after batch 2 made the deletes physical
-    // (the raw read rode the tagged union above as tag "r")
-    val purged = !new java.io.File(idxPath + ".tombstones").exists() &&
+    // (the committed parts, read without the tombstone filter, rode the
+    // tagged union above as tag "r")
+    val purged = !committed.pendingDeletes &&
       tagged.getOrElse("r", Set.empty) == surviving &&
       Round10Queries.purgeAnnIndex(s, idxPath) == 0
     s.range(1).select(

@@ -56,7 +56,7 @@ object Round16Queries extends QueryPack {
     * metric is hash-exact. */
   def q183(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val sg = s.read.parquet(Round10Queries.annIndex(s, d))
+    val sg = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("lo"), col("hi"))
     val qs = sg.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))

@@ -755,11 +755,11 @@ object Streaming {
           graft.functions.Retrieval.heapTopK(frontier, -col("sim"), k)
             .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
             // materialize INSIDE the retry scope: the sink must never
-            // receive a lazy plan that can still hit the swap window
+            // receive a lazy plan that can still hit a retired file
             .localCheckpoint(true)
         }
-        // a compaction swap can retire a file or the sidecar this
-        // batch's plan pinned: re-plan (Artifacts.retryVanished)
+        // a commit can retire a part file or tombstone this batch's
+        // plan pinned: re-plan (Artifacts.retryVanished)
         sink(Artifacts.retryVanished(attempts = 3)(serveOnce()))
       }
       .start()
@@ -842,9 +842,11 @@ object Streaming {
     * ([[graft.queries.Round10Queries.purgeAnnIndex]]) and folds the
     * accumulated small-file tail back to ~`compactTarget` bytes
     * ([[graft.queries.Round10Queries.compactAnnIndex]]), neither of
-    * which can change any probe result; both rewrites swap in through
-    * [[Artifacts.swap]], so a crash mid-rewrite is repaired by the next
-    * batch's first mutation.
+    * which can change any probe result. Every annidx3 mutation is one
+    * [[Artifacts.commit]], so a crash mid-rewrite is repaired by the
+    * next batch's first mutation, and the batch's delete and append
+    * commit under the micro-batch id (`<id>/del`, `<id>/add`): a
+    * replayed batch changes the annidx3 layout once.
     *
     * One pass per drop, shared ids throughout: a duplicate rejected by
     * the gate reaches NO downstream artifact, and a survivor reaches
@@ -886,7 +888,7 @@ object Streaming {
         if (!dels.isEmpty) {
           st.index = removeFromIndex(st.index, dels, bandCap)
           graft.queries.Round10Queries.deleteFromAnnIndex(
-            dels.select(col("doc_id").as("vec_id")), st.annIdxPath)
+            dels.select(col("doc_id").as("vec_id")), st.annIdxPath, key = s"$id/del")
           val delV = dels.select(col("doc_id").as("vec_id"))
           st.graph = graft.queries.Round11Queries
             .deleteFromKnnGraph(st.graph, st.corpus, delV, kInt, undCap)
@@ -912,7 +914,7 @@ object Streaming {
           val newVecs = kept.select(col("doc_id").as("vec_id"), col("label"),
             col("vec").as("v"))
           graft.queries.Round10Queries.appendToAnnIndex(
-            newVecs, st.annIdxPath, st.cents, st.cb)
+            newVecs, st.annIdxPath, st.cents, st.cb, key = s"$id/add")
           val bNew = newVecs.select(col("vec_id"), col("v"))
           st.graph = graft.queries.Round11Queries
             .appendToKnnGraph(st.graph, st.corpus, bNew, kInt, undCap)

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.Streaming
+import graft.streaming.{Artifacts, Streaming}
 import graft.streaming.Streaming.Ev
 
 /** Batch/stream unification: the same transform over a MemoryStream
@@ -13,6 +13,20 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(day: Int, hour: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-$day%02d $hour%02d:00:00")
+
+  /** A directory listing reader (`spark.read.parquet(dir)`) sees exactly
+    * what the newest manifest commits: each live and sidecar directory
+    * lists the manifest's parts, no more, no fewer. */
+  private def assertListedAsCommitted(at: Artifacts.Layout, when: String): Unit = {
+    val m = Artifacts.snapshot(spark, at)
+    assert(m.version >= 0, s"${at.root} has no manifest $when")
+    at.dirs.foreach { case (t, d) =>
+      val listed = Option(new java.io.File(d).list()).toSeq.flatten
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+      assert(listed == m.parts(t).map(_._1).sorted,
+        s"$d lists ${listed.size} files, manifest ${m.version} commits ${m.parts(t).size} $when")
+    }
+  }
 
   private val rows = Seq(
     Ev(1, ts(1, 1), 10, "click", 1.0),
@@ -797,6 +811,7 @@ class StreamingSpec extends SparkSpec {
     // two ingest iterations
     Round10Queries.appendToAnnIndex(drop1, idx, cents, cb)
     Round10Queries.appendToAnnIndex(drop2, idx, cents, cb)
+    assertListedAsCommitted(Artifacts.annidx(idx), "after two appends")
     // 1) pre-append rows are untouched: parquet append only adds files
     val afterBaseRows = spark.read.parquet(idx)
       .filter(col("vec_id") < 400).collect().map(_.toSeq).toSet
@@ -825,6 +840,46 @@ class StreamingSpec extends SparkSpec {
       assert(top1(q)._1 == q && top1(q)._2 >= 9999L,
         s"appended vector $q must be findable as its own nearest neighbor, got ${top1(q)}")
     }
+  }
+
+  test("annidx maintenance is exactly-once under a replayed batch key") {
+    // the ingest loop commits each micro-batch's annidx3 delete and
+    // append under `<batch id>/del` and `<batch id>/add`: applying the
+    // same batch again must change neither the manifest, nor the files,
+    // nor the served rows
+    import spark.implicits._
+    import graft.queries.{LlmQueries, Round10Queries}
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    graft.GraftFunctions.ensure(spark)
+    val e = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), col("label"),
+        transform(col("embedding"), _.cast("double")).as("v"))
+      .filter(col("vec_id") < 240)
+    val vecs = e.select(col("vec_id"), col("v"))
+    val (cents, cb) = (LlmQueries.ivfCentroids(vecs), LlmQueries.pqCodebook(vecs))
+    val idx = Files.createTempDirectory("graft_annidx_replay").toString + "/annidx"
+    Round10Queries.annIndexRows(e.filter(col("vec_id") < 200), cents, cb)
+      .repartition(2).write.parquet(idx)
+    val at = Artifacts.annidx(idx)
+    def batch(): Unit = {
+      Round10Queries.deleteFromAnnIndex(Seq(3L, 5L).toDF("vec_id"), idx, key = "7/del")
+      Round10Queries.appendToAnnIndex(e.filter(col("vec_id") >= 200), idx, cents, cb,
+        key = "7/add")
+    }
+    def files: Set[String] = Seq(idx, s"$idx.tombstones").filter(p => Files.exists(Paths.get(p)))
+      .flatMap(p => Files.walk(Paths.get(p)).iterator().asScala.map(_.toString)).toSet
+    def rows: Seq[String] =
+      Round10Queries.readAnnIndex(spark, idx).collect().map(_.toString).toSeq.sorted
+    batch()
+    val (manifest, fileSet, served) = (Artifacts.snapshot(spark, at), files, rows)
+    assert(manifest.keys == Seq("7/del", "7/add"), s"batch keys: ${manifest.keys}")
+    assert(served.size == 200 - 2 + 40, s"one application serves ${served.size} rows")
+    assertListedAsCommitted(at, "after the batch")
+    batch()
+    assert(Artifacts.snapshot(spark, at) == manifest, "a replayed batch must not commit")
+    assert(files == fileSet, "a replayed batch must not write or delete a file")
+    assert(rows == served, "a replayed batch must not change the served rows")
   }
 
   test("re-add under a tombstoned id: append supersedes the pending delete in both artifacts") {
@@ -860,6 +915,7 @@ class StreamingSpec extends SparkSpec {
       .filter(col("vec_id") === 100L).count() == 1,
       "re-added id must be visible exactly once (no stale twin, no hidden row)")
     Round10Queries.purgeAnnIndex(spark, idx)
+    assertListedAsCommitted(Artifacts.annidx(idx), "after the re-add and purge")
     assert(spark.read.parquet(idx).filter(col("vec_id") === 100L).count() == 1,
       "a later purge must not drop the re-added row")
     // --- knngraph artifact: same sequence through the graph lifecycle ---
@@ -884,6 +940,7 @@ class StreamingSpec extends SparkSpec {
       "re-added node must be back in the bucket candidate lists")
     // and a later compaction keeps it (the delete is fully superseded)
     Round11Queries.compactKnnGraphIndex(spark, knng)
+    assertListedAsCommitted(Artifacts.knngraph(knng), "after the re-add and compaction")
     assert(spark.read.parquet(s"$knng/graph")
       .filter(col("src") === 42L).count() > 0,
       "compaction after the re-add must keep the node's edges")
@@ -1099,20 +1156,33 @@ class StreamingSpec extends SparkSpec {
       mem.addData((qid, qv)); sq.processAllAvailable()
       served.synchronized(served.last)
     }
+    // the manifest version is the artifact's change key: every commit
+    // raises it, a no-op leaves it
+    val at = Artifacts.knngraph(root)
+    def version = Artifacts.snapshot(spark, at).version
+    val v0 = version
     // 0) the same probe BEFORE the append, in this session: 450 is not
     //    in the artifact yet — any serve-side cache of the graph must be
-    //    invalidated by the append below (which touches neither
-    //    `_GRAFT_DONE` nor `_compact_manifest`)
+    //    invalidated by the append below
     val before = search(9450L, vecOf(450))
     assert(before.nonEmpty && !before.exists(_._1 == 450L),
       s"450 is not in the artifact before the append, got $before")
-    // 1) on-disk append: the drop becomes findable through the ARTIFACT
-    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop)
+    // 1) on-disk append: the drop becomes findable through the ARTIFACT;
+    //    a replay of the same batch key changes nothing
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = "1/add")
+    val v1 = version
+    assert(v1 > v0, s"append must raise the version: $v0 -> $v1")
+    assertListedAsCommitted(at, "after the append")
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = "1/add")
+    assert(version == v1, "a replayed batch key must not commit again")
     val hit = search(9450L, vecOf(450))
     assert(hit.head._1 == 450L && hit.head._2 >= 9999L,
       s"appended vector must serve from the on-disk artifact, got $hit")
     // 2) logical delete hides the id from every serve path
     Round11Queries.deleteFromKnnGraphIndex(spark, root, Seq(450L).toDF("vec_id"))
+    val v2 = version
+    assert(v2 > v1, s"delete must raise the version: $v1 -> $v2")
+    assertListedAsCommitted(at, "after the delete")
     val afterDel = search(9450L, vecOf(450))
     assert(!afterDel.exists(_._1 == 450L),
       s"deleted vector must not serve, got $afterDel")
@@ -1120,6 +1190,9 @@ class StreamingSpec extends SparkSpec {
     //    their answers
     val replaced = Round11Queries.compactKnnGraphIndex(spark, root)
     assert(replaced > 0, "compaction must have deltas to fold")
+    val v3 = version
+    assert(v3 > v2, s"compaction must raise the version: $v2 -> $v3")
+    assertListedAsCommitted(at, "after the compaction")
     assert(!new java.io.File(s"$root/tombstones").exists(),
       "compaction must clear the tombstone sidecar")
     val g2 = spark.read.parquet(s"$root/graph")
@@ -1142,8 +1215,9 @@ class StreamingSpec extends SparkSpec {
     assert(!afterCompact.exists(_._1 == 450L), "deleted id resurfaced after compaction")
     assert(search(9470L, vecOf(470)).head._1 == 470L,
       "other appended vectors must still serve after compaction")
-    // 4) idempotent
+    // 4) idempotent: a compaction over a compacted manifest is a no-op
     assert(Round11Queries.compactKnnGraphIndex(spark, root) == 0)
+    assert(version == v3, "a no-op compaction must not commit")
     sq.stop()
   }
 
@@ -1509,88 +1583,125 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("annidx compaction swap is exactly-once under a kill at EVERY boundary") {
-    // round-16 verdict ask #8: compactAnnIndex's staged swap was the one
-    // commit not yet crash-raced. The swap is a roll-forward protocol —
-    // staging dir, then a _plan commit file, then renames + deletes — so
-    // a kill at ANY boundary must leave the artifact recoverable to
-    // EXACTLY the pre-compaction row multiset: pre-plan kills abort (the
-    // originals are untouched), post-plan kills complete forward on the
-    // next compaction entry. The spec kills at every failpoint the swap
-    // exposes and asserts multiset equality + convergence after repair.
-    import graft.queries.{LlmQueries, Round10Queries}
+    // Every artifact mutation is one commit: stage, land, rename manifest
+    // <n+1> in, delete what it retired. A kill at ANY boundary must leave
+    // the artifact converging to exactly one outcome: after the repair
+    // rule (a file the newest manifest does not list is garbage) the rows
+    // are the pre-operation rows when the kill came before the manifest
+    // rename and the post-operation rows after it, the staging dir is
+    // gone and every directory lists exactly the manifest; re-running
+    // the operation then lands it once — keyed appends and deletes by
+    // their batch key, compaction and purge by their no-op rules. The
+    // spec kills at every failpoint of annidx append, delete, compaction
+    // and purge, of knngraph compaction, and of the adoption of a
+    // directory with no manifest.
+    import spark.implicits._
+    import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
     graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
-      .filter(col("vec_id") < 300).localCheckpoint(true)
+      .filter(col("vec_id") < 340).localCheckpoint(true)
     val vecs = e.select(col("vec_id"), col("v"))
     val cents = LlmQueries.ivfCentroids(vecs)
     val cb = LlmQueries.pqCodebook(vecs)
-    val baseDir = java.nio.file.Files.createTempDirectory("graft_crashrace")
-    val golden = baseDir.toString + "/golden"
-    // 1 base part + 5 appended drops = 6 small files, all under target
+    val baseDir = Files.createTempDirectory("graft_crashrace").toString
+    def copyTo(from: String, to: String): Unit =
+      for ((f, t) <- Seq(from -> to, s"$from.tombstones" -> s"$to.tombstones")
+           if Files.exists(Paths.get(f))) {
+        val src = Paths.get(f)
+        Files.walk(src).iterator().asScala.foreach { p =>
+          Files.copy(p, Paths.get(t).resolve(src.relativize(p).toString))
+        }
+      }
+    // annidx: a manifest-less base part (as annIndexRows(...).write
+    // leaves it), then 5 appended drops = 6 small files, all under target,
+    // and tombstones retiring every 7th id
+    val bare = s"$baseDir/bare"
     Round10Queries.annIndexRows(e.filter(col("vec_id") < 100), cents, cb)
-      .coalesce(1).write.parquet(golden)
+      .coalesce(1).write.parquet(bare)
+    val golden = s"$baseDir/golden"
+    copyTo(bare, golden)
     (0 until 5).foreach { i =>
       Round10Queries.appendToAnnIndex(
         e.filter(col("vec_id") >= 100 + i * 40 && col("vec_id") < 140 + i * 40),
         golden, cents, cb)
     }
-    def rows(p: String): Seq[String] =
-      spark.read.parquet(p).collect()
-        .map(_.toString).toSeq.sorted
-    val before = rows(golden)
-    // purge runs through the same swap: a sidecar retiring every 7th id
-    // rides along in every copy (compaction leaves it alone)
     Round10Queries.deleteFromAnnIndex(
-      e.filter(col("vec_id") % 7 === 0).select(col("vec_id")), golden)
-    val survivors = Round10Queries.readAnnIndex(spark, golden).collect()
-      .map(_.toString).toSeq.sorted
-    assert(survivors.nonEmpty && survivors.length < before.length)
-    def copyTo(dst: String): Unit = {
-      import scala.jdk.CollectionConverters._
-      for ((from, to) <- Seq(golden -> dst, s"$golden.tombstones" -> s"$dst.tombstones")) {
-        val src = java.nio.file.Paths.get(from)
-        val d = java.nio.file.Paths.get(to)
-        java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
-          java.nio.file.Files.copy(p, d.resolve(src.relativize(p).toString))
-        }
-      }
+      e.filter(col("vec_id") < 300 && col("vec_id") % 7 === 0).select(col("vec_id")), golden)
+    // knngraph: a built graph with an appended drop and pending deletes
+    val knng = s"$baseDir/knng"
+    val kOld = vecs.filter(col("vec_id") < 150)
+    Round11Queries.knnGraphBuild(kOld, 10, 20, 1)
+      .select(col("src"), col("nb"), col("sim")).repartition(2).write.parquet(s"$knng/graph")
+    Round11Queries.cappedBuckets(Round11Queries.bucketMembership(kOld))
+      .select(col("t"), col("bk"), col("nb")).repartition(2).write.parquet(s"$knng/buckets")
+    Round11Queries.appendToKnnGraphIndex(spark, knng, vecs,
+      vecs.filter(col("vec_id").between(150, 179)))
+    Round11Queries.deleteFromKnnGraphIndex(spark, knng, Seq(42L, 160L).toDF("vec_id"))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def annRows(p: String) = sorted(Round10Queries.readAnnIndex(spark, p))
+    def graphRows(p: String) = {
+      val (g, lists) = Round11Queries.readKnnGraphIndex(spark, p)
+      sorted(g) ++ sorted(lists)
     }
     final class Kill extends RuntimeException("kill")
-    // (operation, the row multiset it converges to)
-    val ops: Seq[(String, (String, String => Unit) => Int, Seq[String])] = Seq(
-      ("compact", (dir, fp) => Round10Queries.compactAnnIndex(spark, dir, 1L << 20, fp), before),
-      ("purge", (dir, fp) => Round10Queries.purgeAnnIndex(spark, dir, fp), survivors))
-    for ((op, run, after) <- ops) {
+    // (operation, source artifact, layout, rows, run with a failpoint)
+    val ops: Seq[(String, String, String => Artifacts.Layout, String => Seq[String],
+        (String, String => Unit) => Unit)] = Seq(
+      ("adopt", bare, Artifacts.annidx, annRows, (dir, fp) =>
+        Round10Queries.appendToAnnIndex(e.filter(col("vec_id").between(100, 139)),
+          dir, cents, cb, key = "0/add", failpoint = fp)),
+      ("append", golden, Artifacts.annidx, annRows, (dir, fp) =>
+        Round10Queries.appendToAnnIndex(e.filter(col("vec_id") >= 300),
+          dir, cents, cb, key = "9/add", failpoint = fp)),
+      ("delete", golden, Artifacts.annidx, annRows, (dir, fp) =>
+        Round10Queries.deleteFromAnnIndex(Seq(1L, 2L, 3L).toDF("vec_id"),
+          dir, key = "9/del", failpoint = fp)),
+      ("compact", golden, Artifacts.annidx, annRows, (dir, fp) =>
+        Round10Queries.compactAnnIndex(spark, dir, 1L << 20, fp)),
+      ("purge", golden, Artifacts.annidx, annRows, (dir, fp) =>
+        Round10Queries.purgeAnnIndex(spark, dir, fp)),
+      ("knngraph-compact", knng, Artifacts.knngraph, graphRows, (dir, fp) =>
+        Round11Queries.compactKnnGraphIndex(spark, dir, fp)))
+    for ((op, src, layout, rows, run) <- ops) {
+      val pre = rows(src)
       // discover the failpoint labels with a recording (non-killing) run
       val labels = scala.collection.mutable.ArrayBuffer[String]()
-      locally {
-        val probe = baseDir.toString + s"/probe-$op"
-        copyTo(probe)
-        val n = run(probe, fp => labels += fp)
-        assert(n > 0 && rows(probe) == after,
-          s"the uncrashed $op must converge to its row multiset")
-      }
-      assert(labels.contains("staged") && labels.contains("planned") &&
-        labels.exists(_.startsWith("renamed-")) &&
-        labels.exists(_.startsWith("deleted-")), s"unexpected failpoints: $labels")
+      val probe = s"$baseDir/probe-$op"
+      copyTo(src, probe)
+      run(probe, fp => labels += fp)
+      val after = rows(probe)
+      assertListedAsCommitted(layout(probe), s"after the uncrashed $op")
+      // compaction and purge keep the delete-aware rows; the rest move them
+      assert((after == pre) == Set("compact", "purge")(op),
+        s"the uncrashed $op must converge to its row multiset")
+      assert(Seq("staged", "landed", "committed").forall(labels.contains) &&
+        (op != "adopt" || labels.contains("adopted")) &&
+        (Set("append", "delete", "adopt")(op) || labels.exists(_.startsWith("deleted-"))),
+        s"unexpected $op failpoints: $labels")
       labels.zipWithIndex.foreach { case (kill, i) =>
-        val dir = baseDir.toString + s"/crash-$op-$i"
-        copyTo(dir)
+        val dir = s"$baseDir/crash-$op-$i"
+        copyTo(src, dir)
         intercept[Kill] {
           run(dir, fp => if (fp == kill) throw new Kill)
         }
-        // the artifact is never served mid-swap here (the loop runs the
-        // compaction between batches); what matters is convergence: the
-        // NEXT entry repairs and completes
-        run(dir, _ => ())
-        assert(rows(dir) == after,
+        // the repair rule alone converges to exactly one side of the
+        // manifest rename, leaving no debris
+        Artifacts.repair(spark, layout(dir))
+        val committed = i >= labels.indexOf("committed")
+        assert(rows(dir) == (if (committed) after else pre),
           s"rows diverged after $op kill at '$kill' + repair")
-        // and the staging dir is gone — repair left no debris
-        assert(!java.nio.file.Files.exists(
-          java.nio.file.Paths.get(dir + "_compact_tmp")),
+        assert(!Files.exists(Paths.get(layout(dir).staging)),
           s"staging dir left behind after $op kill at '$kill'")
+        assertListedAsCommitted(layout(dir), s"after $op kill at '$kill' + repair")
+        // and re-running the operation lands it exactly once
+        run(dir, _ => ())
+        assert(rows(dir) == after, s"rows diverged after $op kill at '$kill' + re-run")
+        assertListedAsCommitted(layout(dir), s"after $op kill at '$kill' + re-run")
       }
     }
   }
