@@ -47,12 +47,37 @@ trait Md5Helper {
     md
   }
 
+  protected def md5Hex(bytes: Array[Byte]): String =
+    toHex(md5Raw(bytes))
+
   /** Digest of bytes[offset, offset+len) without copying the slice. */
   protected def md5Range(bytes: Array[Byte], offset: Int, len: Int): Array[Byte] = {
     val md = mdLocal.get()
     md.reset()
     md.update(bytes, offset, len)
     md.digest()
+  }
+
+  /** Digest of prefix ++ body without concatenating the arrays. */
+  protected def md5Parts(prefix: Array[Byte], body: Array[Byte]): Array[Byte] = {
+    val md = mdLocal.get()
+    md.reset()
+    md.update(prefix)
+    md.update(body)
+    md.digest()
+  }
+
+  /** Unsigned lexicographic compare — the same order as comparing the
+    * hex encodings (hex is big-endian per nibble). */
+  protected def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
+    var i = 0
+    while (i < 16) {
+      val ai = a(i) & 0xff
+      val bi = b(i) & 0xff
+      if (ai != bi) return ai < bi
+      i += 1
+    }
+    false
   }
 }
 

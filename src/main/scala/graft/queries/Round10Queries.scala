@@ -156,12 +156,12 @@ object Round10Queries extends QueryPack {
     * files. The serving contract after an append: probes see old ∪ new
     * exactly as if the index had been built from the union (same model
     * ⇒ same rows). Caller owns id-uniqueness across drops, as with any
-    * ingest loop; a replayed drop under the same `key` (the ingest
-    * loop's `<batch id>/add`) lands once. A re-add under a
+    * ingest loop; a replayed drop under a held `key` (the ingest
+    * loop's micro-batch id) lands once. A re-add under a
     * still-tombstoned id purges first ([[graft.streaming.Artifacts.append]]). */
   private[graft] def appendToAnnIndex(newRows: DataFrame, idxPath: String,
       cents: IndexedSeq[(Long, IndexedSeq[Double])],
-      cb: IndexedSeq[IndexedSeq[Double]], key: String = "",
+      cb: IndexedSeq[IndexedSeq[Double]], key: Option[Artifacts.Key] = None,
       failpoint: String => Unit = _ => ()): Unit = {
     val s = newRows.sparkSession
     Artifacts.append(s, Artifacts.annidx(idxPath), newRows, key, failpoint)(
@@ -204,10 +204,10 @@ object Round10Queries extends QueryPack {
 
   /** Logical delete: O(|delete|) commit of the retired ids to the
     * `<idx>.tombstones` sidecar ([[graft.streaming.Artifacts]]) under
-    * `key` (the ingest loop's `<batch id>/del`); nothing in the index is
+    * `key` (the ingest loop's micro-batch id); nothing in the index is
     * touched until [[purgeAnnIndex]]. */
   private[graft] def deleteFromAnnIndex(delIds: DataFrame, idxPath: String,
-      key: String = "", failpoint: String => Unit = _ => ()): Unit =
+      key: Option[Artifacts.Key] = None, failpoint: String => Unit = _ => ()): Unit =
     Artifacts.delete(delIds.sparkSession, Artifacts.annidx(idxPath), delIds, key, failpoint)
 
   /** The serve-time read of a delete-aware index: the committed index

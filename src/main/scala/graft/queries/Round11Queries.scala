@@ -767,7 +767,7 @@ object Round11Queries extends QueryPack {
     * under a still-tombstoned id compacts first
     * ([[graft.streaming.Artifacts.append]]). */
   def appendToKnnGraphIndex(s: SparkSession, idxPath: String,
-                            b: DataFrame, drop: DataFrame, key: String = ""): Unit =
+                            b: DataFrame, drop: DataFrame, key: Option[Artifacts.Key] = None): Unit =
     Artifacts.append(s, Artifacts.knngraph(idxPath), drop, key)(
         compactKnnGraphIndex(s, idxPath)) { m =>
       val memb = bucketMembership(drop)
@@ -792,7 +792,7 @@ object Round11Queries extends QueryPack {
     * `key`; [[readKnnGraphIndex]] hides the retired ids from every serve
     * path and the next compaction makes it physical. */
   def deleteFromKnnGraphIndex(s: SparkSession, idxPath: String,
-                              delIds: DataFrame, key: String = ""): Unit =
+                              delIds: DataFrame, key: Option[Artifacts.Key] = None): Unit =
     Artifacts.delete(s, Artifacts.knngraph(idxPath), delIds, key)
 
   /** Delete-aware read of the artifact's newest manifest: (edges, bucket

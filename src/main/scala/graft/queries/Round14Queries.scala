@@ -198,7 +198,9 @@ object Round14Queries extends QueryPack {
         case Some(v) => s.conf.set("spark.sql.streaming.checkpointLocation", v)
         case None => s.conf.unset("spark.sql.streaming.checkpointLocation")
       }
-      org.apache.commons.io.FileUtils.deleteDirectory(tmpRoot.toFile)
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(tmpRoot).iterator().asScala.toSeq.reverse
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
     }
   }
 
@@ -208,8 +210,15 @@ object Round14Queries extends QueryPack {
     // private mutable copy of the annidx template (file-level copy, no
     // Spark job — the loop appends part files, writes tombstone
     // sidecars and physically rewrites it at purge/compact)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(scratch, "annidx"), new java.io.File(idxPath))
+    locally {
+      import scala.jdk.CollectionConverters._
+      val src = java.nio.file.Paths.get(scratch, "annidx")
+      val dst = java.nio.file.Paths.get(idxPath)
+      java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+        java.nio.file.Files.copy(p, dst.resolve(src.relativize(p).toString),
+          java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      }
+    }
     val base = s.read.parquet(s"$scratch/base")
     val baseVecs = base.select(col("doc_id").as("vec_id"), col("v"))
     val cents = LlmQueries.ivfCentroids(baseVecs)

@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    Spark's directory listing skips it); the newest one lists the
   *    live part files of every table with their sizes, each table's
   *    parquet schema, the tombstone files, the operation that committed
-  *    it and the batch keys applied so far. Names are relative to their
-  *    table or sidecar directory, so a copied artifact stays valid. A
-  *    directory that was never committed reads as its listing.
+  *    it and, per batch-key scope, the newest batch it applied. Names
+  *    are relative to their table or sidecar directory, so a copied
+  *    artifact stays valid. A directory that was never committed reads
+  *    as its listing.
   *  - READERS take the newest manifest and hand its file list and
   *    schema to the parquet reader: no directory listing, no schema
   *    inference. The version number is the artifact's change key.
@@ -25,7 +26,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    in their live directories, write manifest `<n+1>` aside and rename
   *    it in (the commit point), then delete what it retired. The first
   *    mutation of a never-committed directory commits its listing as
-  *    version 0 before any file moves. A commit under a batch key the
+  *    version 0 before any file moves. A commit under a [[Key]] the
   *    newest manifest already holds changes nothing, so a replayed
   *    ingest batch lands once.
   *  - REPAIR is one rule, run first by every commit: a file in a live or
@@ -60,14 +61,20 @@ object Artifacts {
     Layout(idxPath, Seq("graph" -> s"$idxPath/graph", "buckets" -> s"$idxPath/buckets"),
       s"$idxPath/tombstones", s"$idxPath/_compact_tmp")
 
+  /** An exactly-once commit key: one `scope` (an ingest query's id and
+    * operation) commits increasing `batch` numbers (its micro-batch
+    * ids), so a batch at or below the scope's newest is a replay. */
+  final case class Key(scope: String, batch: Long)
+
   /** One committed version of an artifact (version -1: the listing of a
     * directory never committed). `files` maps each table, tombstones
-    * included, to its (name, bytes) parts. */
-  final case class Manifest(at: Layout, version: Long, op: String, keys: Seq[String],
+    * included, to its (name, bytes) parts; `marks` each key scope to the
+    * newest batch applied. */
+  final case class Manifest(at: Layout, version: Long, op: String, marks: Map[String, Long],
                             schemas: Map[String, StructType],
                             files: Map[String, Seq[(String, Long)]]) {
     def parts(table: String): Seq[(String, Long)] = files.getOrElse(table, Nil)
-    def holds(key: String): Boolean = key.nonEmpty && keys.contains(key)
+    def holds(key: Option[Key]): Boolean = key.exists(k => marks.get(k.scope).exists(k.batch <= _))
     def pendingDeletes: Boolean = parts(Tombstones).nonEmpty
 
     /** The table's committed parts, read with the committed schema. */
@@ -81,7 +88,7 @@ object Artifacts {
     def tombstones(s: SparkSession): Option[DataFrame] =
       Option.when(pendingDeletes)(broadcast(read(s, Tombstones).select(col("vec_id")).distinct()))
 
-    def text: String = (Seq(s"op\t$op") ++ keys.map(k => s"key\t$k") ++
+    def text: String = (Seq(s"op\t$op") ++ marks.toSeq.sorted.map { case (k, b) => s"mark\t$k\t$b" } ++
       schemas.toSeq.sortBy(_._1).map { case (t, st) => s"schema\t$t\t${st.json}" } ++
       at.dirs.flatMap { case (t, _) => parts(t).map { case (n, len) => s"file\t$t\t$n\t$len" } }
     ).mkString("\n")
@@ -90,7 +97,7 @@ object Artifacts {
   private def parse(at: Layout, version: Long, text: String): Manifest = {
     val rows = text.split("\n").toSeq.map(_.split("\t").toSeq)
     Manifest(at, version, rows.collectFirst { case Seq("op", op) => op }.getOrElse(""),
-      rows.collect { case Seq("key", k) => k },
+      rows.collect { case Seq("mark", k, b) => k -> b.toLong }.toMap,
       rows.collect { case Seq("schema", t, js) =>
         t -> DataType.fromJson(js).asInstanceOf[StructType] }.toMap,
       rows.collect { case Seq("file", t, n, len) => (t, (n, len.toLong)) }.groupMap(_._1)(_._2))
@@ -120,7 +127,7 @@ object Artifacts {
         case None => snapshot(s, at) // retired between the listing and the read
       }
       case None =>
-        val listed = Manifest(at, -1, "listing", Nil, Map.empty, at.dirs.map { case (t, d) =>
+        val listed = Manifest(at, -1, "listing", Map.empty, Map.empty, at.dirs.map { case (t, d) =>
           t -> visible(fs, d).map(f => f.getPath.getName -> f.getLen) }.toMap)
         listed.copy(schemas = listed.files.collect { case (t, ps) if ps.nonEmpty =>
           t -> s.read.parquet(ps.map(p => s"${at.dir(t)}/${p._1}"): _*).schema })
@@ -157,7 +164,7 @@ object Artifacts {
     * is called at every boundary (`adopted`, `staged`, `landed`,
     * `committed`, `deleted-<i>`) so the crash-race spec can kill there;
     * production callers leave it a no-op. Returns the committed change. */
-  def commit(s: SparkSession, at: Layout, op: String, key: String = "",
+  def commit(s: SparkSession, at: Layout, op: String, key: Option[Key] = None,
              failpoint: String => Unit = _ => ())
             (change: Manifest => Option[Change]): Option[Change] = {
     val fs = fsOf(s, at)
@@ -185,7 +192,7 @@ object Artifacts {
       failpoint("landed")
       // a table keeps the schema it was first committed with
       val next = base.copy(version = base.version + 1, op = op,
-        keys = base.keys ++ Option(key).filter(_.nonEmpty),
+        marks = base.marks ++ key.map(k => k.scope -> k.batch),
         schemas = ch.writes.map { case (t, df) => t -> df.schema }.toMap ++ base.schemas,
         files = at.dirs.map { case (t, _) => t -> (base.parts(t).filterNot(p =>
           ch.retire.contains(t -> p._1)) ++ landed.collect { case (`t`, p) => p }) }.toMap)
@@ -236,29 +243,25 @@ object Artifacts {
 
   /** Logical delete under `key`: the retired ids as new tombstone parts.
     * Idempotent — a redundant tombstone row is absorbed by the reads. */
-  def delete(s: SparkSession, at: Layout, ids: DataFrame, key: String = "",
+  def delete(s: SparkSession, at: Layout, ids: DataFrame, key: Option[Key] = None,
              failpoint: String => Unit = _ => ()): Unit =
     commit(s, at, "delete", key, failpoint)(_ =>
       Some(Change(Seq(Tombstones -> ids.select(col("vec_id").cast("long"))))))
 
-  /** Append the `rows` of a drop carrying `ids` under `key`: a held key
-    * changes nothing; when the ids intersect the pending tombstones
-    * (delete → re-add before the next rewrite), `makePhysical` runs
-    * first so the appended rows land with no tombstone outranking them.
-    * The disjoint (common) path is a semi join against the broadcast
-    * tombstones. */
-  def append(s: SparkSession, at: Layout, ids: DataFrame, key: String = "",
+  /** Append the `rows` of a drop carrying `ids` under `key`. When the
+    * ids intersect the pending tombstones of an unheld key (delete →
+    * re-add before the next rewrite), `makePhysical` runs first so the
+    * appended rows land with no tombstone outranking them; the disjoint
+    * (common) path is a semi join against the broadcast tombstones. The
+    * commit then repairs and checks the key. */
+  def append(s: SparkSession, at: Layout, ids: DataFrame, key: Option[Key] = None,
              failpoint: String => Unit = _ => ())(makePhysical: => Unit)
             (rows: Manifest => Seq[(String, DataFrame)]): Unit = {
     val m = snapshot(s, at)
-    if (!m.holds(key)) {
-      m.tombstones(s).foreach { dels =>
-        val readded = ids.select(col("vec_id").cast("long").as("vec_id"))
-          .join(dels, Seq("vec_id"), "left_semi")
-        if (!readded.isEmpty) makePhysical
-      }
-      commit(s, at, "append", key, failpoint)(m => Some(Change(rows(m))))
-    }
+    val ids64 = ids.select(col("vec_id").cast("long").as("vec_id"))
+    if (!m.holds(key) && m.tombstones(s).exists(!ids64.join(_, Seq("vec_id"), "left_semi").isEmpty))
+      makePhysical
+    commit(s, at, "append", key, failpoint)(m => Some(Change(rows(m))))
   }
 
   /** The reader-side half of the commit: a read planned on one manifest

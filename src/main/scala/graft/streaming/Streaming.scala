@@ -845,8 +845,10 @@ object Streaming {
     * which can change any probe result. Every annidx3 mutation is one
     * [[Artifacts.commit]], so a crash mid-rewrite is repaired by the
     * next batch's first mutation, and the batch's delete and append
-    * commit under the micro-batch id (`<id>/del`, `<id>/add`): a
-    * replayed batch changes the annidx3 layout once.
+    * commit under [[Artifacts.Key]]s scoped by the streaming query's id
+    * (kept across a restart from its checkpoint) and ordered by the
+    * micro-batch id: a replayed batch changes the annidx3 layout once,
+    * and a second query over the same layout starts its own scope.
     *
     * One pass per drop, shared ids throughout: a duplicate rejected by
     * the gate reaches NO downstream artifact, and a survivor reaches
@@ -879,6 +881,8 @@ object Streaming {
       .outputMode("append")
       .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val raw = b.toDF().localCheckpoint(true)
+        val query = b.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+        def key(op: String) = Some(Artifacts.Key(s"$query/$op", id))
         // CDC: deletes land FIRST, so a batch that retires an id and
         // re-adds its text sees the freed gate — and every artifact
         // retires the id the same way its append grew it
@@ -888,7 +892,7 @@ object Streaming {
         if (!dels.isEmpty) {
           st.index = removeFromIndex(st.index, dels, bandCap)
           graft.queries.Round10Queries.deleteFromAnnIndex(
-            dels.select(col("doc_id").as("vec_id")), st.annIdxPath, key = s"$id/del")
+            dels.select(col("doc_id").as("vec_id")), st.annIdxPath, key = key("del"))
           val delV = dels.select(col("doc_id").as("vec_id"))
           st.graph = graft.queries.Round11Queries
             .deleteFromKnnGraph(st.graph, st.corpus, delV, kInt, undCap)
@@ -914,7 +918,7 @@ object Streaming {
           val newVecs = kept.select(col("doc_id").as("vec_id"), col("label"),
             col("vec").as("v"))
           graft.queries.Round10Queries.appendToAnnIndex(
-            newVecs, st.annIdxPath, st.cents, st.cb, key = s"$id/add")
+            newVecs, st.annIdxPath, st.cents, st.cb, key = key("add"))
           val bNew = newVecs.select(col("vec_id"), col("v"))
           st.graph = graft.queries.Round11Queries
             .appendToKnnGraph(st.graph, st.corpus, bNew, kInt, undCap)

@@ -844,9 +844,9 @@ class StreamingSpec extends SparkSpec {
 
   test("annidx maintenance is exactly-once under a replayed batch key") {
     // the ingest loop commits each micro-batch's annidx3 delete and
-    // append under `<batch id>/del` and `<batch id>/add`: applying the
-    // same batch again must change neither the manifest, nor the files,
-    // nor the served rows
+    // append under a key of its query's `del` and `add` scopes and the
+    // batch id: applying the same batch again must change neither the
+    // manifest, nor the files, nor the served rows
     import spark.implicits._
     import graft.queries.{LlmQueries, Round10Queries}
     import java.nio.file.{Files, Paths}
@@ -863,9 +863,10 @@ class StreamingSpec extends SparkSpec {
       .repartition(2).write.parquet(idx)
     val at = Artifacts.annidx(idx)
     def batch(): Unit = {
-      Round10Queries.deleteFromAnnIndex(Seq(3L, 5L).toDF("vec_id"), idx, key = "7/del")
+      Round10Queries.deleteFromAnnIndex(Seq(3L, 5L).toDF("vec_id"), idx,
+        key = Some(Artifacts.Key("q/del", 7)))
       Round10Queries.appendToAnnIndex(e.filter(col("vec_id") >= 200), idx, cents, cb,
-        key = "7/add")
+        key = Some(Artifacts.Key("q/add", 7)))
     }
     def files: Set[String] = Seq(idx, s"$idx.tombstones").filter(p => Files.exists(Paths.get(p)))
       .flatMap(p => Files.walk(Paths.get(p)).iterator().asScala.map(_.toString)).toSet
@@ -873,13 +874,72 @@ class StreamingSpec extends SparkSpec {
       Round10Queries.readAnnIndex(spark, idx).collect().map(_.toString).toSeq.sorted
     batch()
     val (manifest, fileSet, served) = (Artifacts.snapshot(spark, at), files, rows)
-    assert(manifest.keys == Seq("7/del", "7/add"), s"batch keys: ${manifest.keys}")
+    assert(manifest.marks == Map("q/del" -> 7L, "q/add" -> 7L), s"batch marks: ${manifest.marks}")
     assert(served.size == 200 - 2 + 40, s"one application serves ${served.size} rows")
     assertListedAsCommitted(at, "after the batch")
     batch()
     assert(Artifacts.snapshot(spark, at) == manifest, "a replayed batch must not commit")
     assert(files == fileSet, "a replayed batch must not write or delete a file")
     assert(rows == served, "a replayed batch must not change the served rows")
+    // an older batch of the same scope is a replay too; a newer one lands
+    Round10Queries.deleteFromAnnIndex(Seq(9L).toDF("vec_id"), idx, key = Some(Artifacts.Key("q/del", 6)))
+    assert(Artifacts.snapshot(spark, at) == manifest, "an older batch must not commit")
+    Round10Queries.deleteFromAnnIndex(Seq(9L).toDF("vec_id"), idx, key = Some(Artifacts.Key("q/del", 8)))
+    assert(Artifacts.snapshot(spark, at).marks("q/del") == 8L && rows.size == served.size - 1,
+      "a newer batch of the scope must commit")
+  }
+
+  test("two ingest loops over one annidx: each query commits under its own key scope") {
+    // micro-batch ids restart at 0 in every new streaming query; the
+    // exactly-once keys are scoped by the query id, so a second loop over
+    // a layout an earlier loop mutated must still land its batch 0
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
+    graft.GraftFunctions.ensure(spark)
+    val joined = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+      .join(Tables.embeddings(spark, sf("sf0.001"))
+          .select(col("vec_id"), col("label"),
+            transform(col("embedding"), _.cast("double")).as("v")),
+        col("doc_id") === col("vec_id"))
+      .select(col("doc_id"), col("text"), col("label"), col("v"))
+    val base = joined.filter(col("doc_id") < 200).localCheckpoint(true)
+    val baseVecs = base.select(col("doc_id").as("vec_id"), col("v"))
+    val (cents, cb) = (LlmQueries.ivfCentroids(baseVecs), LlmQueries.pqCodebook(baseVecs))
+    val idxPath =
+      java.nio.file.Files.createTempDirectory("graft_two_loops").toString + "/annidx"
+    Round10Queries.annIndexRows(
+        base.select(col("doc_id").as("vec_id"), col("label"), col("v")), cents, cb)
+      .repartition(2).write.parquet(idxPath)
+    val st = new Streaming.IngestState(
+      Streaming.buildNearDupIndex(base.select("doc_id", "text"), 64), idxPath,
+      Round11Queries.knnGraphBuild(baseVecs, 15, 30, 3)
+        .select(col("src"), col("nb"), col("sim")).localCheckpoint(false),
+      baseVecs.localCheckpoint(true), cents, cb)
+    def vecOf(id: Long): Seq[Double] =
+      joined.filter(col("doc_id") === id).select("v").collect().head.getSeq[Double](0)
+    def runLoop(drop: Seq[Streaming.IngestDoc]): java.util.UUID = {
+      val mem = MemoryStream[Streaming.IngestDoc]
+      val q = Streaming.ingestLoop(mem.toDF(), st, bandCap = 64, kInt = 15,
+        undCap = 30, compactEvery = 0, compactTarget = 64L << 20)
+      mem.addData(drop: _*); q.processAllAvailable()
+      q.stop()
+      q.id
+    }
+    val q1 = runLoop(Seq(Streaming.IngestDoc(450,
+      "first loop arrival describing an entirely fresh retrieval topic", 2, vecOf(450))))
+    val q2 = runLoop(Seq(Streaming.IngestDoc(7, "", 0, Seq.empty, op = "del"),
+      Streaming.IngestDoc(470,
+        "second loop arrival about unrelated ingestion restart semantics", 0, vecOf(470))))
+    val ids = Round10Queries.readAnnIndex(spark, idxPath).select("vec_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(ids == (0L until 200L).toSet - 7L + 450L + 470L,
+      "the second loop's batch 0 must land on the layout the first loop mutated")
+    val at = Artifacts.annidx(idxPath)
+    assert(Artifacts.snapshot(spark, at).marks ==
+      Map(s"$q1/add" -> 0L, s"$q2/del" -> 0L, s"$q2/add" -> 0L),
+      "each query's batches commit under its own id")
+    assertListedAsCommitted(at, "after two loops")
   }
 
   test("re-add under a tombstoned id: append supersedes the pending delete in both artifacts") {
@@ -1169,11 +1229,12 @@ class StreamingSpec extends SparkSpec {
       s"450 is not in the artifact before the append, got $before")
     // 1) on-disk append: the drop becomes findable through the ARTIFACT;
     //    a replay of the same batch key changes nothing
-    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = "1/add")
+    val key = Some(Artifacts.Key("q/add", 1))
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = key)
     val v1 = version
     assert(v1 > v0, s"append must raise the version: $v0 -> $v1")
     assertListedAsCommitted(at, "after the append")
-    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = "1/add")
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop, key = key)
     assert(version == v1, "a replayed batch key must not commit again")
     val hit = search(9450L, vecOf(450))
     assert(hit.head._1 == 450L && hit.head._2 >= 9999L,
@@ -1586,15 +1647,19 @@ class StreamingSpec extends SparkSpec {
     // Every artifact mutation is one commit: stage, land, rename manifest
     // <n+1> in, delete what it retired. A kill at ANY boundary must leave
     // the artifact converging to exactly one outcome: after the repair
-    // rule (a file the newest manifest does not list is garbage) the rows
-    // are the pre-operation rows when the kill came before the manifest
-    // rename and the post-operation rows after it, the staging dir is
-    // gone and every directory lists exactly the manifest; re-running
-    // the operation then lands it once — keyed appends and deletes by
-    // their batch key, compaction and purge by their no-op rules. The
-    // spec kills at every failpoint of annidx append, delete, compaction
-    // and purge, of knngraph compaction, and of the adoption of a
-    // directory with no manifest.
+    // rule (a file the newest manifest does not list is garbage) the
+    // state is the pre-operation state when the kill came before the
+    // manifest rename and the post-operation state after it, the staging
+    // dir is gone and every directory lists exactly the manifest;
+    // re-running the operation then lands it once — keyed appends and
+    // deletes by their batch key, compaction and purge by their no-op
+    // rules. The state is both the delete-aware rows and the PHYSICAL
+    // ones (every committed part read raw, tombstones included, and each
+    // table's part count), so a compaction or purge — which keep the
+    // delete-aware rows — still shows which side of the commit a kill
+    // fell on. The spec kills at every failpoint of annidx append,
+    // delete, compaction and purge, of knngraph compaction, and of the
+    // adoption of a directory with no manifest.
     import spark.implicits._
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
     import java.nio.file.{Files, Paths}
@@ -1648,19 +1713,26 @@ class StreamingSpec extends SparkSpec {
       val (g, lists) = Round11Queries.readKnnGraphIndex(spark, p)
       sorted(g) ++ sorted(lists)
     }
+    // table -> (committed part count, raw rows of those parts)
+    def physical(at: Artifacts.Layout): Map[String, (Int, Seq[String])] = {
+      val m = Artifacts.snapshot(spark, at)
+      at.dirs.map { case (t, _) =>
+        t -> (m.parts(t).size, if (m.parts(t).isEmpty) Nil else sorted(m.read(spark, t)))
+      }.toMap
+    }
     final class Kill extends RuntimeException("kill")
-    // (operation, source artifact, layout, rows, run with a failpoint)
+    // (operation, source artifact, layout, delete-aware rows, run with a failpoint)
     val ops: Seq[(String, String, String => Artifacts.Layout, String => Seq[String],
         (String, String => Unit) => Unit)] = Seq(
       ("adopt", bare, Artifacts.annidx, annRows, (dir, fp) =>
         Round10Queries.appendToAnnIndex(e.filter(col("vec_id").between(100, 139)),
-          dir, cents, cb, key = "0/add", failpoint = fp)),
+          dir, cents, cb, key = Some(Artifacts.Key("q/add", 0)), failpoint = fp)),
       ("append", golden, Artifacts.annidx, annRows, (dir, fp) =>
         Round10Queries.appendToAnnIndex(e.filter(col("vec_id") >= 300),
-          dir, cents, cb, key = "9/add", failpoint = fp)),
+          dir, cents, cb, key = Some(Artifacts.Key("q/add", 9)), failpoint = fp)),
       ("delete", golden, Artifacts.annidx, annRows, (dir, fp) =>
         Round10Queries.deleteFromAnnIndex(Seq(1L, 2L, 3L).toDF("vec_id"),
-          dir, key = "9/del", failpoint = fp)),
+          dir, key = Some(Artifacts.Key("q/del", 9)), failpoint = fp)),
       ("compact", golden, Artifacts.annidx, annRows, (dir, fp) =>
         Round10Queries.compactAnnIndex(spark, dir, 1L << 20, fp)),
       ("purge", golden, Artifacts.annidx, annRows, (dir, fp) =>
@@ -1668,17 +1740,30 @@ class StreamingSpec extends SparkSpec {
       ("knngraph-compact", knng, Artifacts.knngraph, graphRows, (dir, fp) =>
         Round11Queries.compactKnnGraphIndex(spark, dir, fp)))
     for ((op, src, layout, rows, run) <- ops) {
-      val pre = rows(src)
+      def state(dir: String) = (rows(dir), physical(layout(dir)))
+      val pre = state(src)
       // discover the failpoint labels with a recording (non-killing) run
       val labels = scala.collection.mutable.ArrayBuffer[String]()
       val probe = s"$baseDir/probe-$op"
       copyTo(src, probe)
       run(probe, fp => labels += fp)
-      val after = rows(probe)
+      val after = state(probe)
       assertListedAsCommitted(layout(probe), s"after the uncrashed $op")
+      assert(after._2 != pre._2, s"the uncrashed $op must change the committed parts")
       // compaction and purge keep the delete-aware rows; the rest move them
-      assert((after == pre) == Set("compact", "purge")(op),
+      assert((after._1 == pre._1) == Set("compact", "purge")(op),
         s"the uncrashed $op must converge to its row multiset")
+      val (idxPre, idxAfter) = (pre._2.get("index"), after._2.get("index"))
+      // compaction keeps every physical row, tombstoned ones included, in
+      // fewer parts; purge rewrites the parts down to the delete-aware
+      // rows and retires every tombstone
+      if (op == "compact")
+        assert(idxAfter.map(_._2) == idxPre.map(_._2) && idxAfter.get._1 < idxPre.get._1 &&
+          after._2(Artifacts.Tombstones) == pre._2(Artifacts.Tombstones),
+          "compaction must fold the parts and keep every physical row")
+      if (op == "purge")
+        assert(idxAfter.get._2 == pre._1 && after._2(Artifacts.Tombstones) == (0, Nil),
+          "purge must rewrite the parts down to the delete-aware rows")
       assert(Seq("staged", "landed", "committed").forall(labels.contains) &&
         (op != "adopt" || labels.contains("adopted")) &&
         (Set("append", "delete", "adopt")(op) || labels.exists(_.startsWith("deleted-"))),
@@ -1693,14 +1778,14 @@ class StreamingSpec extends SparkSpec {
         // manifest rename, leaving no debris
         Artifacts.repair(spark, layout(dir))
         val committed = i >= labels.indexOf("committed")
-        assert(rows(dir) == (if (committed) after else pre),
-          s"rows diverged after $op kill at '$kill' + repair")
+        assert(state(dir) == (if (committed) after else pre),
+          s"state diverged after $op kill at '$kill' + repair")
         assert(!Files.exists(Paths.get(layout(dir).staging)),
           s"staging dir left behind after $op kill at '$kill'")
         assertListedAsCommitted(layout(dir), s"after $op kill at '$kill' + repair")
         // and re-running the operation lands it exactly once
         run(dir, _ => ())
-        assert(rows(dir) == after, s"rows diverged after $op kill at '$kill' + re-run")
+        assert(state(dir) == after, s"state diverged after $op kill at '$kill' + re-run")
         assertListedAsCommitted(layout(dir), s"after $op kill at '$kill' + re-run")
       }
     }
