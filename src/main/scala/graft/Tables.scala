@@ -174,4 +174,10 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  /** The corpus vectors (vec_id, cols…, v): embeddings with the float
+    * vector cast to double once, `cols` carried between id and vector. */
+  def vectors(s: SparkSession, d: String, cols: String*): DataFrame =
+    embeddings(s, d).select(
+      (col("vec_id") +: cols.map(col)) :+ graft.functions.VectorOps.toD(col("embedding")).as("v"): _*)
 }

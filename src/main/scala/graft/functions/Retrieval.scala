@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The retrieval stages every ANN path is built from, each written once:
@@ -12,7 +11,10 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.Round11Queries]] calls with each search's scorer and
   * layer schedule.
   *
-  * Every rank is integer-keyed with a vec_id tiebreak, so each cut is
+  * [[heapTopK]] is the engine's only per-query vector ranking: the
+  * brute-force, bucket, IVF and PQ searches, the Hamming rerank and rank
+  * fusion all cut their candidates through it, never a Window. Every
+  * rank is integer-keyed with a vec_id tiebreak, so each cut is
   * bit-deterministic and the DuckDB oracles replay it exactly. Inputs
   * are `q_id`-keyed candidate rows; only |queries|·k rows ever cross a
   * shuffle. */
@@ -30,18 +32,24 @@ object Retrieval {
       .select(cand.columns.map(col) :+
         VectorOps.cosineQNative(col("qv"), col("v")).as(name): _*)
 
-  /** Bounded-heap top-k per q_id by (rank key asc, vec_id asc): only
-    * |queries|×k rows cross the shuffle, no window sort of the candidate
-    * fanout. `key` must already be "smaller is better" (negate sims).
-    * Returns (q_id, rn, vec_id, hk). */
-  def heapTopK(cand: DataFrame, key: Column, k: Int): DataFrame =
-    cand.select(col("q_id"), col("vec_id"), key.as("hk"))
+  /** Bounded-heap top-k per q_id by (rank key asc, vec_id asc): each
+    * task keeps k rows per q_id and only |queries|×k rows cross the
+    * shuffle, where a Window+row_number sorts the whole candidate fanout
+    * in |queries| partitions. `key` must already be "smaller is better"
+    * (negate sims). With candidates unique per (q_id, vec_id), `rn`
+    * equals row_number() over (key, vec_id). The `carry` columns ride in
+    * the heap entry behind the key and never decide an order. Returns
+    * (q_id, rn, vec_id, hk, carry…). */
+  def heapTopK(cand: DataFrame, key: Column, k: Int, carry: Seq[String] = Nil): DataFrame = {
+    val carried = carry.map(col)
+    cand.select(Seq(col("q_id"), col("vec_id"), key.as("hk")) ++ carried: _*)
       .groupBy(col("q_id"))
       .agg(call_function("collect_topk",
-        struct(col("hk"), col("vec_id")), lit(k), lit(true)).as("t"))
+        struct(Seq(col("hk"), col("vec_id")) ++ carried: _*), lit(k), lit(true)).as("t"))
       .select(col("q_id"), posexplode(col("t")).as(Seq("p", "s")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("s.vec_id").as("vec_id"), col("s.hk").as("hk"))
+      .select(Seq(col("q_id"), (col("p") + 1).as("rn"), col("s.vec_id").as("vec_id"),
+        col("s.hk").as("hk")) ++ carry.map(c => col(s"s.$c").as(c)): _*)
+  }
 
   /** [[heapTopK]] over (q_id, vec_id, `score`) rows that may repeat — a
     * beam frontier unioned with its rescored expansion — keeping each
@@ -77,16 +85,14 @@ object Retrieval {
 
   /** The Hamming two-stage route: [[hammingShortlist]], then the
     * shortlist reranked by [[scoreById]] against `qVecs` (q_id, qv);
-    * top-`k` by (sim_q desc, vec_id). The rerank window sorts only
-    * |queries|×shortlist rows. Returns (q_id, rn, vec_id, ham, sim_q). */
+    * top-`k` by (sim_q desc, vec_id) through [[heapTopK]], with `ham`
+    * carried, over |queries|×shortlist rows. Returns (q_id, rn, vec_id,
+    * ham, sim_q). */
   def hammingRoute(index: DataFrame, qSigs: DataFrame, base: DataFrame,
                    qVecs: DataFrame, shortlist: Int, k: Int,
                    excludeSelf: Boolean = true): DataFrame = {
     val short = hammingShortlist(index, qSigs, shortlist, excludeSelf)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    scoreById(base, qVecs, "sim_q")(short)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("ham"), col("sim_q"))
+    heapTopK(scoreById(base, qVecs)(short), -col("sim"), k, Seq("ham"))
+      .select(col("q_id"), col("rn"), col("vec_id"), col("ham"), (-col("hk")).as("sim_q"))
   }
 }

@@ -83,6 +83,13 @@ object LlmQueries extends QueryPack {
              FROM shs)"""
   }
 
+  /** Top-`k` per q_id of joined (q_id, qv, vec_id, v) candidate rows by
+    * basis-point cosine, through [[Retrieval.heapTopK]]. Returns
+    * (q_id, rn, vec_id, sim_q). */
+  private def topSim(cand: DataFrame, k: Int): DataFrame =
+    Retrieval.heapTopK(cand, -cosineQNative(col("qv"), col("v")), k)
+      .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
+
   // q30: exact dedup, canonical = min doc_id per identical text ----------
 
   def q30(s: SparkSession, d: String): DataFrame =
@@ -123,32 +130,18 @@ object LlmQueries extends QueryPack {
   /** The LSH near-dup pair pipeline shared by q33 (pairs) and q68
     * (clusters): band join → candidates → exact Jaccard ≥ 0.5. */
   def neardupPairs(s: SparkSession, d: String): DataFrame = {
-    // Signature table: distinct shingle set + 4 minhashes + 2 band keys,
-    // computed ONCE and persisted — the md5-heavy stage would otherwise
-    // re-run for every downstream use (both band sides + both Jaccard
-    // sides). At 100 TB this is the "materialize the signature table"
-    // step of any LSH pipeline (a few hundred bytes/doc, not the corpus).
-    graft.GraftFunctions.ensure(s)
-    val base = docWords(s, d)
-      .select(col("doc_id"),
-        array_distinct(call_function("shingles3", col("ws"))).as("shs"))
-      .select(col("doc_id"), col("shs"),
-        call_function("minhash_sigs", col("shs")).as("sg"))
-      .select(col("doc_id"), col("shs"),
-        md5(concat(element_at(col("sg"), 1).cast("string"),
-          element_at(col("sg"), 2).cast("string"))).as("b0"),
-        md5(concat(element_at(col("sg"), 3).cast("string"),
-          element_at(col("sg"), 4).cast("string"))).as("b1"))
-      .persist()
-    val bands = base.select(col("doc_id"),
-      explode(array(col("b0"), col("b1"))).as("band"))
-    val okBands = bands.groupBy(col("band"))
-      .agg(count(lit(1)).as("bn")).filter(col("bn") <= BandCap)
-      .select(col("band"))
-    val cand = bands.join(okBands, Seq("band")).as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
+    // Signature table: distinct shingle set + 2 band keys, built by the
+    // one near-dup index (Streaming.buildNearDupIndex, BandCap applied)
+    // and persisted ONCE — the md5-heavy stage would otherwise re-run
+    // for every downstream use (both band sides + both Jaccard sides).
+    // At 100 TB this is the "materialize the signature table" step of
+    // any LSH pipeline (a few hundred bytes/doc, not the corpus).
+    val idx = graft.streaming.Streaming.buildNearDupIndex(
+      Tables.documents(s, d).select(col("doc_id"), col("text")), BandCap)
+    val base = idx.sigs.persist()
+    val cand = idx.bands.join(idx.okBands, Seq("band")).as("x")
+      .join(idx.bands.as("y"), col("x.band") === col("y.band") && col("x.a") < col("y.a"))
+      .select(col("x.a").as("a"), col("y.a").as("b")).distinct()
     // Exact Jaccard on the (few) candidates via array_intersect — no
     // shingle explode, no join-per-shingle, no re-aggregation.
     val out = cand
@@ -224,14 +217,9 @@ object LlmQueries extends QueryPack {
 
   def q35(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
+    topSim(e.join(broadcast(q), col("vec_id") =!= col("q_id")), 5)
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -247,17 +235,10 @@ object LlmQueries extends QueryPack {
 
   def q37(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
-      .withColumn("bucket", lshBucket(col("v")))
+    val e = Tables.vectors(s, d).withColumn("bucket", lshBucket(col("v")))
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket").as("qb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    e.join(broadcast(q), col("bucket") === col("qb") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
+    topSim(e.join(broadcast(q), col("bucket") === col("qb") && col("vec_id") =!= col("q_id")), 3)
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -271,18 +252,11 @@ object LlmQueries extends QueryPack {
     * needed; candidate cost is (bits+1)/2^bits of the corpus per query. */
   def q65(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
-      .withColumn("bucket", lshBucket(col("v")))
+    val e = Tables.vectors(s, d).withColumn("bucket", lshBucket(col("v")))
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         explode(multiProbe(col("bucket"))).as("qb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    e.join(broadcast(q), col("bucket") === col("qb") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
+    topSim(e.join(broadcast(q), col("bucket") === col("qb") && col("vec_id") =!= col("q_id")), 3)
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -290,16 +264,12 @@ object LlmQueries extends QueryPack {
 
   def q38(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d, "label")
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("label").as("true_label"), col("v").as("qv"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    val neigh = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("true_label"), col("vec_id"), col("label"),
-        cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 10)
+    val neigh = Retrieval.heapTopK(e.join(broadcast(q), col("vec_id") =!= col("q_id")),
+      -cosineQNative(col("qv"), col("v")), 10, Seq("true_label", "label"))
+    // the vote ranks labels by count, not vectors: a Window is the cut
     val wVote = Window.partitionBy(col("q_id")).orderBy(col("votes").desc, col("label"))
     neigh.groupBy(col("q_id"), col("true_label"), col("label"))
       .agg(count(lit(1)).as("votes"))
@@ -318,8 +288,7 @@ object LlmQueries extends QueryPack {
     * is the plan shape.) */
   def q39(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
       .withColumn("bucket", lshBucket(col("v")))
     e.as("x").join(e.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
@@ -349,7 +318,7 @@ object LlmQueries extends QueryPack {
     * per row. */
   def ivfAnn(s: SparkSession, d: String, cells: Int = 16, nprobe: Int = 2,
              k: Int = 3, nQueries: Int = 5): DataFrame = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     // first-`cells` vectors as the quantizer: a deterministic k-means
     // stand-in the oracle can reproduce; ivfSearch takes ANY centroid
     // set (OpsSpec drives it with real KMeans-trained centroids)
@@ -383,12 +352,7 @@ object LlmQueries extends QueryPack {
       .withColumn("cells", call_function("nearest_cells", col("v"), centsLit))
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         explode(array((1 to nprobe).map(cellId): _*)).as("qcell"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    asg.join(broadcast(qc), col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= k)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
+    topSim(asg.join(broadcast(qc), col("cell") === col("qcell") && col("vec_id") =!= col("q_id")), k)
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -409,7 +373,7 @@ object LlmQueries extends QueryPack {
     * there (round-2 gate failure) — and at 100 TB the int8 payload
     * would be a packed binary column anyway, not a list<int>. */
   def q66(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val rng = col("mx") - col("mn")
     val codes = when(rng === 0.0, transform(col("v"), _ => lit(0)))
       .otherwise(transform(col("v"),
@@ -447,7 +411,7 @@ object LlmQueries extends QueryPack {
     * nearest_cells calls per row against a 16×8 literal matrix,
     * primitive JVM loops. ADC broadcast-joins the small query set
     * against the encoded corpus — the corpus never shuffles before the
-    * WindowGroupLimit-pruned top-k, and at 100 TB the ADC scan reads 8
+    * bounded-heap top-k, and at 100 TB the ADC scan reads 8
     * code bytes per vector instead of the 256-byte float payload. */
   private[graft] val PqM = 8; private[graft] val PqDs = 8; private val PqK = 16
 
@@ -478,7 +442,7 @@ object LlmQueries extends QueryPack {
 
   def q118(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     pqEncode(e, pqCodebook(e))
       .select(col("vec_id"), array_join(col("codes"), ",").as("pq_csv"))
       .orderBy(col("vec_id"))
@@ -494,7 +458,7 @@ object LlmQueries extends QueryPack {
     * touches the base vectors. */
   def q119(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     val enc = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
     pqAdcSearch(enc, e, pqCodebook(e), nQueries = 5, k = 3)
@@ -525,11 +489,6 @@ object LlmQueries extends QueryPack {
     val cbLit = VectorOps.litArr2(cb)
     val adist = call_function("pq_adc_dist",
       col("qv"), col("codes"), cbLit, lit(PqDs))
-    // rank with the bounded-heap collector, not Window+row_number: the
-    // window form sorts |corpus|×|queries| rows in |queries| partitions
-    // (a |queries|-way parallelism ceiling AND a full sort of the
-    // fanout); the heap keeps k rows per (task, q_id) and only
-    // queries×k rows cross the shuffle — the q09 lesson applied to ANN
     Retrieval.heapTopK(enc.join(broadcast(q), col("vec_id") =!= col("q_id")),
         floor(adist * 10000).cast("long"), k)
       .select(col("q_id"), col("rn"), col("vec_id"), col("hk").as("adist_q"))
@@ -560,7 +519,7 @@ object LlmQueries extends QueryPack {
     * (candidates ≈ n·nprobe/cells, never n). */
   def q124(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     // Round 11: the (cell, residual-codes) pair comes from the
     // write-once annIndex layout — the ADC probe scans (vec_id, cell,
     // codes) only, never the embedding payload, and never re-encodes
@@ -658,26 +617,20 @@ object LlmQueries extends QueryPack {
     * Scale shape: the probe set is a broadcast literal-sized table, so
     * the brute-force side is one narrow corpus pass per rebuild (the
     * price of ground truth — paid for a SAMPLE of queries, never all);
-    * the ANN side touches only same-bucket rows. Both top-5 windows
-    * partition by q_id (bounded 10 keys × candidate rows); the final
+    * the ANN side touches only same-bucket rows. Both top-5 cuts are
+    * bounded heaps (10 keys × 5 rows cross the shuffle); the final
     * intersection joins two ≤50-row tables. */
   def q132(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
       .withColumn("bucket", lshBucket(col("v")))
       .persist() // feeds the brute-force side and the bucket side
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket").as("qb"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim_q").desc, col("vec_id"))
-    val gt = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+    val gt = topSim(e.join(broadcast(q), col("vec_id") =!= col("q_id")), 5)
       .select(col("q_id"), col("vec_id"))
-    val ann = e.join(broadcast(q),
-        col("bucket") === col("qb") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qv"), col("v")).as("sim_q"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
+    val ann = topSim(e.join(broadcast(q),
+        col("bucket") === col("qb") && col("vec_id") =!= col("q_id")), 5)
       .select(col("q_id"), col("vec_id"))
     val hits = gt.join(ann, Seq("q_id", "vec_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))

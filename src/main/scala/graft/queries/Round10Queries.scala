@@ -44,7 +44,7 @@ import graft.streaming.Artifacts
   */
 object Round10Queries extends QueryPack {
 
-  import VectorOps.{toD, cosineSql, cosineQNative}
+  import VectorOps.{cosineSql, cosineQNative}
   import Retrieval.heapTopK
 
   // q161: ORC sink+source fidelity under the oracle -----------------------
@@ -93,10 +93,6 @@ object Round10Queries extends QueryPack {
 
   // Shared retrieval fragments --------------------------------------------
 
-  /** Corpus with the float embedding cast to double once. */
-  private[queries] def corpus(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"), toD(col("embedding")).as("v"))
-
   /** The derived ANN index layout, written ONCE per fixture (the
     * ingest-time artifact the q162/q163 scaladocs promise): one narrow
     * parquet with `vec_id`, the two packed sign words (q163's 8-byte
@@ -124,8 +120,7 @@ object Round10Queries extends QueryPack {
     // (`manifest`: the build commits version 0 of the artifact)
     val ver = s"r16:pq=${LlmQueries.PqM}x${LlmQueries.PqDs}:cols=v3:manifest"
     val base = Round8Queries.ensureScratch(s, "annidx3", d, ver) { b =>
-      val e = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("label"), toD(col("embedding")).as("v"))
+      val e = Tables.vectors(s, d, "label")
       val vecs = e.select(col("vec_id"), col("v"))
       Artifacts.commit(s, Artifacts.annidx(s"$b/index"), "build")(_ => Some(Artifacts.Change(
         Seq("index" -> annIndexRows(e, LlmQueries.ivfCentroids(vecs), LlmQueries.pqCodebook(vecs))
@@ -282,7 +277,7 @@ object Round10Queries extends QueryPack {
     val short = heapTopK(cand, -col("psim"), MrlShort)
       .select(col("q_id"), col("vec_id"))
     // rerank: fetch shortlist vectors by id from the base table
-    val e = corpus(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     heapTopK(Retrieval.scoreById(e, q, "fsim")(short), -col("fsim"), MrlK)
@@ -320,7 +315,7 @@ object Round10Queries extends QueryPack {
       qIdx: DataFrame, nq: Int, shortlist: Int, k: Int): DataFrame = {
     val qs = qIdx.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val e = corpus(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     Retrieval.hammingRoute(cands, qs, e, q, shortlist, k)
@@ -381,7 +376,7 @@ object Round10Queries extends QueryPack {
 
   def q164(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = corpus(s, d)
+    val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < MsQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val cand = e.join(broadcast(q), col("vec_id") =!= col("q_id"))
@@ -407,8 +402,7 @@ object Round10Queries extends QueryPack {
     * semantics are identical. */
   def q165(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("label"), toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d, "label")
     val q = e.filter(col("vec_id") < HnQ)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"), col("v").as("qv"))
     val cand = e.join(broadcast(q),
@@ -440,11 +434,8 @@ object Round10Queries extends QueryPack {
     val fused = a.join(b, Seq("q_id", "vec_id"), "full_outer")
       .select(col("q_id"), col("vec_id"),
         (coalesce(col("ra"), lit(0L)) + coalesce(col("rb"), lit(0L))).as("rrf"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("rrf").desc, col("vec_id"))
-    fused.withColumn("rn", row_number().over(w))   // fused lists: ≤ 8×10 rows
-      .filter(col("rn") <= RrfK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("rrf"))
+    heapTopK(fused, -col("rrf"), RrfK)   // fused lists: ≤ 8×10 rows
+      .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("rrf"))
       .orderBy(col("q_id"), col("rn"))
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Retrieval, VectorOps}
 import graft.functions.Retrieval.topDistinct
-import graft.functions.VectorOps.{cosineQNative, toD}
+import graft.functions.VectorOps.cosineQNative
 import graft.plans.{EdgeSet, GraphWalk, WalkStage}
 import graft.streaming.Artifacts
 
@@ -195,8 +195,7 @@ object Round11Queries extends QueryPack {
     * exact brute force is pinned in Round11Spec. */
   def q168(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     knnGraphBuild(b, KgK, KgUnd, rounds = 1)
       .select(col("src").as("vec_id"), col("rn"), col("nb").as("nb_id"),
         col("sim").as("sim_bp"))
@@ -216,8 +215,7 @@ object Round11Queries extends QueryPack {
     * K=10 plateaued at 0.86 over any extra-round/cap budget). */
   def q169(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     knnGraphBuild(b, KiK, KiUnd, rounds = KiRounds)
       .filter(col("rn") <= KgK)
       .select(col("src").as("vec_id"), col("rn"), col("nb").as("nb_id"),
@@ -532,14 +530,7 @@ object Round11Queries extends QueryPack {
     // codegen and AQE off — each unique tiny plan would pay a Janino
     // compile / runtime re-plan to process ≤240 rows). Identical
     // verdicts; scoped to the gate only.
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled")
-      .map(k => k -> s.conf.get(k))
-    s.conf.set("spark.sql.shuffle.partitions", "1")
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try q177Body(s, d, standing)
-    finally saved.foreach { case (k, v) => s.conf.set(k, v) }
+    graft.util.Confs.scoped(s, Round14Queries.microPlan(1): _*)(q177Body(s, d, standing))
   }
 
   private def q177Body(s: SparkSession, d: String, standing: String): DataFrame = {
@@ -626,8 +617,7 @@ object Round11Queries extends QueryPack {
     // (`manifest`: the build commits version 0 of the artifact)
     Round8Queries.ensureScratch(s, "knngraph", d,
         s"r16:K=$KiK/${KiUnd}x$KiRounds:cap=$KgCap:manifest") { base =>
-      val b = Tables.embeddings(s, d)
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
+      val b = Tables.vectors(s, d)
       Artifacts.commit(s, Artifacts.knngraph(base), "build")(_ => Some(Artifacts.Change(Seq(
         "graph" -> knnGraphBuild(b, KiK, KiUnd, KiRounds)
           .select(col("src"), col("nb"), col("sim")).repartition(8),
@@ -667,8 +657,7 @@ object Round11Queries extends QueryPack {
   private def flatGraphSearch(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.GraftFunctions.ensure(s)
     val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     graphSearch(g.select(col("src"), col("nb")), lists, b,
       b.filter(col("vec_id") < GdQ)
         .select(col("vec_id").as("q_id"), col("v").as("qv")))
@@ -877,8 +866,7 @@ object Round11Queries extends QueryPack {
     * id tiebreaks, fixed hops — DuckDB replays the whole search. */
   def q176(s: SparkSession, d: String): DataFrame = {
     val frontier = pqSearch(s, d)
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // full precision only here: |Q|·PfRerank by-id fetches
@@ -899,8 +887,7 @@ object Round11Queries extends QueryPack {
     val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
     val codes = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     pqSearch(g, lists, codes, q, LlmQueries.pqCodebook(b))
@@ -942,8 +929,7 @@ object Round11Queries extends QueryPack {
     * candidate vectors attach ONCE and ride the loop checkpointed. */
   def q175(s: SparkSession, d: String): DataFrame = {
     val beam = flatGraphSearch(s, d)._1
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     // beam with candidate vectors attached once (≤ |Q|·beam rows)
     val cv = beam.join(b, Seq("vec_id"))
       .select(col("q_id"), col("vec_id"), col("sim"), col("v"))
@@ -1030,8 +1016,7 @@ object Round11Queries extends QueryPack {
     // recipe or graph width rebuilds the standing layers automatically
     Round8Queries.ensureScratch(s, "hnsw", d,
         s"r16:L=$HnL:K=$KgK/${KgUnd}x1") { base =>
-      val b = Tables.embeddings(s, d)
-        .select(col("vec_id"), toD(col("embedding")).as("v"))
+      val b = Tables.vectors(s, d)
       hnswLayers(b)
         .select(col("lvl"), col("src"), col("nb"))
         .repartition(4)
@@ -1100,8 +1085,7 @@ object Round11Queries extends QueryPack {
     val layers = s.read.parquet(s"$idxH/layers")
     // the corpus is read once, as the walk's broadcast vectors child —
     // resident for every hop the way a serving tier holds it in RAM
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     val q = b.filter(col("vec_id") < GdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     hnswSearch(layers, g0, b, q).orderBy(col("q_id"), col("rn"))
@@ -1161,8 +1145,7 @@ object Round11Queries extends QueryPack {
     * gate at every sf. */
   def q172(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id"), toD(col("embedding")).as("v"))
+    val b = Tables.vectors(s, d)
     val (g, executed) = knnGraphBuildCounted(b, KiK, KiUnd, AdRounds, AdDelta)
     // one verdict job instead of three (round 17): corpus size, node
     // coverage and per-node completeness come from a single outer join +

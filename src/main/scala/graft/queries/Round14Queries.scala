@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextOps
 import graft.streaming.{Artifacts, Streaming}
+import graft.util.Confs
 
 /** Round-14 additions: the composed CDC ingest loop promoted to the
   * oracle board (q178, the q177 discipline applied to
@@ -101,23 +102,20 @@ object Round14Queries extends QueryPack {
     // the round-15 ADVICE the right way round: the knobs are scoped to
     // slice-sized work — which the build now IS, at every sf — not to
     // whatever happens to run inside the gate's dynamic scope.
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled")
-      .map(k => k -> s.conf.get(k))
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try maintScratchBody(s, d, ver)
-    finally saved.foreach { case (k, v) => s.conf.set(k, v) }
+    Confs.scoped(s, microPlan(4): _*)(maintScratchBody(s, d, ver))
   }
+
+  /** The micro-plan confs of work over slice-sized frames: `parts`
+    * shuffle partitions, whole-stage codegen and AQE off. */
+  private[queries] def microPlan(parts: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> parts.toString,
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.adaptive.enabled" -> "false")
 
   private def maintScratchBody(s: SparkSession, d: String, ver: String): String =
     Round8Queries.ensureScratch(s, "maint", d, ver) { baseDir =>
-      val toD = (c: Column) => transform(c, _.cast("double"))
       val joined = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        .join(Tables.embeddings(s, d)
-            .select(col("vec_id"), col("label"), toD(col("embedding")).as("v")),
-          col("doc_id") === col("vec_id"))
+        .join(Tables.vectors(s, d, "label"), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("text"), col("label"), col("v"))
       val base = joined.filter(col("doc_id") < MaintSlice).localCheckpoint(true)
       base.repartition(1).write.parquet(s"$baseDir/base")
@@ -168,15 +166,9 @@ object Round14Queries extends QueryPack {
     // pays a Janino compile / a runtime re-plan to process a few
     // hundred rows — so both are off for the gate's scope (and ONLY
     // the gate's: the standing build above runs under its own knobs,
-    // round-15 ADVICE). All four knobs saved and restored; the fourth
-    // routes the stream's checkpoint log to the same ephemeral root.
-    val saved = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled")
-      .map(k => k -> s.conf.get(k))
-    val savedCkpt = s.conf.getOption("spark.sql.streaming.checkpointLocation")
-    s.conf.set("spark.sql.shuffle.partitions", "1")
-    s.conf.set("spark.sql.codegen.wholeStage", "false")
-    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // round-15 ADVICE). All four knobs are scoped to the gate; the
+    // fourth routes the stream's checkpoint log to the same ephemeral
+    // root.
     // the per-run mutable state is EPHEMERAL BY DESIGN (deleted in the
     // finally): a RAM-backed tmpfs is the right medium for it — the
     // loop's appends, tombstone sidecars, purge rewrites and the
@@ -190,14 +182,10 @@ object Round14Queries extends QueryPack {
         java.nio.file.Files.createTempDirectory(shm, "graft_q178")
       else java.nio.file.Files.createTempDirectory("graft_q178")
     val idxPath = tmpRoot.toString + "/annidx"
-    s.conf.set("spark.sql.streaming.checkpointLocation", tmpRoot.toString + "/ckpt")
-    try q178Gate(s, scratch, idxPath)
+    val confs = microPlan(1) :+
+      ("spark.sql.streaming.checkpointLocation" -> (tmpRoot.toString + "/ckpt"))
+    try Confs.scoped(s, confs: _*)(q178Gate(s, scratch, idxPath))
     finally { // the verdict frame is pure literals — the files can go
-      saved.foreach { case (k, v) => s.conf.set(k, v) }
-      savedCkpt match {
-        case Some(v) => s.conf.set("spark.sql.streaming.checkpointLocation", v)
-        case None => s.conf.unset("spark.sql.streaming.checkpointLocation")
-      }
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmpRoot).iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Retrieval.{hammingShortlist, heapTopK, scoreById}
-import graft.functions.VectorOps.{cosineQNative, cosineSql, toD}
+import graft.functions.VectorOps.{cosineQNative, cosineSql}
 
 /** Round-16 additions: retrieval-quality evaluation joins the ANN
   * family as a first-class pipeline pass — q183 grades a production
@@ -61,7 +61,7 @@ object Round16Queries extends QueryPack {
     val qs = sg.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
     val short = hammingShortlist(sg, qs, NdShort).select(col("q_id"), col("vec_id"))
-    val e = Round10Queries.corpus(s, d)
+    val e = graft.Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // system top-10: exact rerank of the shortlist (8×32 rows)

@@ -134,8 +134,7 @@ object Round4Queries extends QueryPack {
 
   def q87(s: SparkSession, d: String): DataFrame = {
     graft.GraftFunctions.ensure(s)
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
+    val e = Tables.vectors(s, d)
     // one count pass (parquet footer-stat cheap) sizes the quantizer;
     // first-`cells` vectors as the coarse centroids — the deterministic
     // k-means stand-in q57 uses (the oracle reproduces both the count

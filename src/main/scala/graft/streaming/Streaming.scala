@@ -361,8 +361,10 @@ object Streaming {
     * `duration_cap` (closed — the reason). */
   case class SessionSignal(user_id: Long, kind: String, n_events: Long, at_ms: Long)
 
-  private case class SessState(startMs: Long, lastMs: Long, n: Long)
-  private case class SessTimers(warnAt: Long, closeAt: Long, capAt: Long)
+  // State classes stay public: the generated projections of their
+  // `Encoders.product` state encoders must reach their constructors.
+  case class SessState(startMs: Long, lastMs: Long, n: Long)
+  case class SessTimers(warnAt: Long, closeAt: Long, capAt: Long)
 
   /** The multi-timer exemplar for Spark 4's `transformWithState`
     * (deepens the Spark-4 stateful surface beyond RunningCountProcessor's
@@ -482,7 +484,8 @@ object Streaming {
     * mode it is the delta since the previous pane (Beam DISCARDING). */
   case class PaneOut(user_id: Long, w_start_ms: Long, n: Long, pane: Int, timing: String)
 
-  private case class PaneSt(n: Long, emitted: Long, pane: Int, onTimeFired: Boolean)
+  // public for its state encoder's generated projection (see SessState)
+  case class PaneSt(n: Long, emitted: Long, pane: Int, onTimeFired: Boolean)
 
   /** Beam's `AfterWatermark.pastEndOfWindow().withEarlyFirings(...)
     * .withLateFirings(...)` + `allowed_lateness` + accumulation mode —
@@ -581,8 +584,9 @@ object Streaming {
   // ---- streaming LSH near-dup (Tier-L × streams) ------------------------
 
   /** Persisted LSH index over a bounded corpus — the static side of the
-    * streaming near-dup probe. Signature/band construction is exactly
-    * q112's (SimilarityQueries.scala): 3-shingles → minhash_sigs → two
+    * streaming near-dup probe, and the one owner of the MinHash band
+    * layout: q33/q68/q78/q130's pair pipeline and q112's probe build on
+    * it. Signatures: 3-shingles → minhash_sigs → two
     * 2-row bands; `okBands` drops degenerate buckets (band frequency >
     * cap) on the CORPUS side, where they live. At 100 TB this index is
     * the artifact an ingest pipeline maintains between drops — built

@@ -1,0 +1,18 @@
+package graft.util
+
+import org.apache.spark.sql.SparkSession
+
+/** Session confs scoped to one body of work. */
+object Confs {
+
+  /** Runs `body` with `pairs` set on the session, then gives each conf
+    * back its previous value, or unsets it if it had none. */
+  def scoped[T](s: SparkSession, pairs: (String, String)*)(body: => T): T = {
+    val saved = pairs.map { case (k, _) => k -> s.conf.getOption(k) }
+    pairs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+}

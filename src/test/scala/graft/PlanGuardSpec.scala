@@ -275,15 +275,38 @@ class PlanGuardSpec extends SparkSpec {
   // measured floor, so a future edit that reintroduces the slow shape
   // fails here instead of resurfacing as a silent 2-4x regression.
 
-  test("q09 floor: bounded-heap topk aggregate — no Window, no sort below the presentation ORDER BY") {
+  test("heap top-k: q09 and every vector top-k, no Window") {
+    // q132 ranks inside its eager checkpoint, so the checkpoint plans a
+    // query runs while it is built count as its plans too
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit =
+        if (f == "localCheckpoint") ran.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def plans(name: String): Seq[String] = {
+      ran.clear()
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution.executedPlan.toString
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      plan +: ran.toArray(Array.empty[String]).toSeq
+    }
+    try Seq("q09_topk_perkey", "q35_cosine_topk", "q37_ann_bucket_topk", "q57_ivf_ann",
+        "q65_ann_multiprobe", "q132_ann_recall_eval", "q163_hamming_ann",
+        "q166_rrf_fusion", "q167_filtered_ann").foreach { name =>
+      val ps = plans(name)
+      assert(ps.exists(_.contains("ObjectHashAggregate")),
+        s"$name: top-k must stay a collect_topk heap aggregate:\n${ps.mkString("\n")}")
+      assert(!ps.exists(_.contains("Window")),
+        s"$name: no Window+row_number pass may reappear:\n${ps.mkString("\n")}")
+    } finally spark.listenerManager.unregister(listener)
+    // q09's floor: no sort below the presentation ORDER BY
     val plan = SparkEntry.queries("q09_topk_perkey")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"),
-      s"top-k must stay a collect_topk heap aggregate:\n$plan")
     assert(plan.contains("Generate"),
       s"explode of the k-row heaps must be a builtin generator:\n$plan")
-    assert(!plan.contains("Window"),
-      s"no Window+row_number pass may reappear:\n$plan")
     // exactly 2 exchanges: the per-key aggregate shuffle (≤k rows per
     // key cross it) and the presentation range ORDER BY
     val exchanges = "Exchange ".r.findAllIn(plan).size
@@ -348,21 +371,13 @@ class PlanGuardSpec extends SparkSpec {
     // at fixture scale the planner broadcasts the small side (also
     // exchange-free); force the large-large shape to prove the bucket
     // distribution carries BOTH the join and the per-order rollup
-    val saved = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = SparkEntry.queries("q148_bucketed_join")(spark, sf("sf0.001"))
         .queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"),
         s"bucketed-bucketed must sort-merge on the bucket distribution:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning"),
         s"neither the join nor the o_orderkey rollup may shuffle (bucket layout paid it at write):\n$plan")
-    } finally saved match {
-      // restore the ORIGINAL value, not a hardcoded default (the
-      // round-8 AnsiParitySpec lesson): a drifted restore skews every
-      // later suite's plans
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None    => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

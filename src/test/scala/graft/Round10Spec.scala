@@ -251,6 +251,29 @@ class Round10Spec extends SparkSpec {
     }
   }
 
+  // --- Retrieval.heapTopK ----------------------------------------------------
+
+  test("heapTopK with tied scores and carried columns equals the Window ranking row for row") {
+    // 3 queries × 600 candidates over 4 partitions, in permuted vec_id
+    // order; 7 distinct scores, so every cut falls inside a tie that only
+    // vec_id breaks
+    val cand = spark.range(0, 1800, 1, 4).select(
+      (col("id") % 3).as("q_id"), (col("id") * 7919 % 1800).as("vec_id"),
+      (col("id") * 31 % 7).as("score"), (col("id") % 5).cast("int").as("label"),
+      concat(lit("t"), col("id").cast("string")).as("tag"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("q_id")).orderBy(col("score").desc, col("vec_id"))
+    val want = cand.withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
+      .select("q_id", "rn", "vec_id", "label", "tag", "score")
+      .orderBy("q_id", "rn").collect().toSeq
+    val got = graft.functions.Retrieval.heapTopK(cand, -col("score"), 10, Seq("label", "tag"))
+      .select(col("q_id"), col("rn"), col("vec_id"), col("label"), col("tag"),
+        (-col("hk")).as("score"))
+      .orderBy("q_id", "rn").collect().toSeq
+    assert(want.size == 30)
+    assert(got == want)
+  }
+
   // --- q164 MaxSim properties ----------------------------------------------
 
   test("maxsim self-score is 8 sub-vectors at ~1.0 cosine; pair scores match a local reference") {

@@ -67,9 +67,7 @@ class ScaleSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       // 100k-row left side, ~99% on key 0; 1k-key right side
       val left = spark.range(100000)
         .select(when(col("id") % 100 === 0, col("id")).otherwise(lit(0L)).as("k"),
@@ -86,9 +84,6 @@ class ScaleSpec extends SparkSpec {
       // correctness under the split: matches = hot key 0 rows (99 001:
       // every id not divisible by 100, plus id=0) + ids 100..900 step 100
       assert(n == 99001L + 9L, s"skew-split join changed the row count: $n")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -106,7 +101,6 @@ class ScaleSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     def revenueByPriority(): (String, Map[String, Double]) = {
       val ord = Tables.orders(spark, sf("sf0.001"))
         .filter(col("o_totalprice") > 200000.0)           // selective dim filter
@@ -119,8 +113,7 @@ class ScaleSpec extends SparkSpec {
       val rows = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       (df.queryExecution.executedPlan.toString, rows)
     }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(confs: _*) {
       val (plan, withBloom) = revenueByPriority()
       assert(plan.contains("might_contain"),
         s"expected a runtime bloom filter on the fact scan side:\n$plan")
@@ -128,9 +121,6 @@ class ScaleSpec extends SparkSpec {
       val (_, plain) = revenueByPriority()
       assert(withBloom == plain, "bloom-filtered join changed the result")
       assert(withBloom.nonEmpty)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -12,14 +12,8 @@ trait SparkSpec extends AnyFunSuite {
     * ORIGINAL values (not assumed defaults) afterwards — the round-8
     * lesson: a hardcoded "restore" leaves the shared session wrong if
     * the default ever differs, and later suites' plans drift. */
-  def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withConf[T](pairs: (String, String)*)(body: => T): T =
+    graft.util.Confs.scoped(spark, pairs: _*)(body)
 }
 
 object SparkSpec {

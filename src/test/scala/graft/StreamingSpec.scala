@@ -28,6 +28,13 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  private val stateStoreRocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Generated code only: a projection that fails to compile raises
+    * instead of falling back to interpreted evaluation. */
+  private val codegenOnly = "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"
+
   private val rows = Seq(
     Ev(1, ts(1, 1), 10, "click", 1.0),
     Ev(2, ts(1, 5), 11, "view", 2.0),
@@ -292,10 +299,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     // transformWithState requires the RocksDB state store provider
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(stateStoreRocksDb) {
       val mem = MemoryStream[Ev]
       val q = Streaming.runningCountsTws(mem.toDS())
         .writeStream.format("memory").queryName("t_tws")
@@ -309,21 +313,13 @@ class StreamingSpec extends SparkSpec {
         .groupBy("user_id").agg(max("n").as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(finalCounts == Map(10L -> 3L, 11L -> 2L)) // same as t_state totals
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("multi-timer session monitor: idle warning, inactivity close, duration cap") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(stateStoreRocksDb, codegenOnly) {
       def ev(uid: Long, ms: Long) =
         Streaming.Ev(ms, new java.sql.Timestamp(ms), uid, "click", 1.0)
       val mem = MemoryStream[Streaming.Ev]
@@ -349,11 +345,6 @@ class StreamingSpec extends SparkSpec {
         (10L, "idle_warning", 2L, 8000L),
         (10L, "inactivity", 2L, 13000L),
         (11L, "duration_cap", 9L, 61000L)), s"got: $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -365,10 +356,7 @@ class StreamingSpec extends SparkSpec {
     // watermark (maxEv) passes the window end, then one late event
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(stateStoreRocksDb, codegenOnly) {
       def ev(uid: Long, ms: Long) =
         Streaming.Ev(ms, new java.sql.Timestamp(ms), uid, "click", 1.0)
       def run(accumulating: Boolean, name: String): Seq[(Long, Int, String)] = {
@@ -400,11 +388,6 @@ class StreamingSpec extends SparkSpec {
         (2L, 0, "EARLY"), (3L, 1, "EARLY"), (3L, 2, "ON_TIME"), (4L, 3, "LATE")))
       assert(run(accumulating = false, "t_panes_disc") == Seq(
         (2L, 0, "EARLY"), (1L, 1, "EARLY"), (0L, 2, "ON_TIME"), (1L, 3, "LATE")))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -415,10 +398,7 @@ class StreamingSpec extends SparkSpec {
     // would read 3, not restart at 1.
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(stateStoreRocksDb) {
       def ev(ms: Long) = Streaming.Ev(ms, new java.sql.Timestamp(ms), 5L, "click", 1.0)
       // processing-time mode never signals "no new data", so
       // processAllAvailable would block forever — poll the sink instead
@@ -441,11 +421,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.getLong(1)).toSet
       assert(!ns.contains(3L), s"TTL failed to evict (count continued): $ns")
       assert(ns == Set(2L, 1L), s"expected restart after TTL eviction, got $ns")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -457,10 +432,7 @@ class StreamingSpec extends SparkSpec {
     // silently lost (session closed as "inactivity" at the wrong time).
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(stateStoreRocksDb) {
       def ev(uid: Long, ms: Long) =
         Streaming.Ev(ms, new java.sql.Timestamp(ms), uid, "click", 1.0)
       val mem = MemoryStream[Streaming.Ev]
@@ -482,11 +454,6 @@ class StreamingSpec extends SparkSpec {
         .filter(col("user_id") === 30L && col("kind") =!= "idle_warning")
         .collect().map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSet
       assert(closes == Set(("duration_cap", 9L, 75000L)), s"got: $closes")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
