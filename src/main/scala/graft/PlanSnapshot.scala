@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   * only, with the exchange partitioning kind and scan source kept
   * (those are the scale-relevant facts), and every expression id,
   * partition count, path, and codegen annotation stripped (those churn
-  * without meaning). Plans are snapshotted at sf0.001 under the SAME
-  * session config the test suite uses (local[4], 4 shuffle
-  * partitions), so the spec's comparison is bit-stable.
+  * without meaning). Plans are snapshotted at sf0.001 on the session
+  * the test suite builds too ([[graft.util.Confs.graft]] of [[Cores]]),
+  * so the spec's comparison is bit-stable.
   *
   * Regenerate: `sbt 'runMain graft.PlanSnapshot'` (writes the golden
   * file in place; commit the diff alongside the query change).
@@ -26,6 +26,7 @@ import org.apache.spark.sql.SparkSession
 object PlanSnapshot {
 
   val GoldenPath = "src/test/resources/plan_golden.txt"
+  val Cores = 4
   val SfDir = "/root/testdata/sf0.001"
 
   /** One canonical line per plan operator: two-space indent per tree
@@ -69,7 +70,7 @@ object PlanSnapshot {
 
   def render(spark: SparkSession, names: Seq[String]): String = {
     val sb = new StringBuilder
-    sb.append("# Golden plan skeletons (sf0.001, local[4], shuffle.partitions=4).\n")
+    sb.append(s"# Golden plan skeletons (sf0.001, local[$Cores], shuffle.partitions=$Cores).\n")
     sb.append("# Regenerate with: sbt 'runMain graft.PlanSnapshot'\n")
     names.foreach { n =>
       sb.append(s"== $n\n")
@@ -85,12 +86,7 @@ object PlanSnapshot {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Confs.graft(Cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val out = render(spark, SparkEntry.queries.keys.toSeq.sorted)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("src/test/resources"))

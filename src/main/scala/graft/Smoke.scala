@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local stand-in for the driver's t1 smoke: entry(spark) on sf0.001
   * must return rows > 0. Prints one status line. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.util.Confs.graft(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"SMOKE entry rows=$n queries=${SparkEntry.queries.size} oracle=${SparkEntry.oracleSql.size} ${if (n > 0) "OK" else "FAIL"}")

@@ -12,11 +12,14 @@ import org.apache.spark.sql.functions._
   * layer schedule.
   *
   * [[heapTopK]] is the engine's only per-query vector ranking: the
-  * brute-force, bucket, IVF and PQ searches, the Hamming rerank and rank
-  * fusion all cut their candidates through it, never a Window. Every
-  * rank is integer-keyed with a vec_id tiebreak, so each cut is
-  * bit-deterministic and the DuckDB oracles replay it exactly. Inputs
-  * are `q_id`-keyed candidate rows; only |queries|·k rows ever cross a
+  * brute-force, bucket, IVF and PQ searches, the Hamming rerank, rank
+  * fusion and q175's MMR argmax all cut their candidates through it,
+  * never a Window. [[topDistinct]] is the one heap over candidates that
+  * repeat: the graph searches' final cuts and every per-node neighbor
+  * list of the kNN-graph family (seed, descent rounds, appends,
+  * compaction, the mutual-edge cut). Every rank is integer-keyed with
+  * an id tiebreak, so each cut is bit-deterministic and the DuckDB
+  * oracles replay it exactly. Only |groups|·k rows ever cross a
   * shuffle. */
 object Retrieval {
 
@@ -51,18 +54,21 @@ object Retrieval {
         col("s.hk").as("hk")) ++ carry.map(c => col(s"s.$c").as(c)): _*)
   }
 
-  /** [[heapTopK]] over (q_id, vec_id, `score`) rows that may repeat — a
-    * beam frontier unioned with its rescored expansion — keeping each
-    * (score, vec_id) once. Ranks by `score` desc (similarities) or asc
-    * (distances), vec_id asc. Returns (q_id, rn, vec_id, `score`). */
-  def topDistinct(cand: DataFrame, score: String, k: Int, desc: Boolean = true): DataFrame = {
+  /** [[heapTopK]] over (`group`, `id`, `score`) rows that may repeat — a
+    * beam frontier unioned with its rescored expansion, or an edge list
+    * unioned with its reverse and its composition — keeping each
+    * (score, id) once. Ranks by `score` desc (similarities) or asc
+    * (distances), `id` asc: per query q_id/vec_id, per graph node
+    * src/nb. Returns (`group`, rn, `id`, `score`). */
+  def topDistinct(cand: DataFrame, score: String, k: Int, desc: Boolean = true,
+                  group: String = "q_id", id: String = "vec_id"): DataFrame = {
     def key(c: Column): Column = if (desc) -c else c
-    cand.groupBy(col("q_id"))
+    cand.groupBy(col(group))
       .agg(call_function("collect_topk_distinct",
-        struct(key(col(score)).as("hk"), col("vec_id")), lit(k), lit(true)).as("t"))
-      .select(col("q_id"), posexplode(col("t")).as(Seq("p", "e")))
-      .select(col("q_id"), (col("p") + 1).as("rn"),
-        col("e.vec_id").as("vec_id"), key(col("e.hk")).as(score))
+        struct(key(col(score)).as("hk"), col(id)), lit(k), lit(true)).as("t"))
+      .select(col(group), posexplode(col("t")).as(Seq("p", "e")))
+      .select(col(group), (col("p") + 1).as("rn"),
+        col(s"e.$id").as(id), key(col("e.hk")).as(score))
   }
 
   /** Stage 1 of the Hamming route: bit_count(xor) over the two packed

@@ -210,11 +210,8 @@ object Round10Queries extends QueryPack {
     * EXACTLY the rows a from-scratch rebuild without the deleted vectors
     * would hold (same model ⇒ same surviving rows — pinned in
     * StreamingSpec). */
-  private[graft] def readAnnIndex(s: SparkSession, idxPath: String): DataFrame = {
-    val m = Artifacts.snapshot(s, Artifacts.annidx(idxPath))
-    val idx = m.read(s, "index")
-    m.tombstones(s).fold(idx)(dels => idx.join(dels, Seq("vec_id"), "left_anti"))
-  }
+  private[graft] def readAnnIndex(s: SparkSession, idxPath: String): DataFrame =
+    Artifacts.snapshot(s, Artifacts.annidx(idxPath)).live(s, "index", "vec_id")
 
   /** Physical delete: rewrite ONLY the part files that still hold a
     * tombstoned row (found by a vec_id-pruned scan + broadcast semi

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Retrieval, VectorOps}
-import graft.functions.Retrieval.topDistinct
+import graft.functions.Retrieval.{heapTopK, topDistinct}
 import graft.functions.VectorOps.cosineQNative
 import graft.plans.{EdgeSet, GraphWalk, WalkStage}
 import graft.streaming.Artifacts
@@ -51,16 +51,30 @@ object Round11Queries extends QueryPack {
   private def entryKey(t: Column, bk: Column): Column =
     (t * lit(1 << KgBits) + bk).cast("long")
 
-  /** Per-(table, bucket) candidate lists capped at [[KgCap]] in
-    * (md5(id), id) order — the cap is what keeps candidate generation
-    * LINEAR: ≤ tables·cap pairs per node, never Σ|bucket|². */
-  private[graft] def cappedBuckets(memb: DataFrame): DataFrame = {
+  /** The capped per-(table, bucket) candidate lists of a membership
+    * pass: (t, bk, nb, nv). */
+  private[graft] def cappedBuckets(memb: DataFrame): DataFrame =
+    capLists(memb.select(col("t"), col("bk"), col("vec_id").as("nb"), col("v").as("nv")))
+
+  /** Bucket lists (t, bk, nb, …) capped at [[KgCap]] per (table, bucket)
+    * in (md5(nb), nb) order — the cap is what keeps candidate generation
+    * LINEAR: ≤ tables·cap pairs per node, never Σ|bucket|². The build
+    * and [[compactKnnGraphIndex]] cut with this one cap, which plans as
+    * a map-side `WindowGroupLimit`. */
+  private def capLists(lists: DataFrame): DataFrame = {
     val wCap = org.apache.spark.sql.expressions.Window
       .partitionBy(col("t"), col("bk"))
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    memb.withColumn("br", row_number().over(wCap))
+      .orderBy(md5(col("nb").cast("string")), col("nb"))
+    lists.withColumn("br", row_number().over(wCap))
       .filter(col("br") <= KgCap)
-      .select(col("t"), col("bk"), col("vec_id").as("nb"), col("v").as("nv"))
+      .drop("br")
+  }
+
+  /** (src, nb, sim) edges plus their reverses — cosine is symmetric, so
+    * a reverse edge costs no scoring. */
+  private def undirected(g: DataFrame): DataFrame = {
+    val e = g.select(col("src"), col("nb"), col("sim"))
+    e.union(e.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
   }
 
   /** The LSH-seeded top-[[kInt]] graph: every node's best `kInt`
@@ -71,16 +85,19 @@ object Round11Queries extends QueryPack {
     * sf100, the measured single-box killer). */
   private[graft] def seedGraph(b: DataFrame, kInt: Int): DataFrame = {
     val memb = bucketMembership(b)
-    val capped = cappedBuckets(memb)
-    // pairs leave the join as (src, nb, sim) — 24 narrow bytes; the
-    // same (src, nb) from two tables carries the same sim, so the
-    // cross-table dedup folds into topK's distinct heap
-    val seedCand = memb.select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
+    // the same (src, nb) from two tables carries the same sim, so the
+    // cross-table dedup folds into the distinct heap
+    topDistinct(bucketPairs(memb, cappedBuckets(memb)), "sim", kInt, group = "src", id = "nb")
+  }
+
+  /** Each membership row (vec_id, v, t, bk) paired with the `capped`
+    * lists (t, bk, nb, nv) of its bucket, self dropped, and scored
+    * INSIDE the join: pairs leave it as (src, nb, sim), 24 narrow bytes. */
+  private def bucketPairs(memb: DataFrame, capped: DataFrame): DataFrame =
+    memb.select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
       .join(capped, Seq("t", "bk"))
       .filter(col("src") =!= col("nb"))
       .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
-    topK(seedCand, kInt)
-  }
 
   /** One NN-descent round (Dong, Moses & Li 2011): the improved graph is
     * the top-[[kInt]] of `und(g) ∪ compose(undc(g))` where `und` is the
@@ -108,9 +125,8 @@ object Round11Queries extends QueryPack {
     * known, so they cost nothing to keep. */
   private[graft] def descentRound(g: DataFrame, b: DataFrame,
                                   kInt: Int, undCap: Int): DataFrame = {
-    val undS = g.select(col("src"), col("nb"), col("sim"))
-      .union(g.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
-    val undC = topK(undS, undCap)
+    val undS = undirected(g)
+    val undC = topDistinct(undS, "sim", undCap, group = "src", id = "nb")
       .select(col("src"), col("nb"), col("sim"))
     val u1 = undC.select(col("src"), col("nb").as("mid"))
       .join(b.select(col("vec_id").as("src"), col("v").as("sv")), Seq("src"))
@@ -119,7 +135,7 @@ object Round11Queries extends QueryPack {
     val composeS = u1.join(u2, Seq("mid"))
       .filter(col("nb") =!= col("src"))
       .select(col("src"), col("nb"), cosineQNative(col("sv"), col("nv")).as("sim"))
-    topK(undS.union(composeS), kInt)
+    topDistinct(undS.union(composeS), "sim", kInt, group = "src", id = "nb")
   }
 
   /** The full builder: LSH seed + `rounds` NN-descent rounds, internal
@@ -179,7 +195,7 @@ object Round11Queries extends QueryPack {
       g = next
       r += 1
     }
-    (topK(g, kInt), r)
+    (topDistinct(g, "sim", kInt, group = "src", id = "nb"), r)
   }
 
   /** q168: build the k-nearest-neighbor GRAPH of the whole corpus —
@@ -262,25 +278,20 @@ object Round11Queries extends QueryPack {
     // artifact — same builder, same recipe constants (KiK/KiUnd/KiRounds,
     // marker-versioned), built by ingest exactly as q171/q173 serve it.
     // Re-deriving the top-[[KgK]] cut from the persisted KiK-wide lists
-    // is exact: the artifact rows are knnGraphBuild's topK output, and
-    // a bounded topK over a per-src superset list with the same
+    // is exact: the artifact rows are knnGraphBuild's heap output, and
+    // a bounded heap over a per-src superset list with the same
     // (sim desc, nb asc) order returns the identical top-KgK rows the
     // old `filter(rn <= KgK)` kept. Output is bit-identical (descent is
     // deterministic end-to-end; oracle replays the build), but q170 no
     // longer re-runs the O(n·K²) build the suite already owns on disk.
-    val idx = knnGraphIndex(s, d)
-    val g = topK(readKnnGraphIndex(s, idx)._1
-        .select(col("src"), col("nb"), col("sim")), KgK)
-      .select(col("src"), col("nb"), col("sim"))
-    val mutual = mutualEdges(g)
+    val mutual = mutualTop(readKnnGraphIndex(s, knnGraphIndex(s, d))._1)
     // exact percentile is safe ONLY because sims are integer bp in
     // [-10000, 10000]: Spark's percentile agg keeps one counter per
     // DISTINCT value, so its state is histogram-bounded at ≤ 20001
     // entries regardless of corpus size (the q129 discipline) — a
     // float-sim refactor would silently make this state corpus-sized
     // and must switch to approx_percentile/t-digest
-    val thr = mutual.agg(
-      floor(expr("percentile(sim, 0.9D)")).cast("long").as("thr"))
+    val thr = mutual.agg(p90Sim.as("thr"))
     val edges = mutual.crossJoin(broadcast(thr))
       .filter(col("sim") >= col("thr"))
       .select(col("src"), col("nb"))
@@ -321,6 +332,20 @@ object Round11Queries extends QueryPack {
       .filter(col("fwd") === 1 && col("rev") === 1)
       .select(col("src"), col("nb"), col("sim"))
 
+  /** [[mutualEdges]] of each node's top-[[KgK]] list of a (src, nb, sim)
+    * graph of any width. */
+  private def mutualTop(g: DataFrame): DataFrame =
+    mutualEdges(topDistinct(g, "sim", KgK, group = "src", id = "nb")
+      .select(col("src"), col("nb"), col("sim")))
+
+  /** The cluster edges (src, nb): [[mutualTop]] pairs at or above the
+    * frozen threshold `thrBp`. */
+  private def mutualCut(g: DataFrame, thrBp: Long): DataFrame =
+    mutualTop(g).filter(col("sim") >= lit(thrBp)).select(col("src"), col("nb"))
+
+  /** The p90 of integer-bp `sim`, floor-quantized to a long. */
+  private def p90Sim: Column = floor(expr("percentile(sim, 0.9D)")).cast("long")
+
   /** The q170 emit: ids + component labels → (vec_id, cluster_id, kept,
     * split). Everything is a pure function of the component map —
     * min-id representative survives, split = md5 bucket of the cluster
@@ -347,21 +372,15 @@ object Round11Queries extends QueryPack {
     * percentile state is histogram-bounded (integer bp, the q170/q129
     * discipline); one scalar reaches the driver. */
   def clusterThreshold(g: DataFrame): Long =
-    mutualEdges(topK(g, KgK).select(col("src"), col("nb"), col("sim")))
-      .agg(floor(expr("percentile(sim, 0.9D)")).cast("long").as("t"))
-      .collect()(0).getLong(0)
+    mutualTop(g).agg(p90Sim.as("t")).collect()(0).getLong(0)
 
   /** Build the cluster map from a (src, nb, sim) graph (any width — the
     * top-[[KgK]] cut happens here) with a FROZEN threshold: the
     * ingest-time form of q170, whose oracle query instead derives the
     * threshold in-flight so SQL can replay it. */
-  def clusterMap(ids: DataFrame, g: DataFrame, thrBp: Long): DataFrame = {
-    val edges = mutualEdges(topK(g, KgK).select(col("src"), col("nb"), col("sim")))
-      .filter(col("sim") >= lit(thrBp))
-      .select(col("src"), col("nb"))
-    clusterDecision(ids, graft.functions.Graph.connectedComponents(edges)
+  def clusterMap(ids: DataFrame, g: DataFrame, thrBp: Long): DataFrame =
+    clusterDecision(ids, graft.functions.Graph.connectedComponents(mutualCut(g, thrBp))
       .select(col("id").as("vec_id"), col("label")))
-  }
 
   /** Incremental cluster maintenance — the q170 analogue of the band
     * index / annidx3 / kNN-graph appends, closing the LAST maintenance
@@ -381,13 +400,9 @@ object Round11Queries extends QueryPack {
     * append already paid for the geometry. */
   def appendToClusters(clusters: DataFrame, g: DataFrame, dropIds: DataFrame,
                        thrBp: Long): DataFrame = {
-    val gTop = topK(g, KgK).select(col("src"), col("nb"), col("sim"))
-    val newMutual = mutualEdges(gTop)
-      .filter(col("sim") >= lit(thrBp))
-      .select(col("src"), col("nb"))
     val star = clusters.filter(col("vec_id") =!= col("cluster_id"))
       .select(col("cluster_id").as("src"), col("vec_id").as("nb"))
-    val cc = graft.functions.Graph.connectedComponents(star.unionByName(newMutual))
+    val cc = graft.functions.Graph.connectedComponents(star.unionByName(mutualCut(g, thrBp)))
       .select(col("id").as("vec_id"), col("label"))
     val ids = clusters.select(col("vec_id"))
       .unionByName(dropIds.select(col("vec_id"))).distinct()
@@ -433,15 +448,9 @@ object Round11Queries extends QueryPack {
   def appendToKnnGraph(g: DataFrame, bOld: DataFrame, drop: DataFrame,
                        kInt: Int, undCap: Int): DataFrame = {
     val bAll = bOld.unionByName(drop)
-    val capped = cappedBuckets(bucketMembership(bAll))
-    val membDrop = bucketMembership(drop)
-      .select(col("vec_id").as("src"), col("v"), col("t"), col("bk"))
-    val dropE = membDrop.join(capped, Seq("t", "bk"))
-      .filter(col("src") =!= col("nb"))
-      .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
+    val dropE = bucketPairs(bucketMembership(drop), cappedBuckets(bucketMembership(bAll)))
     val merged = g.select(col("src"), col("nb"), col("sim"))
-      .union(dropE)
-      .union(dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim")))
+      .union(undirected(dropE))
       .localCheckpoint(false)
     descentRound(merged, bAll, kInt, undCap)
   }
@@ -461,34 +470,18 @@ object Round11Queries extends QueryPack {
   def deleteFromKnnGraph(g: DataFrame, b: DataFrame, delIds: DataFrame,
                          kInt: Int, undCap: Int): DataFrame = {
     val del = broadcast(delIds.select(col("vec_id")).distinct())
-    val bLeft = b.join(del, Seq("vec_id"), "left_anti")
-    val gLeft = g.select(col("src"), col("nb"), col("sim"))
-      .join(del.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      .join(del.select(col("vec_id").as("nb")), Seq("nb"), "left_anti")
-      .select(col("src"), col("nb"), col("sim"))
+    val gLeft = Artifacts.withoutIds(g.select(col("src"), col("nb"), col("sim")), del, "src", "nb")
       .localCheckpoint(false)
-    descentRound(gLeft, bLeft, kInt, undCap)
+    descentRound(gLeft, Artifacts.withoutIds(b, del, "vec_id"), kInt, undCap)
   }
 
-  /** [[deleteFromKnnGraph]] lifted to the HNSW layer stack, mirroring
-    * [[appendToHnsw]]: the deepest deleted level is one bounded scalar
-    * aggregate, layers above it are untouched by construction, each
-    * touched layer repairs its promoted slice with the L0 recipe. */
-  def deleteFromHnsw(layers: DataFrame, b: DataFrame, delIds: DataFrame): DataFrame = {
-    val maxL = delIds.agg(max(maxLvl(col("vec_id"))).as("m"))
-      .collect()(0).getAs[Number](0).intValue()
-    val touched = (1 to maxL).map { l =>
-      def inL(df: DataFrame): DataFrame =
-        df.filter(lvlHash(col("vec_id")) % lit(lvlMod(l)) === 0)
-      deleteFromKnnGraph(
-          layers.filter(col("lvl") === l).select(col("src"), col("nb"), col("sim")),
-          inL(b), inL(delIds), KgK, KgUnd)
-        .select(lit(l).as("lvl"), col("src"), col("nb"), col("sim"))
+  /** [[deleteFromKnnGraph]] lifted to the HNSW layer stack by
+    * [[liftToLayers]], mirroring [[appendToHnsw]]: each touched layer
+    * repairs its promoted slice with the L0 recipe. */
+  def deleteFromHnsw(layers: DataFrame, b: DataFrame, delIds: DataFrame): DataFrame =
+    liftToLayers(layers, delIds) { (g, inL) =>
+      deleteFromKnnGraph(g, inL(b), inL(delIds), KgK, KgUnd)
     }
-    val untouched = layers.filter(col("lvl") > maxL)
-      .select(col("lvl"), col("src"), col("nb"), col("sim"))
-    touched.foldLeft(untouched)(_ unionByName _)
-  }
 
   /** q177: the cluster-maintenance invariants under the hash gate — the
     * q172 assertion discipline extended to the stateful maintenance
@@ -571,10 +564,7 @@ object Round11Queries extends QueryPack {
     // incremental cluster" ⟺ "no single rebuild edge crosses a c1
     // boundary" (along any rebuild path some edge would cross) — two
     // narrow joins instead of a clusterMap + CC pass
-    val eR = mutualEdges(topK(gNew, KgK).select(col("src"), col("nb"), col("sim")))
-      .filter(col("sim") >= lit(thr))
-      .select(col("src"), col("nb"))
-    val refBad = eR
+    val refBad = mutualCut(gNew, thr)
       .join(c1.select(col("vec_id").as("src"), col("cluster_id").as("ca")), Seq("src"))
       .join(c1.select(col("vec_id").as("nb"), col("cluster_id").as("cb")), Seq("nb"))
       .filter(col("ca") =!= col("cb"))
@@ -606,11 +596,14 @@ object Round11Queries extends QueryPack {
     * search's entry points. Both are id-narrow — the graph is n·K
     * 24-byte edges, the bucket table n·tables (t, bk, id) rows; vectors
     * stay in the BASE table and are fetched by id at scoring time, so
-    * the artifact never duplicates the corpus payload. The index
+    * the artifact never duplicates the corpus payload. The on-disk
     * lifecycle is [[knnGraphBuild]] (build) + [[appendToKnnGraphIndex]]
-    * (ingest) + [[deleteFromKnnGraphIndex]] + [[compactKnnGraphIndex]]
-    * (the shared [[graft.streaming.Artifacts]] protocol) — q171 is the
-    * serve side of that same artifact. */
+    * (the bucket-list delta append) + [[deleteFromKnnGraphIndex]] +
+    * [[compactKnnGraphIndex]] (the shared [[graft.streaming.Artifacts]]
+    * protocol) — q171 is the serve side of that same artifact. The
+    * streaming ingest loop does not write it: `ingestLoop` keeps its own
+    * in-memory graph through [[appendToKnnGraph]] and
+    * [[deleteFromKnnGraph]]. */
   private[graft] def knnGraphIndex(s: SparkSession, d: String): String =
     // recipe version in the marker (round-15 ADVICE): descent params or
     // bucket caps changing rebuilds the serving graph automatically
@@ -645,9 +638,7 @@ object Round11Queries extends QueryPack {
     * ≥ 0.9 vs exact brute force is pinned in Round11Spec — above
     * q163's 32-deep Hamming shortlist on the same queries. */
   def q171(s: SparkSession, d: String): DataFrame =
-    topDistinct(flatGraphSearch(s, d)._1, "sim", GdK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
-      .orderBy(col("q_id"), col("rn"))
+    topGdK(flatGraphSearch(s, d)._1).orderBy(col("q_id"), col("rn"))
 
   /** q171's search, also returning the full SCORED multiset — every
     * (q_id, vec_id, sim) the traversal evaluated (entry probe + all hop
@@ -658,10 +649,19 @@ object Round11Queries extends QueryPack {
     graft.GraftFunctions.ensure(s)
     val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
     val b = Tables.vectors(s, d)
-    graphSearch(g.select(col("src"), col("nb")), lists, b,
-      b.filter(col("vec_id") < GdQ)
-        .select(col("vec_id").as("q_id"), col("v").as("qv")))
+    graphSearch(g.select(col("src"), col("nb")), lists, b, fixtureQueries(b))
   }
+
+  /** The family's fixture queries: corpus vectors with vec_id < [[GdQ]],
+    * as (q_id, qv). */
+  private def fixtureQueries(b: DataFrame): DataFrame =
+    b.filter(col("vec_id") < GdQ).select(col("vec_id").as("q_id"), col("v").as("qv"))
+
+  /** The final top-[[GdK]] of a graph search's (q_id, vec_id, sim)
+    * rows: (q_id, rn, vec_id, sim_q). */
+  private def topGdK(cand: DataFrame): DataFrame =
+    topDistinct(cand, "sim", GdK)
+      .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
 
   /** The flat beam search over whatever graph/bucket state the caller
     * holds — q171/q174 pass the write-once fixture artifact; the
@@ -730,10 +730,9 @@ object Round11Queries extends QueryPack {
   def q174(s: SparkSession, d: String): DataFrame = {
     val scored = flatGraphSearch(s, d)._2
     val labels = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
-    topDistinct(scored.join(labels, Seq("vec_id"))
+    topGdK(scored.join(labels, Seq("vec_id"))
         .filter(col("label") === FgLabel)
-        .select(col("q_id"), col("vec_id"), col("sim")), "sim", GdK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
+        .select(col("q_id"), col("vec_id"), col("sim")))
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -770,9 +769,7 @@ object Round11Queries extends QueryPack {
         .filter(col("src") =!= col("nb"))
         .join(b.select(col("vec_id").as("nb"), col("v").as("nv")), Seq("nb"))
         .select(col("src"), col("nb"), cosineQNative(col("v"), col("nv")).as("sim"))
-      val dropE = topK(cand, KiK).select(col("src"), col("nb"), col("sim"))
-      Seq("graph" -> dropE.unionByName(
-          dropE.select(col("nb").as("src"), col("src").as("nb"), col("sim"))),
+      Seq("graph" -> undirected(topDistinct(cand, "sim", KiK, group = "src", id = "nb")),
         "buckets" -> dropLists)
     }
 
@@ -790,17 +787,8 @@ object Round11Queries extends QueryPack {
   def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) =
     readKnnGraph(s, Artifacts.snapshot(s, Artifacts.knngraph(idxPath)))
 
-  private def readKnnGraph(s: SparkSession, m: Artifacts.Manifest): (DataFrame, DataFrame) = {
-    val g = m.read(s, "graph")
-    val lists = m.read(s, "buckets")
-    m.tombstones(s).fold((g, lists)) { del =>
-      (g.join(del.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-         .join(del.select(col("vec_id").as("nb")), Seq("nb"), "left_anti")
-         .select(col("src"), col("nb"), col("sim")),
-       lists.join(del.select(col("vec_id").as("nb")), Seq("nb"), "left_anti")
-         .select(col("t"), col("bk"), col("nb")))
-    }
-  }
+  private def readKnnGraph(s: SparkSession, m: Artifacts.Manifest): (DataFrame, DataFrame) =
+    (m.live(s, "graph", "src", "nb"), m.live(s, "buckets", "nb"))
 
   /** Compaction of the artifact: merge the append deltas back to the
     * exact bounded shape — per-node top-[[KiK]] edge lists and
@@ -823,15 +811,10 @@ object Round11Queries extends QueryPack {
     Artifacts.commit(s, Artifacts.knngraph(idxPath), "compact", failpoint = failpoint) { m =>
       Option.when(m.op != "compact" || m.pendingDeletes) {
         val (g, lists) = readKnnGraph(s, m)
-        val wCap = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("t"), col("bk"))
-          .orderBy(md5(col("nb").cast("string")), col("nb"))
         Artifacts.Change(Seq(
-          "graph" -> topK(g.select(col("src"), col("nb"), col("sim")), KiK)
+          "graph" -> topDistinct(g, "sim", KiK, group = "src", id = "nb")
             .select(col("src"), col("nb"), col("sim")).repartition(8),
-          "buckets" -> lists.distinct()
-            .withColumn("br", row_number().over(wCap)).filter(col("br") <= KgCap)
-            .select(col("t"), col("bk"), col("nb")).repartition(4)),
+          "buckets" -> capLists(lists.distinct()).repartition(4)),
           m.at.dirs.flatMap { case (t, _) => m.parts(t).map(t -> _._1) })
       }
     }.fold(0)(_.retire.count(_._1 == "graph"))
@@ -867,13 +850,10 @@ object Round11Queries extends QueryPack {
   def q176(s: SparkSession, d: String): DataFrame = {
     val frontier = pqSearch(s, d)
     val b = Tables.vectors(s, d)
-    val q = b.filter(col("vec_id") < GdQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // full precision only here: |Q|·PfRerank by-id fetches
     val pool = topDistinct(frontier, "ad", PfRerank, desc = false)
       .select(col("q_id"), col("vec_id"))
-    topDistinct(Retrieval.scoreById(b, q)(pool), "sim", GdK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
+    topGdK(Retrieval.scoreById(b, fixtureQueries(b))(pool))
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -888,9 +868,7 @@ object Round11Queries extends QueryPack {
     val codes = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
     val b = Tables.vectors(s, d)
-    val q = b.filter(col("vec_id") < GdQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    pqSearch(g, lists, codes, q, LlmQueries.pqCodebook(b))
+    pqSearch(g, lists, codes, fixtureQueries(b), LlmQueries.pqCodebook(b))
   }
 
   /** The ADC traversal itself: [[flatWalk]] over the graph `g` and
@@ -934,15 +912,11 @@ object Round11Queries extends QueryPack {
     val cv = beam.join(b, Seq("vec_id"))
       .select(col("q_id"), col("vec_id"), col("sim"), col("v"))
       .localCheckpoint(false)
-    def pick1(scored: DataFrame, rn: Int): DataFrame =
-      scored.groupBy(col("q_id"))
-        .agg(call_function("collect_topk",
-          struct(col("nscore"), col("vec_id"), col("sim")), lit(1), lit(true)).as("t"))
-        .select(col("q_id"), explode(col("t")).as("e"))
-        .select(col("q_id"), lit(rn).as("rn"),
-          col("e.vec_id").as("vec_id"), col("e.sim").as("sim"))
-    var selected = pick1(cv.select(col("q_id"), (-col("sim")).as("nscore"),
-      col("vec_id"), col("sim")), 1).localCheckpoint(false)
+    // each step's argmax per query: a one-row heap, (score desc, id asc)
+    def pick1(scored: DataFrame, nscore: Column, rn: Int): DataFrame =
+      heapTopK(scored, nscore, 1, Seq("sim"))
+        .select(col("q_id"), lit(rn).as("rn"), col("vec_id"), col("sim"))
+    var selected = pick1(cv, -col("sim"), 1).localCheckpoint(false)
     for (step <- 2 to MmrK) {
       val selV = selected.join(b, Seq("vec_id"))
         .select(col("q_id"), col("vec_id").as("sid"), col("v").as("sv"))
@@ -952,9 +926,7 @@ object Round11Queries extends QueryPack {
         .groupBy(col("q_id"), col("vec_id"), col("sim"))
         .agg(max(cosineQNative(col("v"), col("sv"))).as("pen"))
       selected = selected.unionByName(pick1(
-          pen.select(col("q_id"),
-            (-(lit(MmrLam) * col("sim") - lit(MmrPen) * col("pen"))).as("nscore"),
-            col("vec_id"), col("sim")), step))
+          pen, -(lit(MmrLam) * col("sim") - lit(MmrPen) * col("pen")), step))
         .localCheckpoint(false)
     }
     selected.select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
@@ -981,6 +953,10 @@ object Round11Queries extends QueryPack {
   /** [[HnRatio]]^l — the level-l promotion modulus. */
   private def lvlMod(l: Int): Long = Seq.fill(l)(HnRatio.toLong).product
 
+  /** The rows of a (vec_id, …) frame promoted to level `l`. */
+  private def inLevel(l: Int)(df: DataFrame): DataFrame =
+    df.filter(lvlHash(col("vec_id")) % lit(lvlMod(l)) === 0)
+
   /** Node level: the largest l in [0, HnL] with hash % 4^l == 0 —
     * levels are NESTED by construction (level >= l implies level >=
     * l-1), the skip-list/HNSW geometry. */
@@ -1001,8 +977,7 @@ object Round11Queries extends QueryPack {
     * artifact drops them. */
   private[graft] def hnswLayers(b: DataFrame): DataFrame =
     (1 to HnL).map { l =>
-      knnGraphBuild(b.filter(lvlHash(col("vec_id")) % lit(lvlMod(l)) === 0),
-          KgK, KgUnd, rounds = 1)
+      knnGraphBuild(inLevel(l)(b), KgK, KgUnd, rounds = 1)
         .select(lit(l).as("lvl"), col("src"), col("nb"), col("sim"))
     }.reduce(_ unionByName _)
 
@@ -1036,20 +1011,26 @@ object Round11Queries extends QueryPack {
     * per-layer improvement invariant (an existing node's rank-r sim
     * can only rise) holds here too — pinned in StreamingSpec alongside
     * the untouched-upper-layer identity. */
-  def appendToHnsw(layers: DataFrame, bOld: DataFrame, drop: DataFrame): DataFrame = {
-    // one scalar to the driver: the drop's deepest promotion level
-    val maxL = drop.agg(max(maxLvl(col("vec_id"))).as("m"))
-      .collect()(0).getAs[Number](0).intValue()
-    val touched = (1 to maxL).map { l =>
-      def inL(df: DataFrame): DataFrame =
-        df.filter(lvlHash(col("vec_id")) % lit(lvlMod(l)) === 0)
-      appendToKnnGraph(
-          layers.filter(col("lvl") === l).select(col("src"), col("nb"), col("sim")),
-          inL(bOld), inL(drop), KgK, KgUnd)
-        .select(lit(l).as("lvl"), col("src"), col("nb"), col("sim"))
+  def appendToHnsw(layers: DataFrame, bOld: DataFrame, drop: DataFrame): DataFrame =
+    liftToLayers(layers, drop) { (g, inL) =>
+      appendToKnnGraph(g, inL(bOld), inL(drop), KgK, KgUnd)
     }
-    val untouched = layers.filter(col("lvl") > maxL)
-      .select(col("lvl"), col("src"), col("nb"), col("sim"))
+
+  /** One L0 maintenance `step` lifted to the (lvl, src, nb, sim) layer
+    * stack. `ids` (vec_id) is the drop or delete set; its deepest
+    * promotion level is ONE scalar to the driver, 0 when `ids` is empty
+    * (no level touched). Each level l up to it runs `step` on the
+    * level's (src, nb, sim) graph with [[inLevel]] l; the layers above
+    * it come back untouched. */
+  private def liftToLayers(layers: DataFrame, ids: DataFrame)
+                          (step: (DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val maxL = ids.agg(coalesce(max(maxLvl(col("vec_id"))), lit(0))).collect()(0).getInt(0)
+    val edges = Seq(col("src"), col("nb"), col("sim"))
+    val touched = (1 to maxL).map { l =>
+      step(layers.filter(col("lvl") === l).select(edges: _*), inLevel(l))
+        .select(lit(l).as("lvl") +: edges: _*)
+    }
+    val untouched = layers.filter(col("lvl") > maxL).select(col("lvl") +: edges: _*)
     touched.foldLeft(untouched)(_ unionByName _)
   }
 
@@ -1086,9 +1067,7 @@ object Round11Queries extends QueryPack {
     // the corpus is read once, as the walk's broadcast vectors child —
     // resident for every hop the way a serving tier holds it in RAM
     val b = Tables.vectors(s, d)
-    val q = b.filter(col("vec_id") < GdQ)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    hnswSearch(layers, g0, b, q).orderBy(col("q_id"), col("rn"))
+    hnswSearch(layers, g0, b, fixtureQueries(b)).orderBy(col("q_id"), col("rn"))
   }
 
   /** The hierarchical search itself, over whatever layer/graph state the
@@ -1122,8 +1101,7 @@ object Round11Queries extends QueryPack {
       q.select(col("q_id"), col("qv"), array(lit(0L)).as("keys")),
       g0, entry, b.select(col("vec_id"), col("v")), Some(layers),
       cosineQNative(col("qv"), col("v")), "sim", desc = true, schedule, emitScored = false)
-    topDistinct(frontier.filter(col("vec_id") =!= col("q_id")), "sim", GdK)
-      .select(col("q_id"), col("rn"), col("vec_id"), col("sim").as("sim_q"))
+    topGdK(frontier.filter(col("vec_id") =!= col("q_id")))
   }
 
   // q172: adaptive NN-descent (δ-termination) under the hash gate -------
@@ -1170,18 +1148,6 @@ object Round11Queries extends QueryPack {
         .as("converged_early"),
       lit(if (complete) 1 else 0).cast("int").as("full_coverage"))
   }
-
-  /** Bounded top-k DISTINCT per src by (sim desc, nb asc) — the
-    * dedup-folding aggregate, so a duplicated candidate fanout is
-    * never exchanged (one partial-agg shuffle replaces the old
-    * `.distinct()` + heap pair; see CollectTopKDistinct). */
-  private def topK(cand: DataFrame, k: Int = KgK): DataFrame =
-    cand.groupBy(col("src"))
-      .agg(call_function("collect_topk_distinct",
-        struct((-col("sim")).as("nsim"), col("nb")), lit(k), lit(true)).as("t"))
-      .select(col("src"), posexplode(col("t")).as(Seq("p", "e")))
-      .select(col("src"), (col("p") + 1).as("rn"),
-        col("e.nb").as("nb"), (-col("e.nsim")).as("sim"))
 
   override val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q168_knn_graph" -> q168 _,

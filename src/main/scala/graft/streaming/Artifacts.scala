@@ -37,10 +37,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    read planned on manifest `n` can pin a file that commit `n+1`
   *    retires, and re-plans ([[retryVanished]]).
   *  - DELETE appends the retired ids to the tombstone sidecar; every
-  *    read anti-joins them (broadcast), and a purge or compaction makes
-  *    them physical. APPEND of an id with a pending tombstone makes the
-  *    deletes physical first — otherwise the tombstone would hide the
-  *    new row. */
+  *    read anti-joins them (broadcast, [[Manifest.live]]; in-memory
+  *    graph deletes drop edges by the same [[withoutIds]]), and a purge
+  *    or compaction makes them physical. APPEND of an id with a pending
+  *    tombstone makes the deletes physical first — otherwise the
+  *    tombstone would hide the new row. */
 object Artifacts {
 
   val Tombstones = "tombstones"
@@ -88,11 +89,24 @@ object Artifacts {
     def tombstones(s: SparkSession): Option[DataFrame] =
       Option.when(pendingDeletes)(broadcast(read(s, Tombstones).select(col("vec_id")).distinct()))
 
+    /** The delete-aware read: the table's committed rows without those
+      * whose `ids` columns hold a pending tombstone. */
+    def live(s: SparkSession, table: String, ids: String*): DataFrame = {
+      val t = read(s, table)
+      tombstones(s).fold(t)(withoutIds(t, _, ids: _*))
+    }
+
     def text: String = (Seq(s"op\t$op") ++ marks.toSeq.sorted.map { case (k, b) => s"mark\t$k\t$b" } ++
       schemas.toSeq.sortBy(_._1).map { case (t, st) => s"schema\t$t\t${st.json}" } ++
       at.dirs.flatMap { case (t, _) => parts(t).map { case (n, len) => s"file\t$t\t$n\t$len" } }
     ).mkString("\n")
   }
+
+  /** `df` without the rows whose `cols` hold a `vec_id` of `del`: one
+    * anti-join per column, the column order kept. */
+  def withoutIds(df: DataFrame, del: DataFrame, cols: String*): DataFrame =
+    cols.foldLeft(df)((d, c) => d.join(del.select(col("vec_id").as(c)), Seq(c), "left_anti"))
+      .select(df.columns.map(col): _*)
 
   private def parse(at: Layout, version: Long, text: String): Manifest = {
     val rows = text.split("\n").toSeq.map(_.split("\t").toSeq)

@@ -423,5 +423,29 @@ class PlanGuardSpec extends SparkSpec {
       "descent ranking must be the dedup-folding bounded heap")
     assert(!roundPlan.contains("CartesianProduct"), "compose join went cartesian")
     assert(roundPlan.toLowerCase.contains("cosinesimilarity"), "compose scoring left the compose join")
+    // compaction re-caps the artifact's bucket lists with the build's
+    // one cap: its rewrite must plan the same WindowGroupLimit pushdown
+    import graft.queries.Round11Queries
+    import graft.streaming.Artifacts
+    val root = java.nio.file.Files.createTempDirectory("graft_knng_plan").toString + "/knng"
+    Artifacts.commit(spark, Artifacts.knngraph(root), "build")(_ => Some(Artifacts.Change(Seq(
+      "graph" -> g,
+      "buckets" -> Round11Queries.cappedBuckets(Round11Queries.bucketMembership(b))
+        .select(col("t"), col("bk"), col("nb"))))))
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = written.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Round11Queries.compactKnnGraphIndex(spark, root) > 0)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val capPlans = written.toArray(Array.empty[String]).filter(_.contains("Window"))
+    assert(capPlans.nonEmpty && capPlans.forall(_.contains("WindowGroupLimit")),
+      s"compaction's bucket re-cap lost its WindowGroupLimit pushdown:\n${capPlans.mkString("\n")}")
   }
 }

@@ -1249,6 +1249,72 @@ class StreamingSpec extends SparkSpec {
     sq.stop()
   }
 
+  test("knngraph compaction re-caps the bucket lists exactly as the build caps the live corpus") {
+    import spark.implicits._
+    import graft.queries.Round11Queries
+    graft.GraftFunctions.ensure(spark)
+    val e0 = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    // the fixture twice under fresh ids: a copy shares its original's
+    // buckets, so the fullest lists pass the cap of 64 and the cap cuts
+    val e = e0.unionByName(e0.select((col("vec_id") + 500).as("vec_id"), col("v")))
+      .localCheckpoint()
+    val bOld = e.filter(col("vec_id") < 800)
+    val drop = e.filter(col("vec_id") >= 800)
+    val root = java.nio.file.Files.createTempDirectory("graft_knng_cap").toString + "/knng"
+    // a fresh artifact, committed as knnGraphIndex commits its build
+    Artifacts.commit(spark, Artifacts.knngraph(root), "build")(_ => Some(Artifacts.Change(Seq(
+      "graph" -> Round11Queries.knnGraphBuild(bOld, 15, 30, 1).select(col("src"), col("nb"), col("sim")),
+      "buckets" -> Round11Queries.cappedBuckets(Round11Queries.bucketMembership(bOld))
+        .select(col("t"), col("bk"), col("nb"))))))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.select("t", "bk", "nb").orderBy("t", "bk", "nb").collect().toSeq
+    def compacted(): Seq[org.apache.spark.sql.Row] = {
+      assert(Round11Queries.compactKnnGraphIndex(spark, root) > 0, "compaction must have work to do")
+      rows(Artifacts.snapshot(spark, Artifacts.knngraph(root)).read(spark, "buckets"))
+    }
+    // 1) append the drop, retire some of it, compact: the lists are the
+    //    build's cap over the live corpus, row for row
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, drop)
+    val dels1 = Seq(805L, 861L, 950L)
+    Round11Queries.deleteFromKnnGraphIndex(spark, root, dels1.toDF("vec_id"))
+    val live1 = Round11Queries.bucketMembership(e.filter(!col("vec_id").isin(dels1: _*)))
+    val fullest = live1.groupBy("t", "bk").count().agg(max("count")).collect()(0).getLong(0)
+    assert(fullest > 64, s"the fullest live bucket holds $fullest ids: the cap must cut")
+    val want1 = Round11Queries.cappedBuckets(live1)
+    assert(compacted() == rows(want1),
+      "compacted buckets differ from cappedBuckets over the live corpus's membership")
+    // 2) retire base ids, many of them kept members of full buckets, and
+    //    compact again: the same cap over the live members the artifact
+    //    holds. It never stored the members the build's cap pruned, so a
+    //    full bucket that lost kept members refills only from the held
+    //    rows, not as a rebuild over the live corpus would.
+    val dels2 = (0L to 300L by 3L)
+    Round11Queries.deleteFromKnnGraphIndex(spark, root, dels2.toDF("vec_id"))
+    val held = want1.select(col("t"), col("bk"), col("nb").as("vec_id"))
+    val live2 = Round11Queries.bucketMembership(e.filter(!col("vec_id").isin(dels1 ++ dels2: _*)))
+      .join(held, Seq("t", "bk", "vec_id"), "left_semi")
+    assert(compacted() == rows(Round11Queries.cappedBuckets(live2)),
+      "compacted buckets differ from cappedBuckets over the held live membership")
+  }
+
+  test("HNSW maintenance of an empty drop or delete set returns the layers unchanged") {
+    import graft.queries.Round11Queries
+    graft.GraftFunctions.ensure(spark)
+    val e = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val bOld = e.filter(col("vec_id") < 400)
+    val layers0 = Round11Queries.hnswLayers(bOld).localCheckpoint(false)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[org.apache.spark.sql.Row] =
+      df.select("lvl", "src", "nb", "sim").collect().toSet
+    val before = rows(layers0)
+    val none = e.filter(col("vec_id") < 0)
+    assert(rows(Round11Queries.appendToHnsw(layers0, bOld, none)) == before,
+      "an empty drop must leave every layer as it was")
+    assert(rows(Round11Queries.deleteFromHnsw(layers0, bOld, none.select(col("vec_id")))) == before,
+      "an empty delete set must leave every layer as it was")
+  }
+
   test("cluster ingest loop: merges monotone, rebuild refines incremental, deletes re-elect reps") {
     import graft.queries.Round11Queries
     graft.GraftFunctions.ensure(spark)
