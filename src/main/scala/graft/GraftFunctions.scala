@@ -1,19 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{BooleanType, IntegerType}
 import graft.expressions.{BloomFilterAgg, BloomMightContain, CdcStarts, CdcWordChunks, CosineSimilarity, CountMinSketchAgg, Digest60, Digests60, MinHashSigs, NearestCells, SetKeyMd5, Shingles2, Shingles3, Simhash16, WordFingerprint, ZorderKey}
+import graft.plans.{AsOfJoinStrategy, GraphWalkStrategy, RangeJoinStrategy}
 
-/** Registration of graft's native Catalyst expressions.
+/** The engine's installer: `ensure(spark)` registers graft's native
+  * Catalyst expressions and its three planner strategies on a session.
   *
-  * Two routes, same registry entry:
-  *  - `ensure(spark)` — idempotent runtime registration, called by the
-  *    query packs so the driver contract works on any session;
-  *  - `GraftExtensions` — the SparkSessionExtensions class for
-  *    `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.GraftExtensions`.
+  * It is called where a session enters the engine — `SparkEntry.entry`
+  * and every `SparkEntry.queries` function, the test suite's shared
+  * session, the benchmark harness — never by a query or an operator.
+  * A streaming micro-batch runs on a clone of the session its query
+  * started on, and the clone copies both the function registry and
+  * `experimental.extraStrategies`.
   */
 object GraftFunctions {
 
@@ -188,19 +190,17 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotent per-session registration. */
+  /** Install the engine on `spark`; each function and strategy is
+    * registered at most once per session. */
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { f =>
       if (!reg.functionExists(f._1)) reg.registerFunction(f._1, f._2, f._3)
     }
+    val x = spark.experimental
+    x.synchronized {
+      x.extraStrategies ++= Seq(AsOfJoinStrategy, RangeJoinStrategy, GraphWalkStrategy)
+        .filterNot(x.extraStrategies.contains)
+    }
   }
-
-  private[graft] def inject(ext: SparkSessionExtensions): Unit =
-    all.foreach(ext.injectFunction)
-}
-
-/** `spark.sql.extensions`-compatible entry point. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(ext: SparkSessionExtensions): Unit = GraftFunctions.inject(ext)
 }

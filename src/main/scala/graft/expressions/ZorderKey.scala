@@ -49,9 +49,6 @@ case class ZorderKey(left: Expression, right: Expression)
 
 object ZorderKey {
 
-  /** Number of low bits of each input that survive into the key. */
-  val Bits = 31
-
   /** Spread the low 31 bits of v to even bit positions 0,2,…,60. */
   def spread31(v0: Long): Long = {
     var v = v0 & 0x7FFFFFFFL

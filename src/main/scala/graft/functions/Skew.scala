@@ -29,8 +29,6 @@ object Skew {
     SplitAgg(alias, sum(c), a => sum(col(a)))
   def countOf(alias: String): SplitAgg =
     SplitAgg(alias, count(lit(1)), a => sum(col(a)))
-  def minOf(c: Column, alias: String): SplitAgg =
-    SplitAgg(alias, min(c), a => min(col(a)))
   def maxOf(c: Column, alias: String): SplitAgg =
     SplitAgg(alias, max(c), a => max(col(a)))
 

@@ -37,8 +37,8 @@ object VectorOps {
     * (graft.expressions.CosineSimilarity), bit-identical but much
     * faster — the HOF form is CodegenFallback. The one basis-point
     * score every ANN path ranks by (also [[Retrieval.scoreById]]'s).
-    * Needs GraftFunctions.ensure(spark) or GraftExtensions on the
-    * session. */
+    * Needs GraftFunctions.ensure on the session, which every
+    * SparkEntry query runs. */
   def cosineQNative(a: Column, b: Column): Column =
     floor(call_function("cosine_sim", a, b) * 10000)
 

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.LongType
 
 /** As-of join as a FIRST-CLASS operator — the (c)-class extension of
   * the custom-operator ladder (SURVEY §7.2): custom `LogicalPlan` +
-  * `Strategy` + `SparkPlan`, registered through the public
-  * `spark.experimental.extraStrategies` hook.
+  * `Strategy` + `SparkPlan`; `GraftFunctions.ensure` registers the
+  * strategy through the public `spark.experimental.extraStrategies` hook.
   *
   * Semantics: for every left row, append the payload of the LAST right
   * row with the same key and `rightTs <= leftTs` (nulls when none) —
@@ -147,14 +147,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOfJoin {
 
-  /** Register the strategy once per session (public hook — no
-    * extensions file needed, though `GraftExtensions` also works). */
-  def ensure(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
-
   /** `left` asof-joined to `right` on equal `key` with the last
     * `right.ts <= left.ts`; `payload` names the right columns to
     * append. Key and ts columns must be LongType on both sides.
@@ -165,7 +157,6 @@ object AsOfJoin {
   def joinAsOf(left: DataFrame, right: DataFrame, key: String, ts: String,
                payload: Seq[String]): DataFrame = {
     val spark = left.sparkSession
-    ensure(spark)
     def attr(df: DataFrame, name: String): Attribute = {
       val a = df.queryExecution.analyzed.output.find(_.name == name)
         .getOrElse(throw new IllegalArgumentException(s"column $name not found"))
@@ -186,8 +177,4 @@ object AsOfJoin {
       AsOfJoinPlan(l, r, attr(left, key), attr(left, ts),
         attr(rightFresh, key), attr(rightFresh, ts), pay))
   }
-
-  /** Column-name helper for specs: output columns of [[joinAsOf]]. */
-  def outputColumns(left: DataFrame, payload: Seq[String]): Seq[String] =
-    left.columns.toSeq ++ payload
 }

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -216,13 +216,6 @@ object GraphWalk {
     Seq("vec_id" -> LongType),
     Seq("lvl" -> IntegerType, "src" -> LongType, "nb" -> LongType))
 
-  /** Register the strategy once per session (the [[AsOfJoin.ensure]] hook). */
-  def ensure(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GraphWalkStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraphWalkStrategy
-    }
-
   /** The walk of every `query` row through `schedule` (see
     * [[GraphWalkPlan]] for the children's columns; `query` and `vectors`
     * keep their other columns for the scorer, the rest keep only
@@ -234,7 +227,6 @@ object GraphWalk {
            vectors: DataFrame, layers: Option[DataFrame], score: Column, name: String,
            desc: Boolean, schedule: Seq[WalkStage], emitScored: Boolean): DataFrame = {
     val spark = query.sparkSession
-    ensure(spark)
     val plans = (Seq(query, adjacency, entries, vectors) ++ layers).zip(Layout).zipWithIndex
       .map { case ((df, lead), i) =>
         val rest = if (i == 0 || i == 3) df.columns.toSeq.filterNot(lead.map(_._1).contains) else Nil

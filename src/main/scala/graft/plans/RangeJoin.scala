@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.{Partitioner, RangePartitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, BoundReference, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.LongType
 /** Pure range (interval) join as a FIRST-CLASS operator — the second
   * (c)-class rung of the custom-operator ladder (SURVEY §7.2, after
   * [[AsOfJoin]]): custom `LogicalPlan` + `Strategy` + `SparkPlan`
-  * registered through `spark.experimental.extraStrategies`.
+  * registered by `GraftFunctions.ensure` through
+  * `spark.experimental.extraStrategies`.
   *
   * Semantics: every (left, right) pair with
   * `right.lo <= left.ts <= right.hi` — the no-equi-key interval join of
@@ -311,19 +312,12 @@ object RangeJoinStrategy extends SparkStrategy {
 
 object RangeJoin {
 
-  def ensure(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RangeJoinStrategy
-    }
-
   /** Inner interval join: all (left, right) pairs with
     * `lo <= left.ts <= hi`. The ts/lo/hi columns must be BIGINT; null
     * bounds and lo > hi intervals match nothing. */
   def joinRange(left: DataFrame, right: DataFrame,
                 ts: String, lo: String, hi: String): DataFrame = {
     val spark = left.sparkSession
-    ensure(spark)
     def attr(df: DataFrame, name: String): Attribute = {
       val a = df.queryExecution.analyzed.output.find(_.name == name)
         .getOrElse(throw new IllegalArgumentException(s"column $name not found"))

@@ -131,7 +131,6 @@ object AggQueries extends QueryPack {
     * when the repr ends in …5 (the house round-half gotcha). */
   private def quant4(c: Column): Column =
     floor(c * lit(10000.0) + lit(0.5)).cast("double") / lit(10000.0)
-  private val Quant4Sql = "floor(%s * 10000 + 0.5) / 10000"
 
   /** Duplicate-insensitive rank verdict shared by q48/q145: the target
     * rank p·n (in bp·rows) must land within `100·n + 10⁴` (1 % + 1 row)
@@ -151,7 +150,6 @@ object AggQueries extends QueryPack {
     * broadcasts back onto events for the rank count — the second scan
     * is a map-combined aggregate, never a re-sort. */
   def q145(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val ev = Tables.events(s, d).select(col("event_type"), col("value"))
     val est = ev.groupBy(col("event_type"))
       .agg(

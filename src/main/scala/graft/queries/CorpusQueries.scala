@@ -43,7 +43,6 @@ object CorpusQueries extends QueryPack {
     * what leaks across a corpus). Emits span counts and the duplicated
     * fraction in basis points (integer division, engine-portable). */
   def q91(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // 60-bit portable hash per span: the shuffle key is 8 bytes however
     // long the span text is ('0x'||substr(md5) — same derivation as the
     // MinHash base hash, mirrored exactly in the oracle SQL). The
@@ -213,7 +212,6 @@ object CorpusQueries extends QueryPack {
     * float division; products stay < 2^63 through sf10). Unigram counts
     * are vocabulary-small, so both enrichment joins broadcast. */
   def q95(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // ONE corpus pass, ONE aggregation: unigrams and bigrams explode
     // together from the same tokenized row (a bigram contains a space,
     // a unigram can't — FIXTURES.md words are space-free — so the
@@ -335,7 +333,6 @@ object CorpusQueries extends QueryPack {
     * gram stream — and emits one row per MERGED span, typically ≪ the
     * duplicated-position count on boilerplate-heavy corpora. */
   def q126(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     dupSpans(Tables.documents(s, d))
   }
 

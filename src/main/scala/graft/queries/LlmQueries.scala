@@ -39,7 +39,6 @@ object LlmQueries extends QueryPack {
     * native one-pass MinHashSigs expression (TextOps.minhash is the HOF
     * reference form, equality-tested in ExpressionSpec). */
   private def sigs(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     docWords(s, d).select(
       col("doc_id"),
       call_function("minhash_sigs", call_function("shingles3", col("ws"))).as("sg"))
@@ -207,7 +206,6 @@ object LlmQueries extends QueryPack {
   // q34: 16-bit SimHash per doc ------------------------------------------
 
   def q34(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     docWords(s, d)
       .select(col("doc_id"), call_function("simhash16", col("ws")).as("simhash"))
       .orderBy(col("doc_id"))
@@ -216,7 +214,6 @@ object LlmQueries extends QueryPack {
   // q35: brute-force cosine top-5 for a small query set ------------------
 
   def q35(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < 10).select(col("vec_id").as("q_id"), col("v").as("qv"))
     topSim(e.join(broadcast(q), col("vec_id") =!= col("q_id")), 5)
@@ -234,7 +231,6 @@ object LlmQueries extends QueryPack {
   // q37: ANN — top-3 by cosine among same-bucket candidates --------------
 
   def q37(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d).withColumn("bucket", lshBucket(col("v")))
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket").as("qb"))
@@ -251,7 +247,6 @@ object LlmQueries extends QueryPack {
     * one bucket and the probe values are distinct, so no dedup is
     * needed; candidate cost is (bits+1)/2^bits of the corpus per query. */
   def q65(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d).withColumn("bucket", lshBucket(col("v")))
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -263,7 +258,6 @@ object LlmQueries extends QueryPack {
   // q38: kNN label vote (k=10) -------------------------------------------
 
   def q38(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d, "label")
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("label").as("true_label"), col("v").as("qv"))
@@ -287,7 +281,6 @@ object LlmQueries extends QueryPack {
     * empty result — the oracle agrees on emptiness; the operator's value
     * is the plan shape.) */
   def q39(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
       .withColumn("bucket", lshBucket(col("v")))
     e.as("x").join(e.as("y"),
@@ -336,8 +329,6 @@ object LlmQueries extends QueryPack {
     // twin breaks them by cid. Sorting by cid here makes index order ≡ cid
     // order, so the invariant is enforced rather than assumed of callers.
     val cents = centsIn.sortBy(_._1)
-    val s = e.sparkSession
-    graft.GraftFunctions.ensure(s)
     // cell ranking runs in the native NearestCells expression (primitive
     // JVM loops over the literal centroid matrix; the HOF nearestCells
     // form is the equality-tested reference). It returns centroid
@@ -441,7 +432,6 @@ object LlmQueries extends QueryPack {
     e.withColumn("codes", pqCodesFor(col("v"), cb))
 
   def q118(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     pqEncode(e, pqCodebook(e))
       .select(col("vec_id"), array_join(col("codes"), ",").as("pq_csv"))
@@ -457,7 +447,6 @@ object LlmQueries extends QueryPack {
     * never re-encodes (PlanGuard-pinned). Only the 5-query side still
     * touches the base vectors. */
   def q119(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     val enc = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
@@ -485,7 +474,6 @@ object LlmQueries extends QueryPack {
     // the per-subspace l2sq column tree evaluated an interpreted
     // zip_with+aggregate pair per dot — 3·PqM folds per candidate row
     // of the fanout; ExpressionSpec pins bit-equality of the two forms
-    graft.GraftFunctions.ensure(e.sparkSession)
     val cbLit = VectorOps.litArr2(cb)
     val adist = call_function("pq_adc_dist",
       col("qv"), col("codes"), cbLit, lit(PqDs))
@@ -518,7 +506,6 @@ object LlmQueries extends QueryPack {
     * scan touches 8 code bytes per candidate within probed cells only
     * (candidates ≈ n·nprobe/cells, never n). */
   def q124(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     // Round 11: the (cell, residual-codes) pair comes from the
     // write-once annIndex layout — the ADC probe scans (vec_id, cell,
@@ -548,7 +535,6 @@ object LlmQueries extends QueryPack {
   private[graft] def ivfPqEncode(e: DataFrame,
       centsIn: Seq[(Long, Seq[Double])],
       cb: IndexedSeq[IndexedSeq[Double]]): DataFrame = {
-    graft.GraftFunctions.ensure(e.sparkSession)
     val cents = centsIn.sortBy(_._1)
     val (centsLit, cidLit) = ivfCentsLit(cents)
     val ci = element_at(call_function("nearest_cells", col("v"), centsLit), 1)
@@ -568,8 +554,6 @@ object LlmQueries extends QueryPack {
   private[graft] def ivfPqProbe(enc: DataFrame, e: DataFrame,
       centsIn: Seq[(Long, Seq[Double])], cb: IndexedSeq[IndexedSeq[Double]],
       nprobe: Int, k: Int, nQueries: Int): DataFrame = {
-    val s = e.sparkSession
-    graft.GraftFunctions.ensure(s)
     val cents = centsIn.sortBy(_._1)
     val (centsLit, cidLit) = ivfCentsLit(cents)
     def cellId(rank: Int): Column =
@@ -621,10 +605,8 @@ object LlmQueries extends QueryPack {
     * bounded heaps (10 keys × 5 rows cross the shuffle); the final
     * intersection joins two ≤50-row tables. */
   def q132(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
       .withColumn("bucket", lshBucket(col("v")))
-      .persist() // feeds the brute-force side and the bucket side
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("bucket").as("qb"))
     val gt = topSim(e.join(broadcast(q), col("vec_id") =!= col("q_id")), 5)
@@ -635,15 +617,12 @@ object LlmQueries extends QueryPack {
     val hits = gt.join(ann, Seq("q_id", "vec_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hits"))
     val annN = ann.groupBy(col("q_id")).agg(count(lit(1)).as("n_ann"))
-    val out = gt.groupBy(col("q_id")).agg(count(lit(1)).as("n_gt"))
+    gt.groupBy(col("q_id")).agg(count(lit(1)).as("n_gt"))
       .join(annN, Seq("q_id"), "left").join(hits, Seq("q_id"), "left")
       .na.fill(0L, Seq("n_ann", "n_hits"))
       .select(col("q_id"), col("n_gt"), col("n_ann"), col("n_hits"),
         expr("n_hits * 100L DIV n_gt").as("recall_pct"))
       .orderBy(col("q_id"))
-      .localCheckpoint(true) // materialize so the persist below can release
-    e.unpersist()
-    out
   }
 
   // q130: leakage-safe train/val/test split --------------------------------

@@ -133,7 +133,6 @@ object MultimodalQueries extends QueryPack {
     * GovernanceSpec), so DuckDB's string substr/md5 sees the same
     * bytes the engine's binary slicing does. */
   def q135(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // boundary scan through the native cdc_starts expression (one reused
     // digest over (offset, len) slices); the interpreted HOF twin it
     // replaced — transform(sequence(5, len), i -> md5(substr(...)) tree
@@ -174,7 +173,6 @@ object MultimodalQueries extends QueryPack {
     * counts (no re-reading payloads). Exactly q33's LSH-banding cost
     * model with content chunks as the bands. */
   def q137(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val ChunkCap = 64
     val chunks = Tables.documents(s, d)
       .select(col("doc_id"), col("text").cast("binary").as("payload"))

@@ -34,7 +34,6 @@ object PipelineQueries extends QueryPack {
   // q69: bloom-prefiltered semi join --------------------------------------
 
   def q69(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val cust = Tables.customer(s, d)
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
@@ -57,7 +56,6 @@ object PipelineQueries extends QueryPack {
   // q70: benchmark contamination (shared 3-gram ratio vs held-out set) ----
 
   def q70(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // shingle sets computed once for both the benchmark and corpus sides
     val shs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
@@ -122,7 +120,6 @@ object PipelineQueries extends QueryPack {
   // q74: intra-document repetition score (duplicate 3-gram ratio) ---------
 
   def q74(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     Tables.documents(s, d)
       .select(col("doc_id"), call_function("shingles3", words(col("text"))).as("tri"))
       .filter(size(col("tri")) > 0)
@@ -301,7 +298,6 @@ object PipelineQueries extends QueryPack {
     * the whole table to one partition — the first version did, and the
     * WindowExec warning is why it's gone.) */
   def q81(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
       .withColumn("z",
@@ -333,7 +329,6 @@ object PipelineQueries extends QueryPack {
     * aggregation, so the exchange carries n-gram counts, never raw
     * text. */
   def q82(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val wRank = Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("tri"))
     Tables.documents(s, d)
       .select(col("lang"), explode(call_function("shingles3", words(col("text")))).as("tri"))
@@ -413,7 +408,6 @@ object PipelineQueries extends QueryPack {
     // md5→substring→conv tree per 2-gram plus a slice+concat_ws+md5
     // tree per chunk (~6M interpreted evals per sf0.1 pass).
     // ExpressionSpec pins bit-equality against the HOF formulation.
-    graft.GraftFunctions.ensure(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         explode(call_function("cdc_word_chunks",

@@ -115,7 +115,6 @@ object RelationalQueries extends QueryPack {
     * (−price, okey) with reverse=true (k smallest); double negation is
     * exact, so the re-projected price is bit-identical. */
   def q09(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     Tables.orders(s, d)
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
       .groupBy(col("o_orderpriority"))

@@ -265,7 +265,6 @@ object Round10Queries extends QueryPack {
     * by id from the BASE table and reranks by exact full-dim cosine.
     * The corpus never shuffles; shuffled bytes are |queries|×32 ids. */
   def q162(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val idx = readAnnIndex(s, annIndex(s, d)).select(col("vec_id"), col("prefix"))
     val qp = idx.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("prefix").as("qp"))
@@ -301,7 +300,6 @@ object Round10Queries extends QueryPack {
     * the 32-candidate shortlist fetched by id from the BASE table; ham
     * rides along. */
   def q163(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val sg = readAnnIndex(s, annIndex(s, d)).select(col("vec_id"), col("lo"), col("hi"))
     hammingServe(s, d, sg, sg, HamQ, HamShort, HamK)
   }
@@ -338,7 +336,6 @@ object Round10Queries extends QueryPack {
     * Hamming-ranks the label-3 candidates; exact cosine reranks the
     * shortlist fetched by id from the base table. */
   def q167(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val idx = readAnnIndex(s, annIndex(s, d))
     val cands = idx.filter(col("label") === FaLabel).select(col("vec_id"), col("lo"), col("hi"))
     hammingServe(s, d, cands, idx, FaQ, FaShort, FaK)
@@ -372,7 +369,6 @@ object Round10Queries extends QueryPack {
     }.reduce(_ + _)
 
   def q164(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < MsQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -398,7 +394,6 @@ object Round10Queries extends QueryPack {
     * shortlist (q57/q163) instead of the full corpus; the mining
     * semantics are identical. */
   def q165(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d, "label")
     val q = e.filter(col("vec_id") < HnQ)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"), col("v").as("qv"))

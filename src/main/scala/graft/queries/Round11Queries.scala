@@ -210,7 +210,6 @@ object Round11Queries extends QueryPack {
     * algorithm and the driver's hash gate applies; the recall floor vs
     * exact brute force is pinned in Round11Spec. */
   def q168(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val b = Tables.vectors(s, d)
     knnGraphBuild(b, KgK, KgUnd, rounds = 1)
       .select(col("src").as("vec_id"), col("rn"), col("nb").as("nb_id"),
@@ -230,7 +229,6 @@ object Round11Queries extends QueryPack {
     * sf0.001, 0.8822 at sf0.1 — the K-width was the binding lever:
     * K=10 plateaued at 0.86 over any extra-round/cap budget). */
   def q169(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val b = Tables.vectors(s, d)
     knnGraphBuild(b, KiK, KiUnd, rounds = KiRounds)
       .filter(col("rn") <= KgK)
@@ -272,7 +270,6 @@ object Round11Queries extends QueryPack {
     * vec_id WITHOUT a broadcast — the map is n-row, and at corpus scale
     * it must shuffle-join, not ship to every executor. */
   def q170(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // Round 17 (guide §6, build once / read many): the converged descent
     // graph this query clusters IS the write-once [[knnGraphIndex]]
     // artifact — same builder, same recipe constants (KiK/KiUnd/KiRounds,
@@ -516,7 +513,6 @@ object Round11Queries extends QueryPack {
     * operators' scale curves live with the operators themselves
     * (q168–q176, BENCH_SCALING). */
   def q177(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val standing = Round14Queries.maintScratch(s, d) // build: own knobs
     // the gate chains ~20 micro-jobs over ≤slice-sized frames: the
     // same micro-plan knobs as q178 (1 shuffle partition, whole-stage
@@ -646,7 +642,6 @@ object Round11Queries extends QueryPack {
     * never evaluates the scored walk (lazy plans); q174 post-filters the
     * scored set by attribute and never evaluates the frontier walk. */
   private def flatGraphSearch(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.GraftFunctions.ensure(s)
     val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
     val b = Tables.vectors(s, d)
     graphSearch(g.select(col("src"), col("nb")), lists, b, fixtureQueries(b))
@@ -863,7 +858,6 @@ object Round11Queries extends QueryPack {
     * its [[GraphWalk]] codes child is the column-pruned rcodes scan
     * (PlanGuard in Round11Spec: never `embedding`, never `prefix`). */
   private[graft] def pqSearch(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val (g, lists) = readKnnGraphIndex(s, knnGraphIndex(s, d))
     val codes = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("rcodes").as("codes"))
@@ -1060,7 +1054,6 @@ object Round11Queries extends QueryPack {
     * probe supplies hundreds of alternatives, but here would discard
     * the single seeded entry row. */
   def q173(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val g0 = readKnnGraphIndex(s, knnGraphIndex(s, d))._1
     val idxH = hnswIndex(s, d)
     val layers = s.read.parquet(s"$idxH/layers")
@@ -1122,7 +1115,6 @@ object Round11Queries extends QueryPack {
     * improving, a δ-counter bug) flips a verdict and fails the hash
     * gate at every sf. */
   def q172(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val b = Tables.vectors(s, d)
     val (g, executed) = knnGraphBuildCounted(b, KiK, KiUnd, AdRounds, AdDelta)
     // one verdict job instead of three (round 17): corpus size, node

@@ -53,7 +53,6 @@ object Round14Queries extends QueryPack {
     * ADVICE). */
   private[queries] val MaintSlice = 200L
   private[queries] def maintScratch(s: SparkSession, d: String): String = {
-    graft.GraftFunctions.ensure(s)
     val ver = s"r16:slice=$MaintSlice:g0=15/30x1" +
       s":gold=${Round11Queries.KgK}/${Round11Queries.KgUnd}x1:bands=64:manifest"
     // everything after the constraint-pruned corpus join is ≤slice-sized
@@ -152,7 +151,6 @@ object Round14Queries extends QueryPack {
     * in StreamingSpec and q177; this keeps the gate's cost at the
     * band-index + annidx3 + graph floor. */
   def q178(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // The PRE-EXISTING serving artifacts are written once per fixture
     // ([[maintScratch]], shared with q177): they are the state the CDC
     // loop operates ON, laid down by the original build in production —

@@ -55,7 +55,6 @@ object Round16Queries extends QueryPack {
     * tiebreaks; the discounts are shared integer literals — the whole
     * metric is hash-exact. */
   def q183(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val sg = Round10Queries.readAnnIndex(s, Round10Queries.annIndex(s, d))
       .select(col("vec_id"), col("lo"), col("hi"))
     val qs = sg.filter(col("vec_id") < NdQ)

@@ -133,7 +133,6 @@ object Round4Queries extends QueryPack {
   }
 
   def q87(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val e = Tables.vectors(s, d)
     // one count pass (parquet footer-stat cheap) sizes the quantizer;
     // first-`cells` vectors as the coarse centroids — the deterministic
@@ -218,7 +217,6 @@ object Round4Queries extends QueryPack {
     * Empty cells drop out of the next round's centroid set (can't
     * happen with data-point init unless two init vectors are equal). */
   def q89(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val dim = VectorOps.Dim
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"),

@@ -249,7 +249,6 @@ object Round8Queries extends QueryPack {
     * the hash. Element-wise HOFs, no shuffle before the presentation
     * sort; at 100 TB this is a map-only storage-prep pass. */
   def q151(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // ONE fused codegen loop (expressions/Int8QuantStats) instead of
     // the transform + three aggregate folds + zip_with HOF pipeline,
     // which evaluates every lambda interpreted per element — the wrong

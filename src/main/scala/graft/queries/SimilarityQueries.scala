@@ -46,7 +46,6 @@ object SimilarityQueries extends QueryPack {
     * ⌈4s/5⌉ = (4s+4) DIV 5; the size filter 0.8·sx ≤ sy ≤ sx/0.8 is
     * 4·sx ≤ 5·sy ∧ 4·sy ≤ 5·sx; the final test J ≥ 0.8 is 5·∩ ≥ 4·∪. */
   def q108(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // EXACT-SET COLLAPSE first (q114/q137's discipline, applied here
     // after the round-9 sf10 sweep caught q108 at 410 s): on a
     // clone-heavy corpus (the sf10 fixture is 1/100-unique by
@@ -143,7 +142,6 @@ object SimilarityQueries extends QueryPack {
     * persisted signature table. Integer forms: ⌈9s/10⌉ =
     * (9s+9) DIV 10; the verdict is 10·∩ ≥ 9·sa. */
   def q140(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     // q114's exact-set collapse, doc-level: clones collapse to one
     // representative per UNIQUE shingle set before any candidate work,
     // so the prefix join's cost is independent of the corpus
@@ -338,7 +336,6 @@ object SimilarityQueries extends QueryPack {
     * is the persisted artifact — each drop computes only B's signatures
     * (|B| ≪ |A|) and probes the band index. */
   def q112(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val bSrc = docs.filter(col("doc_id") % 3 === 0)
       .select((col("doc_id") + 20000000L).as("doc_id"),
@@ -383,7 +380,6 @@ object SimilarityQueries extends QueryPack {
     * asymmetry is extreme (q108 measured the opposite trade and keeps
     * its direct pipeline; see BASELINE.md round-6 negative result). */
   def q114(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     val (size40, stride) = (40, 30)
     def dig(shs: org.apache.spark.sql.Column) =
       call_function("digests60", array_distinct(shs))

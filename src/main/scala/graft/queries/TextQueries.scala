@@ -117,7 +117,6 @@ object TextQueries extends QueryPack {
     * expression (graft.expressions.WordFingerprint); TextOps.fingerprint
     * is the HOF reference form, equality-tested in ExpressionSpec. */
   def q43(s: SparkSession, d: String): DataFrame = {
-    graft.GraftFunctions.ensure(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         call_function("word_fingerprint", words(col("text"))).as("fp"))
@@ -141,7 +140,6 @@ object TextQueries extends QueryPack {
     * hash-verified exactly. */
   def q58(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Aggs
-    graft.GraftFunctions.ensure(s)
     val tok = Tables.documents(s, d)
       .select(explode(words(col("text"))).as("word"))
     // TypedImperativeAggregate form: mutable counters, serialized only at

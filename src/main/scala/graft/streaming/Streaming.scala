@@ -307,11 +307,17 @@ object Streaming {
     * `spark.sql.streaming.stateStore.providerClass` to the RocksDB
     * provider — the API requires it). Kept alongside the
     * flatMapGroupsWithState form; StreamingSpec asserts both produce
-    * the same totals. */
-  class RunningCountProcessor extends StatefulProcessor[Long, Ev, UserCount] {
+    * the same totals.
+    *
+    * `ttl` is the knob that keeps a 100 TB streaming job's state store
+    * bounded without hand-written cleanup timers: under `TTLConfig(d)` a
+    * key silent longer than `d` has its state evicted by the store
+    * itself, so the footprint tracks ACTIVE keys, not ever-seen keys;
+    * `TTLConfig.NONE` keeps every key. */
+  class RunningCountProcessor(ttl: TTLConfig) extends StatefulProcessor[Long, Ev, UserCount] {
     @transient private var count: ValueState[Long] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count", Encoders.scalaLong, TTLConfig.NONE)
+      count = getHandle.getValueState[Long]("count", Encoders.scalaLong, ttl)
     override def handleInputRows(key: Long, rows: Iterator[Ev],
                                  timers: TimerValues): Iterator[UserCount] = {
       val n = (if (count.exists()) count.get() else 0L) + rows.size
@@ -323,33 +329,17 @@ object Streaming {
   def runningCountsTws(events: Dataset[Ev]): Dataset[UserCount] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
-      .transformWithState(new RunningCountProcessor,
+      .transformWithState(new RunningCountProcessor(TTLConfig.NONE),
         TimeMode.None(), OutputMode.Update(), implicitly[org.apache.spark.sql.Encoder[UserCount]])
   }
 
-  /** [[RunningCountProcessor]] with state TTL — the knob that keeps a
-    * 100 TB streaming job's state store bounded without hand-written
-    * cleanup timers: a key silent longer than `ttl` has its state
-    * evicted by the store itself, so the footprint tracks ACTIVE keys,
-    * not ever-seen keys. TTL is processing-time by API contract
-    * (TimeMode.ProcessingTime required); an expired key restarts its
-    * count from zero, which StreamingSpec asserts. */
-  class TtlCountProcessor(ttl: java.time.Duration) extends StatefulProcessor[Long, Ev, UserCount] {
-    @transient private var count: ValueState[Long] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long]("count", Encoders.scalaLong, TTLConfig(ttl))
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-                                 timers: TimerValues): Iterator[UserCount] = {
-      val n = (if (count.exists()) count.get() else 0L) + rows.size
-      count.update(n)
-      Iterator(UserCount(key, n))
-    }
-  }
-
+  /** [[runningCountsTws]] with state TTL. TTL is processing-time by API
+    * contract (TimeMode.ProcessingTime required); an expired key
+    * restarts its count from zero, which StreamingSpec asserts. */
   def runningCountsTtl(events: Dataset[Ev], ttl: java.time.Duration): Dataset[UserCount] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.user_id)
-      .transformWithState(new TtlCountProcessor(ttl),
+      .transformWithState(new RunningCountProcessor(TTLConfig(ttl)),
         TimeMode.ProcessingTime(), OutputMode.Update(),
         implicitly[org.apache.spark.sql.Encoder[UserCount]])
   }
@@ -597,7 +587,6 @@ object Streaming {
   }
 
   private def sigTable(docs: DataFrame): DataFrame = {
-    graft.GraftFunctions.ensure(docs.sparkSession)
     docs
       .select(col("doc_id"),
         array_distinct(call_function("shingles3",
@@ -711,7 +700,6 @@ object Streaming {
   def annProbe(index: DataFrame, base: DataFrame, queries: DataFrame,
                shortlist: Int, k: Int, excludeSelf: Boolean): DataFrame = {
     import graft.functions.{Retrieval, VectorOps}
-    graft.GraftFunctions.ensure(index.sparkSession)
     val qs = queries.select(col("q_id"), col("qv"),
       VectorOps.signWord(col("qv"), 0).as("qlo"),
       VectorOps.signWord(col("qv"), 32).as("qhi"))
@@ -751,7 +739,6 @@ object Streaming {
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val s = batch.sparkSession
-        graft.GraftFunctions.ensure(s)
         def serveOnce(): DataFrame = {
           val (g, lists) = graft.queries.Round11Queries.readKnnGraphIndex(s, idxPath)
           val (frontier, _) = graft.queries.Round11Queries

@@ -297,7 +297,6 @@ class CorpusSpec extends SparkSpec {
 
   test("q126 exact-substring fidelity vs Lee et al.: a 50-token duplicate is never missed or fragmented; chimeric merges only over-remove") {
     import spark.implicits._
-    graft.GraftFunctions.ensure(spark)
     // vocabulary of unique words so no 3-gram is shared by accident
     def w(tag: String, n: Int): Seq[String] = (1 to n).map(i => s"$tag$i")
     val span50 = w("dup", 50)                  // the Lee-threshold span

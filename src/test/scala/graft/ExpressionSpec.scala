@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
 
-/** Native Catalyst expressions: bit-equality with the HOF formulation
-  * and registration through both routes. */
+/** Native Catalyst expressions: bit-equality with the HOF formulation,
+  * and the engine installer on a fresh session. */
 class ExpressionSpec extends SparkSpec {
 
   test("cosine_sim is bit-identical to the HOF cosine on real embeddings") {
-    GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 20)
@@ -24,7 +23,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim resolves in SQL text after runtime registration") {
-    GraftFunctions.ensure(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").head().getDouble(0)
     assert(math.abs(r - 1.0) < 1e-15)
@@ -34,20 +32,39 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("function registry is per-session; ensure() covers a fresh newSession") {
-    GraftFunctions.ensure(spark)
     val fresh = spark.newSession()
     // a new session has its own registry — the function must NOT leak in
     intercept[Exception] {
       fresh.sql("SELECT cosine_sim(array(1.0d), array(1.0d))").collect()
     }
     GraftFunctions.ensure(fresh)
+    GraftFunctions.ensure(fresh)
     val r = fresh.sql("SELECT cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) AS c")
       .head().getDouble(0)
     assert(math.abs(r - 1.0) < 1e-15)
+    // the planner strategies are installed once, however often ensure runs
+    val installed = fresh.experimental.extraStrategies
+    Seq(plans.AsOfJoinStrategy, plans.RangeJoinStrategy, plans.GraphWalkStrategy)
+      .foreach(st => assert(installed.count(_ == st) == 1, s"$st in $installed"))
+    // the driver contract installs the engine on a session it has never
+    // seen: each query runs first on its own fresh session
+    def firstOnFresh(q: String): DataFrame = {
+      val s = spark.newSession()
+      assert(s.experimental.extraStrategies.isEmpty)
+      SparkEntry.queries(q)(s, sf("sf0.001"))
+    }
+    Seq("q85_asof_operator" -> classOf[plans.AsOfJoinExec],
+        "q117_interval_join_exec" -> classOf[plans.RangeJoinExec],
+        "q171_graph_ann" -> classOf[plans.GraphWalkExec]).foreach { case (q, exec) =>
+      val plan = firstOnFresh(q).queryExecution.sparkPlan
+      assert(plan.exists(p => exec.isInstance(p)), s"$q must plan ${exec.getSimpleName}:\n$plan")
+    }
+    val q32 = firstOnFresh("q32_minhash_sig").queryExecution.analyzed
+    assert(q32.exists(_.expressions.exists(_.exists(_.isInstanceOf[expressions.MinHashSigs]))),
+      s"q32 must resolve minhash_sigs:\n$q32")
   }
 
   test("word_fingerprint equals the HOF fingerprint on real documents") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val diff = Tables.documents(spark, sf("sf0.001"))
       .select(
@@ -58,7 +75,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("minhash_sigs equals the per-seed HOF minhash on real documents") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val shs = TextOps.shingles3(TextOps.words(col("text")))
     val df = Tables.documents(spark, sf("sf0.001"))
@@ -71,7 +87,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cms_sketch (TypedImperativeAggregate) equals the Aggregator CMS") {
-    GraftFunctions.ensure(spark)
     import graft.functions.{Aggs, TextOps}
     val tok = Tables.documents(spark, sf("sf0.001"))
       .select(explode(TextOps.words(col("text"))).as("word"))
@@ -85,7 +100,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("simhash16 native equals the HOF simhash on real documents") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val ws = TextOps.words(col("text"))
     val diff = Tables.documents(spark, sf("sf0.001"))
@@ -104,7 +118,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("shingles3 native equals the HOF shingles3 on real documents") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val ws = TextOps.words(col("text"))
     val diff = Tables.documents(spark, sf("sf0.001"))
@@ -121,7 +134,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("digest60/digests60 equal the conv(substring(md5)) chain on real documents") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val shs = array_distinct(call_function("shingles3", TextOps.words(col("text"))))
     // array form: element order and values must match the HOF tree exactly
@@ -150,7 +162,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("setkey_md5 equals the md5(concat_ws(sort)) chain on real digest arrays") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     val hs = call_function("digests60",
       array_distinct(call_function("shingles3", TextOps.words(col("text")))))
@@ -183,7 +194,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("nearest_cells equals the HOF nearestCells ranking on real embeddings") {
-    GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
     val cents = e.filter(col("vec_id") < 16)
@@ -203,7 +213,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("nearest_cells top-m bound returns a prefix of the full ranking") {
-    GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
     val cents = e.filter(col("vec_id") < 16)
@@ -221,7 +230,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("shingles3 is empty (not a crash) for docs under 3 words") {
-    GraftFunctions.ensure(spark)
     import graft.functions.TextOps
     import spark.implicits._
     // regression: sequence(1, 0) steps DOWN in Spark, so the unguarded
@@ -241,7 +249,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim rejects non-double-array inputs with a clear error") {
-    GraftFunctions.ensure(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT cosine_sim('a', 'b')").collect()
     }
@@ -249,7 +256,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("zorder_key interleaves bits; codegen equals a SQL bit-math twin") {
-    GraftFunctions.ensure(spark)
     // hand-checked values: (x=1,y=0)->1, (x=0,y=1)->2, (x=3,y=3)->15,
     // (x=0xFFFF,y=0)->0x55555555, bit 16 now survives (31-bit domain),
     // masking drops bits above 31, and the key stays non-negative
@@ -273,7 +279,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("zorder_key clusters both dimensions: adjacent curve ranges have bounded key spans") {
-    GraftFunctions.ensure(spark)
     // every 4096-wide aligned z-range covers at most a 64-value span in
     // x and y (property of the Morton curve: 12 curve bits = 6+6 key
     // bits), which is exactly why min/max file pruning works per file
@@ -289,7 +294,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("collect_topk orientation: reverse=false k largest desc, reverse=true k smallest asc") {
-    GraftFunctions.ensure(spark)
     val r = spark.sql(
       "SELECT collect_topk(x, 3, false) AS lg, collect_topk(x, 3, true) AS sm " +
       "FROM VALUES (5),(1),(9),(3),(7) AS v(x)").head()
@@ -322,7 +326,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("collect_topk_distinct equals distinct-then-collect_topk, both orientations") {
-    GraftFunctions.ensure(spark)
     // duplicated scalar input: dups must occupy ONE slot, not k
     val r = spark.sql(
       "SELECT collect_topk_distinct(x, 3, false) AS lg, " +
@@ -349,7 +352,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("cdc_starts equals the HOF boundary scan on real payloads") {
-    GraftFunctions.ensure(spark)
     val hof = when(octet_length(col("payload")) === 0, array().cast("array<int>"))
       .otherwise(concat(
         array(lit(1)),
@@ -380,7 +382,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("int8_quant_stats equals the HOF quantization pipeline bit-for-bit") {
-    GraftFunctions.ensure(spark)
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val hof = emb
       .withColumn("scale", array_max(transform(col("embedding"), x => abs(x))).cast("double"))
@@ -404,7 +405,6 @@ class ExpressionSpec extends SparkSpec {
   }
 
   test("int8_quant_stats: codegen equals interpreted eval; zero vector yields NULL") {
-    GraftFunctions.ensure(spark)
     // force the interpreted path by evaluating through a filter that
     // Catalyst constant-folds (literal input) vs the codegen'd column path
     val lit1 = spark.sql(
@@ -424,7 +424,6 @@ class ExpressionSpec extends SparkSpec {
     // the q119/q124 rewrite: the fused ADC loop must reproduce the
     // slice+zip_with+aggregate column formulation exactly (same fold
     // order per dot, same subspace term order) on real embeddings
-    GraftFunctions.ensure(spark)
     import graft.functions.VectorOps
     val m = 8; val ds = 8
     val e = Tables.embeddings(spark, sf("sf0.001"))
@@ -455,7 +454,6 @@ class ExpressionSpec extends SparkSpec {
     // computed once, no slice copies) must reproduce the
     // slice+cosine_sim+FLOOR+greatest column formulation exactly on
     // real embedding pairs — every query (vec_id<8) against the corpus
-    GraftFunctions.ensure(spark)
     import graft.functions.VectorOps
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
@@ -474,7 +472,6 @@ class ExpressionSpec extends SparkSpec {
     // constant-folded literal inputs run nullSafeEval at optimization
     // time; a DataFrame column runs the doGenCode loop — both must
     // produce the identical long (the int8_quant_stats parity pattern)
-    GraftFunctions.ensure(spark)
     val a = (0 until 64).map(i => ((i * 37 % 101) - 50) / 50.0)
     val b = (0 until 64).map(i => ((i * 53 % 97) - 48) / 48.0)
     def arr(v: Seq[Double]) = array(v.map(lit): _*)
@@ -502,7 +499,6 @@ class ExpressionSpec extends SparkSpec {
   test("maxsim_score rejects short arrays on both eval paths and non-int literals") {
     // ArrayData.getDouble is an unchecked offset read — without the
     // guard a 32-element array would silently score adjacent memory
-    GraftFunctions.ensure(spark)
     import spark.implicits._
     val short = (0 until 32).map(_.toDouble)
     val full = (0 until 64).map(_ / 64.0 + 0.01)
@@ -537,7 +533,6 @@ class ExpressionSpec extends SparkSpec {
     // the q133 rewrite: the fused native loop must reproduce the
     // interpreted boundary-transform + chunk-assembly + per-chunk-md5
     // tree exactly, on real fixture text (incl. multi-byte words)
-    GraftFunctions.ensure(spark)
     val docs = Tables.documents(spark, sf("sf0.001"))
     val starts = concat(
       array(lit(1)),
@@ -580,7 +575,6 @@ class ExpressionSpec extends SparkSpec {
     // sparse vintage must surface as NULL (filtered like zero vectors)
     // instead of silently diverging from the oracle's NULL propagation —
     // in both the constant-folded (interpreted) and codegen column paths
-    GraftFunctions.ensure(spark)
     val lit = spark.sql(
       "SELECT int8_quant_stats(array(CAST(0.5 AS FLOAT), CAST(NULL AS FLOAT))) AS st")
       .head()

@@ -11,7 +11,6 @@ class GovernanceSpec extends SparkSpec {
 
   test("q108 prefix filtering is lossless: equals brute-force all-pairs J >= 0.8") {
     import graft.functions.TextOps
-    graft.GraftFunctions.ensure(spark)
     val sets = Tables.documents(spark, sf("sf0.001"))
       .select(col("doc_id"),
         array_distinct(call_function("shingles3", TextOps.words(col("text")))).as("shs"))
@@ -90,7 +89,6 @@ class GovernanceSpec extends SparkSpec {
 
   test("q114 prefix candidates are lossless: equals brute-force chunk containment") {
     import graft.functions.TextOps
-    graft.GraftFunctions.ensure(spark)
     val docs = Tables.documents(spark, sf("sf0.001"))
       .select(col("doc_id"), TextOps.words(col("text")).as("ws"))
       .withColumn("n_words", size(col("ws")))

@@ -12,7 +12,6 @@ class OpsSpec extends SparkSpec {
     // agree exactly (nearest by L2, ties to lowest cid) — the literal
     // path is the fixture-scale default, the broadcast argmin is what
     // runs when the centroid matrix outgrows literals at 100 TB
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
     val litPath = queries.Round4Queries.semAssign(e, 16)
@@ -135,7 +134,6 @@ class OpsSpec extends SparkSpec {
 
   test("ANN recall@5 vs brute force; multi-probe recovers boundary losses") {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.ensure(spark)
     // bits must track corpus size (bits ~ log2(n / bucketSize)): 500
     // vectors at 4 bits -> ~30/bucket. The default 8 bits over this
     // corpus gives singleton buckets and ~zero recall — which is the
@@ -183,7 +181,6 @@ class OpsSpec extends SparkSpec {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.ensure(spark)
     // q57's first-16-vectors quantizer is the oracle-reproducible
     // stand-in; here the same ivfSearch runs on centroids trained by
     // spark.ml KMeans — the actual train-then-embed-as-literals flow
@@ -305,7 +302,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("PQ: codebook members encode to their own code in every subspace") {
-    GraftFunctions.ensure(spark)
     val enc = SparkEntry.queries("q118_pq_encode")(spark, sf("sf0.001"))
       .filter(col("vec_id") < 16).collect()
     assert(enc.length == 16)
@@ -321,7 +317,6 @@ class OpsSpec extends SparkSpec {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.ensure(spark)
     val d = sf("sf0.01")
     // Jégou et al.'s recall@R: fraction of queries whose TRUE nearest
     // neighbor appears in the first R ADC results. (Plain top-k overlap
@@ -373,7 +368,6 @@ class OpsSpec extends SparkSpec {
 
   test("q124 IVFADC: candidates only from probed cells; recall is bounded by and tracks the probe ceiling") {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.ensure(spark)
     val d = sf("sf0.01")
     val nq = 20; val shortlist = 50; val nprobe = 2
     val e = Tables.embeddings(spark, d)
@@ -419,7 +413,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("pqEncode accepts an arbitrary (trained) codebook") {
-    GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), VectorOps.toD(col("embedding")).as("v"))
     // 2-entry codebook: near-zero fixture vectors must all pick entry 0

@@ -38,7 +38,6 @@ class PipelineSpec extends SparkSpec {
     assert(fp < probes.size * 0.05, s"FP rate ${fp.toDouble / probes.size}")
 
     // the codegen'd bloom_might_contain must agree with the JVM helper
-    GraftFunctions.ensure(spark)
     val df = (keys ++ probes).toDF("k")
       .crossJoin(keys.toDF("bk").agg(call_function("bloom_agg", col("bk")).as("bf")))
       .withColumn("hit", call_function("bloom_might_contain", col("bf"), col("k")))

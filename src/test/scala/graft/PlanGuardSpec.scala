@@ -50,7 +50,6 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("q118/q119 PQ: literal-codebook encode, broadcast ADC probe") {
-    graft.GraftFunctions.ensure(spark)
     val enc = SparkEntry.queries("q118_pq_encode")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
     assert(!requiredCorpusExchange(enc, "vec_id"),
@@ -73,7 +72,6 @@ class PlanGuardSpec extends SparkSpec {
     // overhead class (targeted race: 3.1x sf0.1 -> 1.64x sf3,
     // BENCH_SCALING round10_newqueries_targeted); this pin keeps the
     // efficient shape so the gap can only shrink with sf.
-    graft.GraftFunctions.ensure(spark)
     for (name <- Seq("q162_mrl_ann", "q163_hamming_ann", "q164_maxsim",
         "q165_hard_negatives")) {
       val plan = SparkEntry.queries(name)(spark, sf("sf0.001"))
@@ -111,7 +109,6 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("q124 IVFADC: literal-model encode, no corpus exchange, broadcast probe") {
-    graft.GraftFunctions.ensure(spark)
     val plan = SparkEntry.queries("q124_ivfpq_adc")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
     assert(!requiredCorpusExchange(plan, "vec_id"),
@@ -276,32 +273,15 @@ class PlanGuardSpec extends SparkSpec {
   // fails here instead of resurfacing as a silent 2-4x regression.
 
   test("heap top-k: q09 and every vector top-k, no Window") {
-    // q132 ranks inside its eager checkpoint, so the checkpoint plans a
-    // query runs while it is built count as its plans too
-    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    ns: Long): Unit =
-        if (f == "localCheckpoint") ran.add(qe.executedPlan.toString)
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                    e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    def plans(name: String): Seq[String] = {
-      ran.clear()
-      val plan = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution.executedPlan.toString
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      plan +: ran.toArray(Array.empty[String]).toSeq
-    }
-    try Seq("q09_topk_perkey", "q35_cosine_topk", "q37_ann_bucket_topk", "q57_ivf_ann",
+    Seq("q09_topk_perkey", "q35_cosine_topk", "q37_ann_bucket_topk", "q57_ivf_ann",
         "q65_ann_multiprobe", "q132_ann_recall_eval", "q163_hamming_ann",
         "q166_rrf_fusion", "q167_filtered_ann").foreach { name =>
-      val ps = plans(name)
-      assert(ps.exists(_.contains("ObjectHashAggregate")),
-        s"$name: top-k must stay a collect_topk heap aggregate:\n${ps.mkString("\n")}")
-      assert(!ps.exists(_.contains("Window")),
-        s"$name: no Window+row_number pass may reappear:\n${ps.mkString("\n")}")
-    } finally spark.listenerManager.unregister(listener)
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution.executedPlan.toString
+      assert(plan.contains("ObjectHashAggregate"),
+        s"$name: top-k must stay a collect_topk heap aggregate:\n$plan")
+      assert(!plan.contains("Window"),
+        s"$name: no Window+row_number pass may reappear:\n$plan")
+    }
     // q09's floor: no sort below the presentation ORDER BY
     val plan = SparkEntry.queries("q09_topk_perkey")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString
@@ -393,7 +373,6 @@ class PlanGuardSpec extends SparkSpec {
     // golden skeletons stop at an RDD scan — pin the two internal stage
     // plans directly instead (the round-11 measured sf100 lessons)
     import org.apache.spark.sql.functions._
-    graft.GraftFunctions.ensure(spark)
     val b = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val seedPlan = graft.queries.Round11Queries.seedGraph(b, 5)

@@ -146,7 +146,6 @@ class Round11Spec extends SparkSpec {
     // every round's edge list holds each (src, nb) once — topK's
     // distinct heap is what guarantees it
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val b = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val seed = Round11Queries.seedGraph(b, 15)
@@ -180,7 +179,6 @@ class Round11Spec extends SparkSpec {
     // measured when the recipe was frozen (r13: 0.825 @ 20, 0.925 @ 30)
     // — a recipe regression shows up first as a collapsing low notch.
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val dir = sf("sf0.1")
     val (vecs, exact, _) = exactTop5(dir)
     val idx = Round11Queries.knnGraphIndex(spark, dir)
@@ -363,7 +361,6 @@ class Round11Spec extends SparkSpec {
   private def walkAnswers(): Seq[String] = {
     import spark.implicits._
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
-    graft.GraftFunctions.ensure(spark)
     val d = sf("sf0.001")
     val b = Tables.embeddings(spark, d)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
@@ -486,7 +483,6 @@ class Round11Spec extends SparkSpec {
 
   test("ANN index compaction: read tasks collapse per the q136 plan, probe output byte-identical") {
     import graft.queries.Round10Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -527,7 +523,6 @@ class Round11Spec extends SparkSpec {
   }
 
   test("knnGraphBuild minUpdateFrac: early termination stops the descent once updates dry up") {
-    graft.GraftFunctions.ensure(spark)
     val b = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     // at a 10% update threshold on this fixture the loop must run PAST

@@ -188,7 +188,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("zorder_key + repartitionByRange clusters both keys per output partition") {
-    GraftFunctions.ensure(spark)
     // the actual OPTIMIZE ZORDER write path: range-repartition on the
     // curve key (sampled boundaries, parallel) + sort within partitions;
     // every output "file" must then cover a narrow span of BOTH keys,

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class SketchSpec extends SparkSpec {
 
   private def rankErrors(parts: Int): Seq[Double] = {
-    GraftFunctions.ensure(spark)
     val vals = Tables.events(spark, sf("sf0.01")).select(col("value"))
     val est = vals.repartition(parts)
       .agg(call_function("tdigest_quantiles", col("value"),
@@ -36,7 +35,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("tdigest_quantiles edges: empty group is NaN, singleton is exact") {
-    GraftFunctions.ensure(spark)
     val e = spark.sql(
       "SELECT tdigest_quantiles(x, array(0.5D)) AS q FROM (SELECT 1.0D AS x WHERE false)")
       .head().getSeq[Double](0)
@@ -57,7 +55,6 @@ class SketchSpec extends SparkSpec {
     // fresh checkout; the driver's gate covers sf0.01 unconditionally.
     val sf1 = new java.io.File("target/testdata/sf1/events.parquet")
     assume(sf1.exists(), "sf1 fixture not generated; run tools/scalegen.py")
-    GraftFunctions.ensure(spark)
     val vals = spark.read.parquet(sf1.getPath).select(col("value")).repartition(32)
     val probs = Seq(0.1, 0.5, 0.95, 0.99)
     val est = vals.agg(call_function("tdigest_quantiles", col("value"),
@@ -71,7 +68,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("tdigest_quantiles accepts DECIMAL columns and DECIMAL probability literals") {
-    GraftFunctions.ensure(spark)
     // Both were runtime ClassCastExceptions before round 8: Spark's
     // Decimal does not extend java.lang.Number, and unsuffixed SQL
     // literals like array(0.5, 0.95) fold to DECIMAL elements.
@@ -83,7 +79,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("tdigest_quantiles rejects a non-numeric probabilities array with a usage error") {
-    GraftFunctions.ensure(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT tdigest_quantiles(x, array('a')) FROM VALUES (1.0D) AS v(x)").collect()
     }

@@ -24,6 +24,7 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    GraftFunctions.ensure(s)
     s
   }
 }

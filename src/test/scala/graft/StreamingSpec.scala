@@ -562,7 +562,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming LSH near-dup: per-drop probe of the static corpus index equals batch") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.GraftFunctions.ensure(spark)
     val corpus = Seq(
       Streaming.Doc(1, "the quick brown fox jumps over the lazy dog tonight"),
       Streaming.Doc(2, "pack my box with five dozen liquor jugs right now"),
@@ -703,7 +702,6 @@ class StreamingSpec extends SparkSpec {
   test("streaming ANN probe: per-batch top-k against the static binary index equals batch and q163") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.GraftFunctions.ensure(spark)
     // static serving artifacts: the write-once ANN index + base vectors
     val idxPath = graft.queries.Round10Queries.annIndex(spark, sf("sf0.001"))
     val index = spark.read.parquet(idxPath).persist()
@@ -758,7 +756,6 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN index ingest loop: appends are served exactly like a from-scratch rebuild") {
     import graft.queries.Round10Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -818,7 +815,6 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.{LlmQueries, Round10Queries}
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -863,7 +859,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
-    graft.GraftFunctions.ensure(spark)
     val joined = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
       .join(Tables.embeddings(spark, sf("sf0.001"))
           .select(col("vec_id"), col("label"),
@@ -912,7 +907,6 @@ class StreamingSpec extends SparkSpec {
   test("re-add under a tombstoned id: append supersedes the pending delete in both artifacts") {
     import spark.implicits._
     import graft.queries.{Round10Queries, Round11Queries}
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
@@ -975,7 +969,6 @@ class StreamingSpec extends SparkSpec {
 
   test("kNN-graph ingest loop: drop folds in, old lists only improve, recall tracks a rebuild") {
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1030,7 +1023,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
-    graft.GraftFunctions.ensure(spark)
     // base corpus 0..399: fixture text + the embedding sharing its id
     val joined = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
       .join(Tables.embeddings(spark, sf("sf0.001"))
@@ -1150,7 +1142,6 @@ class StreamingSpec extends SparkSpec {
   test("knngraph ARTIFACT lifecycle: on-disk append serves, delete hides, compaction restores shape") {
     import spark.implicits._
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1252,7 +1243,6 @@ class StreamingSpec extends SparkSpec {
   test("knngraph compaction re-caps the bucket lists exactly as the build caps the live corpus") {
     import spark.implicits._
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e0 = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     // the fixture twice under fresh ids: a copy shares its original's
@@ -1300,7 +1290,6 @@ class StreamingSpec extends SparkSpec {
 
   test("HNSW maintenance of an empty drop or delete set returns the layers unchanged") {
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1317,7 +1306,6 @@ class StreamingSpec extends SparkSpec {
 
   test("cluster ingest loop: merges monotone, rebuild refines incremental, deletes re-elect reps") {
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1380,7 +1368,6 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
-    graft.GraftFunctions.ensure(spark)
     val joined = Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
       .join(Tables.embeddings(spark, sf("sf0.001"))
           .select(col("vec_id"), col("label"),
@@ -1479,7 +1466,6 @@ class StreamingSpec extends SparkSpec {
 
   test("HNSW layer ingest: drop folds into its promoted layers, upper layers untouched") {
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1543,7 +1529,6 @@ class StreamingSpec extends SparkSpec {
   test("serving ACROSS the compaction swap window: pre- or post-compaction answers, never an error") {
     import spark.implicits._
     import graft.queries.Round11Queries
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val bOld = e.filter(col("vec_id") < 400)
@@ -1697,7 +1682,6 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.{LlmQueries, Round10Queries, Round11Queries}
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    graft.GraftFunctions.ensure(spark)
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), _.cast("double")).as("v"))
