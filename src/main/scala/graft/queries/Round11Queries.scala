@@ -1,6 +1,9 @@
 package graft.queries
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{Retrieval, VectorOps}
@@ -627,8 +630,11 @@ object Round11Queries extends QueryPack {
     * Scale shape (the serve-time economics the brute/Hamming paths
     * can't reach): per query per hop the work is ≤ beam·K scored id
     * pairs, and the whole search is ONE [[GraphWalk]] — the query rows
-    * stream, the graph, the bucket lists and the vectors arrive as
-    * broadcasts, and each task runs every hop of its queries in memory.
+    * stream, the graph, the bucket lists and the vectors are built into
+    * one broadcast index, and each task runs every hop of its queries in
+    * memory. The graph and bucket lists are the resident read of
+    * [[readKnnGraphIndex]]; over a checkpointed corpus the index itself
+    * stays resident between requests.
     * Nothing corpus-sized ever shuffles at serve time; the O(n) work
     * all lives in the write-once [[knnGraphIndex]] build. Recall@5
     * ≥ 0.9 vs exact brute force is pinned in Round11Spec — above
@@ -777,10 +783,40 @@ object Round11Queries extends QueryPack {
     Artifacts.delete(s, Artifacts.knngraph(idxPath), delIds, key)
 
   /** Delete-aware read of the artifact's newest manifest: (edges, bucket
-    * lists) minus the tombstone set (both anti-joins broadcast); a plain
-    * artifact reads as bare scans. */
-  def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) =
-    readKnnGraph(s, Artifacts.snapshot(s, Artifacts.knngraph(idxPath)))
+    * lists) minus the tombstone set (both anti-joins broadcast),
+    * materialized by an eager `localCheckpoint`, so the frames read no
+    * artifact file once returned. The read stays RESIDENT per (session,
+    * root), keyed on the manifest's version and live files: a call at
+    * the same manifest costs one listing and one small file read and
+    * returns the same frames, so [[GraphWalk]] keeps its built index for
+    * them; a new manifest reads again and releases the old frames. A
+    * directory never committed (version -1) is read but never kept. The
+    * resident frames are not in the cache manager, so
+    * `spark.catalog.clearCache()` keeps them. */
+  def readKnnGraphIndex(s: SparkSession, idxPath: String): (DataFrame, DataFrame) = {
+    val m = Artifacts.snapshot(s, Artifacts.knngraph(idxPath))
+    resident.synchronized {
+      val at = (s, idxPath)
+      resident.get(at).filter(r => r.version == m.version && r.files == m.files).getOrElse {
+        val (g, lists) = readKnnGraph(s, m)
+        val read = Resident(m.version, m.files, g.localCheckpoint(true), lists.localCheckpoint(true))
+        (if (m.version < 0) resident.remove(at) else resident.put(at, read))
+          .foreach(old => Seq(old.graph, old.buckets).foreach(_.queryExecution.analyzed.foreach {
+            case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+            case _ => ()
+          }))
+        read
+      }.frames
+    }
+  }
+
+  /** One resident knngraph read: the manifest it was read at and its
+    * checkpointed frames. */
+  private final case class Resident(version: Long, files: Map[String, Seq[(String, Long)]],
+                                    graph: DataFrame, buckets: DataFrame) {
+    def frames: (DataFrame, DataFrame) = (graph, buckets)
+  }
+  private val resident = mutable.Map.empty[(SparkSession, String), Resident]
 
   private def readKnnGraph(s: SparkSession, m: Artifacts.Manifest): (DataFrame, DataFrame) =
     (m.live(s, "graph", "src", "nb"), m.live(s, "buckets", "nb"))
@@ -1057,8 +1093,9 @@ object Round11Queries extends QueryPack {
     val g0 = readKnnGraphIndex(s, knnGraphIndex(s, d))._1
     val idxH = hnswIndex(s, d)
     val layers = s.read.parquet(s"$idxH/layers")
-    // the corpus is read once, as the walk's broadcast vectors child —
-    // resident for every hop the way a serving tier holds it in RAM
+    // the corpus is read once, into the walk's index — resident for
+    // every hop the way a serving tier holds it in RAM; the layers and
+    // the corpus are file scans, so the index is built per execution
     val b = Tables.vectors(s, d)
     hnswSearch(layers, g0, b, fixtureQueries(b)).orderBy(col("q_id"), col("rn"))
   }
@@ -1073,10 +1110,12 @@ object Round11Queries extends QueryPack {
     *
     * The whole descent (the entry, [[HnHops]] hops on each of the
     * [[HnL]] layers, then [[GdHops]] L0 hops) is ONE [[GraphWalk]]: every
-    * hop of a query runs inside the task that holds it, against broadcast
-    * layers, graph and vectors, so a request costs the broadcasts plus
-    * one stage — no job, shuffle or checkpoint per hop. The final
-    * top-[[GdK]] is one distinct heap after it. */
+    * hop of a query runs inside the task that holds it, against one
+    * broadcast index of the layers, graph and vectors, so a request costs
+    * the job that collects them plus one stage — no job, shuffle or
+    * checkpoint per hop (a repeat over persisted checkpoints reuses the
+    * index: see [[GraphWalk]]). The final top-[[GdK]] is one distinct
+    * heap after it. */
   private[graft] def hnswSearch(layers: DataFrame, g0: DataFrame,
                                 b: DataFrame, q: DataFrame): DataFrame = {
     // the global entry point: the (level desc, md5 asc, id asc) minimum

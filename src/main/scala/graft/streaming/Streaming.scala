@@ -724,15 +724,18 @@ object Streaming {
   /** Streaming graph-ANN serving: each arriving micro-batch of query
     * vectors (q_id, qv) beam-searches the ON-DISK knngraph artifact and
     * lands its top-k — the graph twin of [[annSearchStream]] and the
-    * serve side of the artifact lifecycle: every micro-batch re-plans
-    * the delete-aware read, so queries arriving after an
-    * `appendToKnnGraphIndex` find the new vectors and queries arriving
-    * after a `deleteFromKnnGraphIndex` never see the retired ones
-    * (spec-pinned across a mutation sequence). Per batch the work is
-    * q171's `graphSearch` — one in-task graph walk against the broadcast
-    * artifact read and `base` vectors, nothing shuffled but the top-k —
-    * and its top-k through the shared bounded heap, so the rows equal
-    * q171's (spec-pinned). */
+    * serve side of the artifact lifecycle: every micro-batch reads the
+    * newest manifest, and the resident delete-aware read
+    * (`readKnnGraphIndex`) is read again only when a commit changed it,
+    * so queries arriving after an `appendToKnnGraphIndex` find the new
+    * vectors and queries arriving after a `deleteFromKnnGraphIndex`
+    * never see the retired ones (spec-pinned across a mutation
+    * sequence). Per batch the work is q171's `graphSearch` — one
+    * in-task graph walk against the materialized artifact read and
+    * `base` vectors, nothing shuffled but the top-k — and its top-k
+    * through the shared bounded heap, so the rows equal q171's
+    * (spec-pinned). The read materializes inside the retry scope, so
+    * the plan the sink receives reads no artifact file. */
   def graphSearchStream(queries: DataFrame, idxPath: String, base: DataFrame,
                         k: Int, sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream
@@ -745,9 +748,6 @@ object Streaming {
             .graphSearch(g, lists, base, batch.toDF())
           graft.functions.Retrieval.heapTopK(frontier, -col("sim"), k)
             .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
-            // materialize INSIDE the retry scope: the sink must never
-            // receive a lazy plan that can still hit a retired file
-            .localCheckpoint(true)
         }
         // a commit can retire a part file or tombstone this batch's
         // plan pinned: re-plan (Artifacts.retryVanished)

@@ -295,6 +295,18 @@ class PlanGuardSpec extends SparkSpec {
     assert(sorts <= 1, s"only the presentation sort may remain ($sorts found):\n$plan")
   }
 
+  test("q171 walks one built index: no broadcast exchange under GraphWalk") {
+    val df = SparkEntry.queries("q171_graph_ann")(spark, sf("sf0.001"))
+    df.collect()
+    // the executed plan, through AQE's query stages
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val walks = aqe.collect(df.queryExecution.executedPlan) { case w: graft.plans.GraphWalkExec => w }
+    assert(walks.size == 1, s"q171 must walk once, got ${walks.size}")
+    val broadcasts = walks.head.children.flatMap(c => aqe.collect(c) {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b })
+    assert(broadcasts.isEmpty, s"the walk collects its tables itself:\n${walks.head}")
+  }
+
   test("q11 floor: fact pre-aggregated below the join, top-10 cut before the dimension (TakeOrdered + broadcast)") {
     val plan = SparkEntry.queries("q11_join3_revenue")(spark, sf("sf0.001"))
       .queryExecution.executedPlan.toString

@@ -1240,6 +1240,134 @@ class StreamingSpec extends SparkSpec {
     sq.stop()
   }
 
+  test("resident knngraph serve: each probe equals a file-scan walk across append, delete, compaction and rebuild") {
+    import spark.implicits._
+    import graft.queries.Round11Queries
+    val e = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    // the checkpointed base keeps the walk's index resident; the file-scan
+    // base `e` and the manifest's own scans are never kept
+    val base = e.localCheckpoint(true)
+    val root = java.nio.file.Files.createTempDirectory("graft_knng_resident").toString + "/knng"
+    val at = Artifacts.knngraph(root)
+    def vecOf(id: Long): Seq[Double] =
+      e.filter(col("vec_id") === id).select("v").collect().head.getSeq[Double](0)
+    val q = Seq(450L, 470L, 13L).map(id => (9000L + id, vecOf(id))).toDF("q_id", "qv")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("q_id", "vec_id", "sim").collect().map(_.toString).toSeq.sorted
+    def probe(when: String): Seq[String] = {
+      val (g, lists) = Round11Queries.readKnnGraphIndex(spark, root)
+      val got = rows(Round11Queries.graphSearch(g.select(col("src"), col("nb")), lists, base, q)._1)
+      val m = Artifacts.snapshot(spark, at)
+      val want = rows(Round11Queries.graphSearch(m.live(spark, "graph", "src", "nb")
+        .select(col("src"), col("nb")), m.live(spark, "buckets", "nb"), e, q)._1)
+      val same = got == want
+      assert(same, s"$when: the resident serve differs from the file-scan walk " +
+        s"at manifest ${m.version}:\n${got.diff(want).take(5)}\nvs\n${want.diff(got).take(5)}")
+      got
+    }
+    def layDown(b: org.apache.spark.sql.DataFrame): Unit = {
+      Round11Queries.knnGraphBuild(b, 15, 30, 1).select(col("src"), col("nb"), col("sim"))
+        .repartition(4).write.parquet(s"$root/graph")
+      Round11Queries.cappedBuckets(Round11Queries.bucketMembership(b))
+        .select(col("t"), col("bk"), col("nb")).repartition(2).write.parquet(s"$root/buckets")
+    }
+    def mutate(drop: org.apache.spark.sql.DataFrame, del: Long): Unit = {
+      Round11Queries.appendToKnnGraphIndex(spark, root, e, drop)
+      Round11Queries.deleteFromKnnGraphIndex(spark, root, Seq(del).toDF("vec_id"))
+      assert(Round11Queries.compactKnnGraphIndex(spark, root) > 0)
+    }
+    layDown(e.filter(col("vec_id") < 400))
+    val p0 = probe("before the append")
+    Round11Queries.appendToKnnGraphIndex(spark, root, e, e.filter(col("vec_id") >= 400))
+    val p1 = probe("after the append")
+    assert(p1 != p0, "the append must change the probe's answer")
+    Round11Queries.deleteFromKnnGraphIndex(spark, root, Seq(450L).toDF("vec_id"))
+    val p2 = probe("after the delete")
+    assert(p2 != p1, "the delete must change the probe's answer")
+    assert(Round11Queries.compactKnnGraphIndex(spark, root) > 0)
+    val p3 = probe("after the compaction")
+    val v3 = Artifacts.snapshot(spark, at).version
+    // delete the artifact and rebuild it at the same path, up to the
+    // same version with other content and no serve in between: a
+    // snapshot keyed on the bare version number would answer from the
+    // old files
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    layDown(e.filter(col("vec_id") < 300))
+    mutate(e.filter(col("vec_id").between(300, 399)), 13L)
+    val rebuilt = Artifacts.snapshot(spark, at).version
+    assert(rebuilt == v3, s"the rebuild must reach the served version $v3, got $rebuilt")
+    val p4 = probe("after the delete and rebuild")
+    assert(p4 != p3, "the rebuild must change the probe's answer")
+  }
+
+  test("resident knngraph serve: a repeat request runs only the walk; one snapshot per root") {
+    import spark.implicits._
+    import graft.queries.Round11Queries
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val e = Tables.embeddings(spark, sf("sf0.001"))
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val base = e.localCheckpoint(true)
+    val root = java.nio.file.Files.createTempDirectory("graft_knng_jobs").toString + "/knng"
+    Artifacts.commit(spark, Artifacts.knngraph(root), "build")(_ => Some(Artifacts.Change(Seq(
+      "graph" -> Round11Queries.knnGraphBuild(e.filter(col("vec_id") < 400), 15, 30, 1)
+        .select(col("src"), col("nb"), col("sim")),
+      "buckets" -> Round11Queries.cappedBuckets(
+        Round11Queries.bucketMembership(e.filter(col("vec_id") < 400)))
+        .select(col("t"), col("bk"), col("nb"))))))
+    val q = e.filter(col("vec_id") < 8).collect()
+      .map(r => (9000L + r.getLong(0), r.getSeq[Double](1))).toSeq.toDF("q_id", "qv")
+    def serve(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+      val (g, lists) = Round11Queries.readKnnGraphIndex(spark, root)
+      Round11Queries.graphSearch(g.select(col("src"), col("nb")), lists, base, q)._1.collect()
+      (g, lists)
+    }
+    // jobs of this thread's group only: other suites may share the context
+    val sc = spark.sparkContext
+    val group = s"resident-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(jobs.add)
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.clear()
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once a later sentinel job is
+      // seen, every measured job has been counted
+      val sentinel = s"$group-sentinel"
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(sentinel), "the listener never saw the sentinel job")
+      jobs.toArray.count(_ == group)
+    }
+    sc.addSparkListener(listener)
+    try {
+      serve()
+      spark.catalog.clearCache()
+      val repeat = jobsOf(serve())
+      assert(repeat == 1, s"a repeat request at one manifest must run only the walk, ran $repeat jobs")
+    } finally sc.removeSparkListener(listener)
+    // three commits, each served: only the newest snapshot stays persisted
+    def checkpoints(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.queryExecution.analyzed.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+    val snapshots = Seq(400L, 401L, 402L).map { id =>
+      Round11Queries.deleteFromKnnGraphIndex(spark, root, Seq(id).toDF("vec_id"))
+      val (g, lists) = serve()
+      checkpoints(g) ++ checkpoints(lists)
+    }
+    assert(snapshots.forall(_.size == 2) && snapshots.flatten.distinct.size == 6,
+      s"each commit must read a new snapshot of two checkpoints: $snapshots")
+    val persisted = sc.getPersistentRDDs.keySet
+    assert(snapshots.flatten.filter(persisted.contains) == snapshots.last,
+      s"only the newest snapshot may stay persisted: $snapshots, persisted ${persisted.toSeq.sorted}")
+  }
+
   test("knngraph compaction re-caps the bucket lists exactly as the build caps the live corpus") {
     import spark.implicits._
     import graft.queries.Round11Queries
