@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{BooleanType, IntegerType}
 import graft.expressions.{BloomFilterAgg, BloomMightContain, CdcStarts, CdcWordChunks, CosineSimilarity, CountMinSketchAgg, Digest60, Digests60, MinHashSigs, NearestCells, SetKeyMd5, Shingles2, Shingles3, Simhash16, WordFingerprint, ZorderKey}
-import graft.plans.{AsOfJoinStrategy, GraphWalkStrategy, RangeJoinStrategy}
+import graft.plans.{AsOfJoinStrategy, GraphWalkStrategy, RangeJoinStrategy, TwoStageRouteStrategy}
 
 /** The engine's installer: `ensure(spark)` registers graft's native
-  * Catalyst expressions and its three planner strategies on a session.
+  * Catalyst expressions and its four planner strategies on a session.
   *
   * It is called where a session enters the engine — `SparkEntry.entry`
   * and every `SparkEntry.queries` function, the test suite's shared
@@ -199,7 +199,7 @@ object GraftFunctions {
     }
     val x = spark.experimental
     x.synchronized {
-      x.extraStrategies ++= Seq(AsOfJoinStrategy, RangeJoinStrategy, GraphWalkStrategy)
+      x.extraStrategies ++= Seq(AsOfJoinStrategy, RangeJoinStrategy, GraphWalkStrategy, TwoStageRouteStrategy)
         .filterNot(x.extraStrategies.contains)
     }
   }

@@ -3,18 +3,23 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.TwoStageRoute
+
 /** The retrieval stages every ANN path is built from, each written once:
   * the by-id exact scorer ([[VectorOps.cosineQNative]] over vectors
   * fetched by id), the bounded per-query heaps (plain and distinct) and
-  * the Hamming two-stage route (sign-word shortlist, by-id rerank). The
-  * graph searches are one operator, [[graft.plans.GraphWalk]], which
-  * [[graft.queries.Round11Queries]] calls with each search's scorer and
-  * layer schedule.
+  * the two-stage route (a shortlist by a cheap key, a by-id rerank). The
+  * route and the graph searches are operators: the Hamming (q163, q167,
+  * q183, `Streaming.annProbe`) and prefix-cosine (q162) routes are one
+  * [[graft.plans.TwoStageRoute]], and the graph searches one
+  * [[graft.plans.GraphWalk]], which [[graft.queries.Round11Queries]]
+  * calls with each search's scorer and layer schedule.
   *
-  * [[heapTopK]] is the engine's only per-query vector ranking: the
-  * brute-force, bucket, IVF and PQ searches, the Hamming rerank, rank
-  * fusion and q175's MMR argmax all cut their candidates through it,
-  * never a Window. [[topDistinct]] is the one heap over candidates that
+  * [[heapTopK]] is the engine's per-query vector ranking: the
+  * brute-force, bucket, IVF and PQ searches, rank fusion and q175's MMR
+  * argmax all cut their candidates through it, never a Window, and the
+  * route's two cuts keep its order inside the operator.
+  * [[topDistinct]] is the one heap over candidates that
   * repeat: the graph searches' final cuts and every per-node neighbor
   * list of the kNN-graph family (seed, descent rounds, appends,
   * compaction, the mutual-edge cut). Every rank is integer-keyed with
@@ -32,8 +37,10 @@ object Retrieval {
                (cand: DataFrame): DataFrame =
     base.join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(qVecs.select(col("q_id"), col("qv"))), Seq("q_id"))
-      .select(cand.columns.map(col) :+
-        VectorOps.cosineQNative(col("qv"), col("v")).as(name): _*)
+      .select(cand.columns.map(col) :+ byIdScore.as(name): _*)
+
+  /** The by-id exact score, basis-point cosine of qv against v. */
+  private def byIdScore: Column = VectorOps.cosineQNative(col("qv"), col("v"))
 
   /** Bounded-heap top-k per q_id by (rank key asc, vec_id asc): each
     * task keeps k rows per q_id and only |queries|×k rows cross the
@@ -71,34 +78,32 @@ object Retrieval {
         col(s"e.$id").as(id), key(col("e.hk")).as(score))
   }
 
-  /** Stage 1 of the Hamming route: bit_count(xor) over the two packed
-    * sign words ([[VectorOps.signWord]]) of index rows (vec_id, lo, hi)
-    * against broadcast query words (q_id, qlo, qhi), the `shortlist`
-    * nearest kept per query. 8 index bytes per vector, integer-exact.
-    * `excludeSelf` drops the row whose vec_id equals the q_id (queries
-    * drawn from the corpus). Returns (q_id, vec_id, ham). */
-  def hammingShortlist(index: DataFrame, qSigs: DataFrame, shortlist: Int,
-                       excludeSelf: Boolean = true): DataFrame = {
-    val cand = index.select(col("vec_id"), col("lo"), col("hi"))
-      .join(broadcast(qSigs.select(col("q_id"), col("qlo"), col("qhi"))),
-        if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-      .select(col("q_id"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-         bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long").as("ham"))
-    heapTopK(cand, col("ham"), shortlist)
-      .select(col("q_id"), col("vec_id"), col("hk").as("ham"))
-  }
+  /** The two-stage route of [[graft.plans.TwoStageRoute]]: per query
+    * (q_id, the key's columns) of `qKeys`, the `shortlist` index rows
+    * (vec_id, …) of smallest `key`, reranked by the [[scoreById]] cosine
+    * of their `base` vectors (vec_id, v) against `qVecs` (q_id, qv);
+    * top-`k` by (sim_q desc, vec_id), as [[heapTopK]] over the scored
+    * shortlist would cut it. Two Spark jobs, no broadcast exchange.
+    * `excludeSelf` drops the index row whose vec_id equals the q_id
+    * (queries drawn from the corpus). Returns (q_id, rn, vec_id, key,
+    * sim_q). */
+  def twoStageRoute(index: DataFrame, qKeys: DataFrame, key: Column, base: DataFrame,
+                    qVecs: DataFrame, shortlist: Int, k: Int,
+                    excludeSelf: Boolean = true): DataFrame =
+    TwoStageRoute(qKeys, index, key, qVecs, base, byIdScore, shortlist, k, excludeSelf)
+      .withColumnRenamed("score", "sim_q")
 
-  /** The Hamming two-stage route: [[hammingShortlist]], then the
-    * shortlist reranked by [[scoreById]] against `qVecs` (q_id, qv);
-    * top-`k` by (sim_q desc, vec_id) through [[heapTopK]], with `ham`
-    * carried, over |queries|×shortlist rows. Returns (q_id, rn, vec_id,
-    * ham, sim_q). */
+  /** The Hamming two-stage route: [[twoStageRoute]] with stage 1 ranking
+    * index rows (vec_id, lo, hi) by bit_count(xor) over their two packed
+    * sign words ([[VectorOps.signWord]]) against the query words (q_id,
+    * qlo, qhi): 8 index bytes per vector, integer-exact. Returns (q_id,
+    * rn, vec_id, ham, sim_q). */
   def hammingRoute(index: DataFrame, qSigs: DataFrame, base: DataFrame,
                    qVecs: DataFrame, shortlist: Int, k: Int,
-                   excludeSelf: Boolean = true): DataFrame = {
-    val short = hammingShortlist(index, qSigs, shortlist, excludeSelf)
-    heapTopK(scoreById(base, qVecs)(short), -col("sim"), k, Seq("ham"))
-      .select(col("q_id"), col("rn"), col("vec_id"), col("ham"), (-col("hk")).as("sim_q"))
-  }
+                   excludeSelf: Boolean = true): DataFrame =
+    twoStageRoute(index, qSigs,
+      (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
+       bit_count(col("hi").bitwiseXOR(col("qhi")))).cast("long"),
+      base, qVecs, shortlist, k, excludeSelf)
+      .withColumnRenamed("key", "ham")
 }

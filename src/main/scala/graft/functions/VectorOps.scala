@@ -46,7 +46,7 @@ object VectorOps {
     * a sequential fold acc·2 + [x>0], so element off+1 carries weight
     * 2³¹. Two words cover a 64-dim vector without touching the BIGINT
     * sign bit in either engine (the binary-quantization signature
-    * [[Retrieval.hammingShortlist]] ranks; oracle twin in
+    * [[Retrieval.hammingRoute]]'s stage 1 ranks; oracle twin in
     * Round10Queries.signWordSql). */
   def signWord(v: Column, off: Int): Column =
     aggregate(slice(v, off + 1, 32), lit(0L),

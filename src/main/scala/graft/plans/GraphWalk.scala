@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Expression, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
@@ -281,6 +281,20 @@ object GraphWalk {
     Seq("vec_id" -> LongType),
     Seq("lvl" -> IntegerType, "src" -> LongType, "nb" -> LongType))
 
+  /** `c` resolved against the columns `input` alone, as the BIGINT
+    * scorer an operator binds to its joined rows. */
+  private[plans] def resolveLong(spark: SparkSession, input: Seq[Attribute], c: Column,
+                                 name: String, op: String): Expression = {
+    val resolved = GraftSqlBridge.ofRows(spark, LocalRelation(input))
+      .select(c.as(name)).queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e
+        case p => throw new IllegalStateException(s"$op: unresolvable scorer $p")
+      }
+    require(resolved.dataType == LongType,
+      s"$op: the scorer must be BIGINT, got ${resolved.dataType.simpleString}")
+    resolved
+  }
+
   /** The walk of every `query` row through `schedule` (see
     * [[GraphWalkPlan]] for the children's columns; `query` and `vectors`
     * keep their other columns for the scorer, the rest keep only
@@ -298,14 +312,7 @@ object GraphWalk {
         df.select(lead.map { case (n, t) => col(n).cast(t).as(n) } ++ rest.map(col): _*)
           .queryExecution.analyzed
       }
-    // resolve the scorer against the query and vectors columns alone
-    val resolved = GraftSqlBridge.ofRows(spark, LocalRelation(plans.head.output ++ plans(3).output))
-      .select(score.as(name)).queryExecution.analyzed match {
-        case Project(Seq(Alias(e, _)), _) => e
-        case p => throw new IllegalStateException(s"GraphWalk: unresolvable scorer $p")
-      }
-    require(resolved.dataType == LongType,
-      s"GraphWalk: the scorer must be BIGINT, got ${resolved.dataType.simpleString}")
+    val resolved = resolveLong(spark, plans.head.output ++ plans(3).output, score, name, "GraphWalk")
     val out = Seq(AttributeReference("q_id", LongType, nullable = false)(),
       AttributeReference("vec_id", LongType, nullable = false)(),
       AttributeReference(name, LongType)())

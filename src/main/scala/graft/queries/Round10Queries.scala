@@ -257,27 +257,24 @@ object Round10Queries extends QueryPack {
   private val MrlK = 5       // final top-k
   private val MrlQ = 8       // queries = vec_id < MrlQ
 
-  /** Stage 1 ranks by cosine over the 16-dim PREFIX COLUMN of the
-    * write-once [[annIndex]] layout — parquet pruning means the scan
-    * reads 16 doubles per row, never the 256-byte embedding payload
-    * (PlanGuard-pinned) — and keeps a 32-candidate shortlist per query
-    * via the bounded heap; stage 2 re-fetches ONLY the shortlist rows
-    * by id from the BASE table and reranks by exact full-dim cosine.
-    * The corpus never shuffles; shuffled bytes are |queries|×32 ids. */
+  /** The [[graft.functions.Retrieval.twoStageRoute]] with stage 1
+    * ranking by cosine over the 16-dim PREFIX COLUMN of the write-once
+    * [[annIndex]] layout — parquet pruning means the scan reads 16
+    * doubles per row, never the 256-byte embedding payload
+    * (PlanGuard-pinned) — keeping a 32-candidate shortlist per query;
+    * stage 2 scans the BASE table, keeps ONLY the shortlisted ids and
+    * reranks them by exact full-dim cosine. The corpus never
+    * shuffles; the driver and the merge receive per-task heaps of
+    * |queries|×32 and |queries|×5 rows. */
   def q162(s: SparkSession, d: String): DataFrame = {
     val idx = readAnnIndex(s, annIndex(s, d)).select(col("vec_id"), col("prefix"))
     val qp = idx.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("prefix").as("qp"))
-    val cand = idx.join(broadcast(qp), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosineQNative(col("qp"), col("prefix")).as("psim"))
-    val short = heapTopK(cand, -col("psim"), MrlShort)
-      .select(col("q_id"), col("vec_id"))
-    // rerank: fetch shortlist vectors by id from the base table
     val e = Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < MrlQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    heapTopK(Retrieval.scoreById(e, q, "fsim")(short), -col("fsim"), MrlK)
-      .select(col("q_id"), col("rn"), col("vec_id"), (-col("hk")).as("sim_q"))
+    Retrieval.twoStageRoute(idx, qp, -cosineQNative(col("qp"), col("prefix")), e, q, MrlShort, MrlK)
+      .select(col("q_id"), col("rn"), col("vec_id"), col("sim_q"))
       .orderBy(col("q_id"), col("rn"))
   }
 
@@ -295,10 +292,12 @@ object Round10Queries extends QueryPack {
   /** The [[graft.functions.Retrieval.hammingRoute]] over the packed
     * sign words of the write-once [[annIndex]] layout — the stage-1 scan
     * reads 8 index bytes + the id per vector instead of the 256-byte
-    * embedding payload (PlanGuard-pinned), integer-exact, and at 100 TB
-    * the Hamming pass is the only full-corpus scan. Exact cosine reranks
-    * the 32-candidate shortlist fetched by id from the BASE table; ham
-    * rides along. */
+    * embedding payload (PlanGuard-pinned), integer-exact. Exact cosine
+    * reranks the 32-candidate shortlist, whose ids the BASE table scan
+    * keeps (that scan still reads every embedding); ham rides along. The route is two Spark jobs (the index scan with
+    * per-task shortlist heaps merged on the driver, then the base scan
+    * with per-task top-5 heaps merged in one partition) plus one job
+    * per query side read here: no broadcast, no exchange on vec_id. */
   def q163(s: SparkSession, d: String): DataFrame = {
     val sg = readAnnIndex(s, annIndex(s, d)).select(col("vec_id"), col("lo"), col("hi"))
     hammingServe(s, d, sg, sg, HamQ, HamShort, HamK)

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Retrieval.{hammingShortlist, heapTopK, scoreById}
+import graft.functions.Retrieval.{hammingRoute, heapTopK}
 import graft.functions.VectorOps.{cosineQNative, cosineSql}
 
 /** Round-16 additions: retrieval-quality evaluation joins the ANN
@@ -36,20 +36,20 @@ object Round16Queries extends QueryPack {
     NdW.zipWithIndex.map { case (w, i) => (if (i < 3) 3L else 2L) * w }.sum
 
   /** q183: NDCG@10 of the served retriever vs the exact ranking.
-    * System list = the Hamming route's stage 1
-    * ([[graft.functions.Retrieval.hammingShortlist]] over the packed
-    * sign words of the annidx3 layout — 8 index bytes/vector, the only
-    * corpus-wide scan), then a heap exact-cosine rerank of the
-    * 32-candidate shortlist keeping the top-10. Relevance grades come
+    * System list = q163's route ([[graft.functions.Retrieval.hammingRoute]]):
+    * a 32-candidate shortlist over the packed sign words of the annidx3
+    * layout — 8 index bytes/vector, the only corpus-wide scan — then
+    * an exact-cosine rerank keeping the top-10. Relevance grades come
     * from the EXACT cosine ranking: rank ≤ 3 → rel 3, ≤ 10 → rel 2,
     * ≤ 30 → rel 1, else 0 — so the metric rewards putting the
     * truly-nearest documents early, not just retrieving them somewhere.
     *
-    * Scale shape: the SYSTEM side is the production serve path
-    * (index-column scan + bounded heap + by-id rerank — nothing
-    * corpus-sized shuffles); the GRADING side is the offline eval
-    * harness — exact top-30 per evaluated query via the same bounded
-    * heap, |Q|·n score pairs with |Q| the sampled eval set (8 here; at
+    * Scale shape: the SYSTEM side is the production serve path, the
+    * two-job [[graft.plans.TwoStageRoute]] (index-column scan with
+    * per-task shortlist heaps, then one base scan reranking only the
+    * shortlisted ids — nothing corpus-sized shuffles or broadcasts);
+    * the GRADING side is the offline eval harness — exact top-30 per
+    * evaluated query via the bounded heap, |Q|·n score pairs with |Q| the sampled eval set (8 here; at
     * 100 TB an eval set stays hundreds of queries, the standard
     * offline-eval economics). All ranking math is integer bp with id
     * tiebreaks; the discounts are shared integer literals — the whole
@@ -59,12 +59,11 @@ object Round16Queries extends QueryPack {
       .select(col("vec_id"), col("lo"), col("hi"))
     val qs = sg.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("lo").as("qlo"), col("hi").as("qhi"))
-    val short = hammingShortlist(sg, qs, NdShort).select(col("q_id"), col("vec_id"))
     val e = graft.Tables.vectors(s, d)
     val q = e.filter(col("vec_id") < NdQ)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     // system top-10: exact rerank of the shortlist (8×32 rows)
-    val sys = heapTopK(scoreById(e, q)(short), -col("sim"), NdK)
+    val sys = hammingRoute(sg, qs, e, q, NdShort, NdK)
       .select(col("q_id"), col("rn"), col("vec_id"))
     // exact top-30 per query: the graded-relevance ground truth
     val exact = heapTopK(

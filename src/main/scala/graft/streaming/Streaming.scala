@@ -683,10 +683,13 @@ object Streaming {
     * reranks by exact cosine against base vectors fetched by id.
     * Returns `(q_id, rn, vec_id, sim_q)`, top-k per
     * query. No cross-batch state: a query's answer depends only on the
-    * static corpus, so `foreachBatch` runs the exact batch plan
-    * (broadcast of the small query side, heap shortlist) per drop — at
-    * 100 TB the index/base are the persisted serving artifacts and the
-    * query stream never re-reads the corpus.
+    * static corpus, so `foreachBatch` runs the exact batch plan per
+    * drop: the [[graft.plans.TwoStageRoute]] operator collects the
+    * drop's query rows on the driver (no job for a local relation) and
+    * runs two jobs, the index scan with per-task shortlist heaps and
+    * the base scan scoring only the shortlisted ids — at 100 TB the
+    * index/base are the persisted serving artifacts and the query
+    * stream never re-reads the corpus.
     *
     * `excludeSelf` = true treats q_id as sharing the corpus id space
     * and drops the corpus vector whose vec_id equals the query's q_id

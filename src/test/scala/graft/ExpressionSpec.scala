@@ -44,7 +44,8 @@ class ExpressionSpec extends SparkSpec {
     assert(math.abs(r - 1.0) < 1e-15)
     // the planner strategies are installed once, however often ensure runs
     val installed = fresh.experimental.extraStrategies
-    Seq(plans.AsOfJoinStrategy, plans.RangeJoinStrategy, plans.GraphWalkStrategy)
+    Seq(plans.AsOfJoinStrategy, plans.RangeJoinStrategy, plans.GraphWalkStrategy,
+        plans.TwoStageRouteStrategy)
       .foreach(st => assert(installed.count(_ == st) == 1, s"$st in $installed"))
     // the driver contract installs the engine on a session it has never
     // seen: each query runs first on its own fresh session

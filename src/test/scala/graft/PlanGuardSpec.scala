@@ -78,10 +78,23 @@ class PlanGuardSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(!requiredCorpusExchange(plan, "vec_id"),
         s"corpus-wide exchange on vec_id in $name:\n$plan")
+    }
+    // q164/q165 broadcast the query side into a heap-collected scan;
+    // q162/q163 are the two-stage route operator, whose per-task heaps
+    // take the query rows as a side input instead of a broadcast join
+    for (name <- Seq("q164_maxsim", "q165_hard_negatives")) {
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001"))
+        .queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
         s"$name must broadcast the query/shortlist side:\n$plan")
       assert(plan.contains("collect_top_k"),
         s"$name shortlist must use the bounded-heap collector:\n$plan")
+    }
+    for (name <- Seq("q162_mrl_ann", "q163_hamming_ann")) {
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("TwoStageRoute"),
+        s"$name must run the two-stage route operator:\n$plan")
     }
     // the stage-1 index scans must be PRUNED to the index columns: at
     // least one parquet scan reads the prefix (q162) / sign words
@@ -274,13 +287,18 @@ class PlanGuardSpec extends SparkSpec {
 
   test("heap top-k: q09 and every vector top-k, no Window") {
     Seq("q09_topk_perkey", "q35_cosine_topk", "q37_ann_bucket_topk", "q57_ivf_ann",
-        "q65_ann_multiprobe", "q132_ann_recall_eval", "q163_hamming_ann",
-        "q166_rrf_fusion", "q167_filtered_ann").foreach { name =>
+        "q65_ann_multiprobe", "q132_ann_recall_eval",
+        "q166_rrf_fusion").foreach { name =>
       val plan = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution.executedPlan.toString
       assert(plan.contains("ObjectHashAggregate"),
         s"$name: top-k must stay a collect_topk heap aggregate:\n$plan")
       assert(!plan.contains("Window"),
         s"$name: no Window+row_number pass may reappear:\n$plan")
+    }
+    // q163 and q167 rank inside the two-stage route operator: still no Window
+    Seq("q163_hamming_ann", "q167_filtered_ann").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf("sf0.001")).queryExecution.executedPlan.toString
+      assert(!plan.contains("Window"), s"$name: no Window+row_number pass may reappear:\n$plan")
     }
     // q09's floor: no sort below the presentation ORDER BY
     val plan = SparkEntry.queries("q09_topk_perkey")(spark, sf("sf0.001"))

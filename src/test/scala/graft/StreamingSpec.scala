@@ -1304,7 +1304,6 @@ class StreamingSpec extends SparkSpec {
   test("resident knngraph serve: a repeat request runs only the walk; one snapshot per root") {
     import spark.implicits._
     import graft.queries.Round11Queries
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val e = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
     val base = e.localCheckpoint(true)
@@ -1322,36 +1321,10 @@ class StreamingSpec extends SparkSpec {
       Round11Queries.graphSearch(g.select(col("src"), col("nb")), lists, base, q)._1.collect()
       (g, lists)
     }
-    // jobs of this thread's group only: other suites may share the context
-    val sc = spark.sparkContext
-    val group = s"resident-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(jobs.add)
-    }
-    def jobsOf(body: => Unit): Int = {
-      jobs.clear()
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      // listener events arrive in order: once a later sentinel job is
-      // seen, every measured job has been counted
-      val sentinel = s"$group-sentinel"
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains(sentinel), "the listener never saw the sentinel job")
-      jobs.toArray.count(_ == group)
-    }
-    sc.addSparkListener(listener)
-    try {
-      serve()
-      spark.catalog.clearCache()
-      val repeat = jobsOf(serve())
-      assert(repeat == 1, s"a repeat request at one manifest must run only the walk, ran $repeat jobs")
-    } finally sc.removeSparkListener(listener)
+    serve()
+    spark.catalog.clearCache()
+    val repeat = jobsOf(serve())
+    assert(repeat == 1, s"a repeat request at one manifest must run only the walk, ran $repeat jobs")
     // three commits, each served: only the newest snapshot stays persisted
     def checkpoints(df: org.apache.spark.sql.DataFrame): Seq[Int] =
       df.queryExecution.analyzed.collect {
@@ -1363,7 +1336,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(snapshots.forall(_.size == 2) && snapshots.flatten.distinct.size == 6,
       s"each commit must read a new snapshot of two checkpoints: $snapshots")
-    val persisted = sc.getPersistentRDDs.keySet
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     assert(snapshots.flatten.filter(persisted.contains) == snapshots.last,
       s"only the newest snapshot may stay persisted: $snapshots, persisted ${persisted.toSeq.sorted}")
   }
